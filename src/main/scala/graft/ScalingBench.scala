@@ -32,17 +32,18 @@ object ScalingBench {
     val pairs = Blocking.candidatePairs(trees).persist(StorageLevel.MEMORY_AND_DISK)
     val pairTrees = Scoring.attachTrees(pairs, trees).persist(StorageLevel.MEMORY_AND_DISK)
     pairTrees.count() // materialize inputs outside the timed region
+    val tau = Pipeline.Config().tau
 
     // warmup pass: JIT-compile the kernel + fault the cache in, untimed;
     // then best-of-3 timed iterations (the sandbox host is shared, so
     // single runs catch multi-second stragglers unrelated to the code)
-    Scoring.score(pairTrees, tau = 0.08, None).toDF().count()
+    Scoring.score(pairTrees, tau, None).toDF().count()
 
     val iters = (1 to 3).map { _ =>
       val acc = new org.apache.spark.util.CollectionAccumulator[PartMetrics]
       spark.sparkContext.register(acc, "graft.bench.score")
       val t0 = System.nanoTime()
-      Scoring.score(pairTrees, tau = 0.08, Some(acc)).toDF().count()
+      Scoring.score(pairTrees, tau, Some(acc)).toDF().count()
       val wall = (System.nanoTime() - t0) / 1e9
       val ms = scala.jdk.CollectionConverters.ListHasAsScala(acc.value).asScala
       if (sys.env.contains("GRAFT_BENCH_DEBUG")) {

@@ -74,8 +74,7 @@ object Scoring {
     // output by BYTES (~64MB targets), but scoring cost is CPU per pair
     // — a byte-coalesced layout would cap DP parallelism at a handful
     // of tasks. Hash on the pair id so heavy trees spread evenly.
-    val par = spark.sparkContext.defaultParallelism *
-      sys.env.getOrElse("GRAFT_SCORE_PAR_MULT", "6").toInt
+    val par = spark.sparkContext.defaultParallelism * 6
     withB.select($"idA", $"idB", $"laA", $"lmA", $"krA", $"laB", $"lmB", $"krB")
       .repartition(par, $"idA", $"idB")
       .as[PairTrees]

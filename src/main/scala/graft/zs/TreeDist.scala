@@ -61,9 +61,11 @@ object LevenshteinCost extends CostModel {
   * Two kernels:
   *  - [[TreeDist.distance]] — generic [[CostModel]], Double costs
   *    (faithful to the reference's pluggable-cost entry point);
-  *  - [[Scorer]] — unit-cost Int hot path with reusable flat scratch
-  *    buffers and interned label codes, built for `mapPartitions` where
+  *  - [[Scorer]] — unit-cost 16-bit hot path with reusable flat scratch
+  *    buffers over Long label codes, built for `mapPartitions` where
   *    one Scorer instance is reused across every pair in a partition.
+  *    It has two DP loops: the full DP with per-node costs and the
+  *    threshold-banded DP.
   */
 object TreeDist {
 
@@ -132,10 +134,15 @@ object TreeDist {
 
 /** Unit-cost kernel with per-instance reusable scratch. NOT thread-safe —
   * allocate one per partition/thread (`mapPartitions { it => val s = new
-  * Scorer; ... }`). Buffers grow monotonically to the largest pair seen,
-  * so a partition scores thousands of pairs with zero steady-state
-  * allocation; label strings are interned to Int codes once per pair so
-  * the O(n² · d²) inner loop never touches a String.
+  * Scorer; ... }`). DP buffers grow monotonically to the largest pair
+  * seen, so a partition scores thousands of pairs without allocating
+  * them again. Two DP loops:
+  *  - [[distHashed]] — the full forest DP with per-node insert/remove
+  *    costs (0 for the empty label); [[dist]] interns string labels to
+  *    exact Long codes and runs it, so the inner loop never touches a
+  *    String;
+  *  - [[distHashedBounded]] — the threshold-banded unit-cost DP the
+  *    pipeline scores every candidate pair with.
   */
 final class Scorer {
   // 16-bit DP cells: unit-cost distance is bounded by |A|+|B| ≤ 2·maxNodes
@@ -144,19 +151,19 @@ final class Scorer {
   // high core counts, so this directly buys multi-core scaling.
   private var td: Array[Char] = new Array[Char](0)
   private var fd: Array[Char] = new Array[Char](0)
-  // 8-bit twins for the byte-cell banded core (maxDist ≤ 126)
-  private var tdB: Array[Byte] = new Array[Byte](0)
-  private var fdB: Array[Byte] = new Array[Byte](0)
-  private var la: Array[Int] = new Array[Int](0)
-  private var lb: Array[Int] = new Array[Int](0)
   private var ra: Array[Int] = new Array[Int](0) // remove cost per A-node
   private var ib: Array[Int] = new Array[Int](0) // insert cost per B-node
-  private val codes = new java.util.HashMap[String, Integer]()
 
   /** Pairs scored by this instance (per-partition metric). */
   var pairsScored: Long = 0L
   /** Total DP cells touched (throughput denominator for bench). */
   var cellsTouched: Long = 0L
+
+  private def reserve(na: Int, nb: Int): Unit = {
+    require(na + nb < 65535, s"tree pair too large for 16-bit DP cells: $na + $nb")
+    if (td.length < na * nb) td = new Array[Char](na * nb)
+    if (fd.length < (na + 1) * (nb + 1)) fd = new Array[Char]((na + 1) * (nb + 1))
+  }
 
   /** Unit-cost distance over 64-bit label hashes — the pipeline's hot
     * path. The scoring stage ships `labelsH: Array[Long]` (hashed at
@@ -172,9 +179,7 @@ final class Scorer {
                  emptyHash: Long): Int = {
     val na = laA.length
     val nb = lbB.length
-    require(na + nb < 65535, s"tree pair too large for 16-bit DP cells: $na + $nb")
-    if (td.length < na * nb) td = new Array[Char](na * nb)
-    if (fd.length < (na + 1) * (nb + 1)) fd = new Array[Char]((na + 1) * (nb + 1))
+    reserve(na, nb)
     if (ra.length < na) ra = new Array[Int](na)
     if (ib.length < nb) ib = new Array[Int](nb)
     var i0 = 0
@@ -254,43 +259,35 @@ final class Scorer {
     *
     * Returns exact distance if ≤ maxDist, else maxDist+1.
     * Falls back to the exact full DP when labels can be empty
-    * (insert/remove cost 0 breaks the band bound) or the band would not
-    * save work.
+    * (insert/remove cost 0 breaks the band bound, and with it the
+    * size-gap bound) or the band would not save work.
     */
   def distHashedBounded(laA: Array[Long], al: Array[Int], kra: Array[Int],
                         lbB: Array[Long], bl: Array[Int], krb: Array[Int],
                         emptyHash: Long, maxDist: Int): Int = {
     val na = laA.length
     val nb = lbB.length
-    if (math.abs(na - nb) > maxDist)
-      return maxDist + 1 // size gap alone exceeds the threshold
     var hasEmpty = false
     var i = 0
     while (i < na && !hasEmpty) { hasEmpty = laA(i) == emptyHash; i += 1 }
     i = 0
     while (i < nb && !hasEmpty) { hasEmpty = lbB(i) == emptyHash; i += 1 }
     if (hasEmpty || maxDist >= na + nb)
-      return math.min(distHashed(laA, al, kra, lbB, bl, krb, emptyHash), maxDist + 1)
-
-    // cell-width dispatch: most pairs have maxDist = τ·(nA+nB) ≤ 126, so
-    // 8-bit cells (values capped at maxDist+1 ≤ 127) halve the DP's
-    // memory footprint — the kernel is memory-bound at high core counts
-    // (BENCH.md control experiment), so narrower cells buy scaling
-    if (maxDist <= 126)
-      boundedCoreByte(laA, al, kra, lbB, bl, krb, maxDist)
+      math.min(distHashed(laA, al, kra, lbB, bl, krb, emptyHash), maxDist + 1)
+    else if (math.abs(na - nb) > maxDist)
+      maxDist + 1 // size gap alone exceeds the threshold
     else
       boundedCoreChar(laA, al, kra, lbB, bl, krb, maxDist)
   }
 
-  /** 16-bit-cell banded core (maxDist > 126). */
-  private[zs] def boundedCoreChar(laA: Array[Long], al: Array[Int], kra: Array[Int],
-                                  lbB: Array[Long], bl: Array[Int], krb: Array[Int],
-                                  maxDist: Int): Int = {
+  /** The banded unit-cost DP of [[distHashedBounded]]; labels are known
+    * non-empty and the size gap is ≤ maxDist. */
+  private def boundedCoreChar(laA: Array[Long], al: Array[Int], kra: Array[Int],
+                              lbB: Array[Long], bl: Array[Int], krb: Array[Int],
+                              maxDist: Int): Int = {
     val na = laA.length
     val nb = lbB.length
-    require(na + nb < 65535, s"tree pair too large for 16-bit DP cells: $na + $nb")
-    if (td.length < na * nb) td = new Array[Char](na * nb)
-    if (fd.length < (na + 1) * (nb + 1)) fd = new Array[Char]((na + 1) * (nb + 1))
+    reserve(na, nb)
     val D = maxDist
     val cap = (D + 1).toChar
 
@@ -370,201 +367,15 @@ final class Scorer {
       ki += 1
     }
     pairsScored += 1
-    if (math.abs((na - 1) - (nb - 1)) > D) D + 1
-    else {
-      val sz = math.abs(na - nb)
-      if (sz > D) D + 1 else math.min(td((na - 1) * nb + (nb - 1)).toInt, D + 1)
-    }
+    td((na - 1) * nb + (nb - 1)) // in band: the caller checked |na − nb| ≤ D
   }
 
-  /** 8-bit-cell banded core (maxDist ≤ 126): byte-for-byte the same
-    * algorithm as [[boundedCoreChar]] with half-width cells — every
-    * stored value is ≤ maxDist+1 ≤ 127, so a signed byte holds it with
-    * no masking. Kept as a literal twin (not generified) so both stay
-    * primitive-array tight; the banded≡full property test sweeps both
-    * cores. */
-  private[zs] def boundedCoreByte(laA: Array[Long], al: Array[Int], kra: Array[Int],
-                                  lbB: Array[Long], bl: Array[Int], krb: Array[Int],
-                                  maxDist: Int): Int = {
-    val na = laA.length
-    val nb = lbB.length
-
-    if (tdB.length < na * nb) tdB = new Array[Byte](na * nb)
-    if (fdB.length < (na + 1) * (nb + 1)) fdB = new Array[Byte]((na + 1) * (nb + 1))
-    val D = maxDist
-    val cap = (D + 1).toByte
-
-    var ki = 0
-    while (ki < kra.length) {
-      val i2 = kra(ki)
-      val ali = al(i2)
-      val m = i2 - ali + 2
-      val ioff = ali - 1
-      var kj = 0
-      while (kj < krb.length) {
-        val j = krb(kj)
-        val blj = bl(j)
-        val n = j - blj + 2
-        val joff = blj - 1
-        // boundary rows/cols inside the band (+ sentinel just outside)
-        val x0max = math.min(m - 1, D + 1)
-        var x = 0
-        while (x <= x0max) { fdB(x * n) = (if (x > D) D + 1 else x).toByte; x += 1 }
-        val y0max = math.min(n - 1, D + 1)
-        var y = 0
-        while (y <= y0max) { fdB(y) = (if (y > D) D + 1 else y).toByte; y += 1 }
-        x = 1
-        while (x < m) {
-          val ylo = math.max(1, x - D)
-          val yhi = math.min(n - 1, x + D)
-          if (ylo <= yhi) {
-            cellsTouched += (yhi - ylo + 1).toLong
-            val xa = x + ioff
-            val alxa = al(xa)
-            val laxa = laA(xa)
-            val row = x * n
-            val prow = row - n
-            val tdrow = xa * nb
-            val whole = ali == alxa
-            // per-row constants of the else branch, hoisted out of the
-            // y loop: p (fd row of the left-forest splice), its base
-            // offset, and the A-subtree size
-            val p = alxa - 1 - ioff
-            val pn = p * n
-            val szA = xa - alxa + 1
-            if (ylo >= 2) fdB(row + ylo - 1) = cap // left sentinel
-            y = ylo
-            while (y <= yhi) {
-              val yb = y + joff
-              val blyb = bl(yb)
-              var mn = fdB(prow + y) + 1 // remove cost 1 (no empty labels)
-              val d2 = fdB(row + y - 1) + 1
-              if (d2 < mn) mn = d2
-              if (whole && blj == blyb) {
-                val d3 = fdB(prow + y - 1) + (if (laxa == lbB(yb)) 0 else 1)
-                if (d3 < mn) mn = d3
-                if (mn > D) mn = D + 1
-                fdB(row + y) = mn.toByte
-                tdB(tdrow + yb) = mn.toByte
-              } else {
-                val q = blyb - 1 - joff
-                // guarded reads: out-of-band positions are ≥ cap by the
-                // band bound, and td entries for subtree pairs whose
-                // size gap exceeds D were never computed this pair
-                val fpq = if (math.abs(p - q) > D) cap.toInt else fdB(pn + q).toInt
-                val szB = yb - blyb + 1
-                val tdv = if (math.abs(szA - szB) > D) cap.toInt else tdB(tdrow + yb).toInt
-                val d3 = fpq + tdv
-                if (d3 < mn) mn = d3
-                if (mn > D) mn = D + 1
-                fdB(row + y) = mn.toByte
-              }
-              y += 1
-            }
-            if (yhi + 1 <= n - 1) fdB(row + yhi + 1) = cap // right sentinel
-          }
-          x += 1
-        }
-        kj += 1
-      }
-      ki += 1
-    }
-    pairsScored += 1
-    if (math.abs((na - 1) - (nb - 1)) > D) D + 1
-    else {
-      val sz = math.abs(na - nb)
-      if (sz > D) D + 1 else math.min(tdB((na - 1) * nb + (nb - 1)).toInt, D + 1)
-    }
-  }
-
+  /** Unit-cost distance over string labels: interns them to exact Long
+    * codes (the empty label gets code 0) and runs [[distHashed]]. */
   def dist(a: PTree, b: PTree): Int = {
-    val na = a.n
-    val nb = b.n
-    require(na + nb < 65535, s"tree pair too large for 16-bit DP cells: $na + $nb")
-    if (td.length < na * nb) td = new Array[Char](na * nb)
-    if (fd.length < (na + 1) * (nb + 1)) fd = new Array[Char]((na + 1) * (nb + 1))
-    if (la.length < na) { la = new Array[Int](na); ra = new Array[Int](na) }
-    if (lb.length < nb) { lb = new Array[Int](nb); ib = new Array[Int](nb) }
-    codes.clear()
-    var next = 0
-    var i0 = 0
-    while (i0 < na) {
-      val s = a.labels(i0)
-      var c = codes.get(s)
-      if (c == null) { c = Integer.valueOf(next); codes.put(s, c); next += 1 }
-      la(i0) = c.intValue()
-      ra(i0) = if (s.isEmpty) 0 else 1
-      i0 += 1
-    }
-    var j0 = 0
-    while (j0 < nb) {
-      val s = b.labels(j0)
-      var c = codes.get(s)
-      if (c == null) { c = Integer.valueOf(next); codes.put(s, c); next += 1 }
-      lb(j0) = c.intValue()
-      ib(j0) = if (s.isEmpty) 0 else 1
-      j0 += 1
-    }
-
-    val al = a.lmds
-    val bl = b.lmds
-    val kra = a.keyroots
-    val krb = b.keyroots
-    var ki = 0
-    while (ki < kra.length) {
-      val i = kra(ki)
-      val ali = al(i)
-      val m = i - ali + 2
-      val ioff = ali - 1
-      var kj = 0
-      while (kj < krb.length) {
-        val j = krb(kj)
-        val blj = bl(j)
-        val n = j - blj + 2
-        val joff = blj - 1
-        cellsTouched += m.toLong * n
-        fd(0) = 0.toChar
-        var x = 1
-        while (x < m) { fd(x * n) = (fd((x - 1) * n) + ra(x + ioff)).toChar; x += 1 }
-        var y = 1
-        while (y < n) { fd(y) = (fd(y - 1) + ib(y + joff)).toChar; y += 1 }
-        x = 1
-        while (x < m) {
-          val xa = x + ioff
-          val alxa = al(xa)
-          val rxa = ra(xa)
-          val laxa = la(xa)
-          val row = x * n
-          val prow = row - n
-          val tdrow = xa * nb
-          val whole = ali == alxa
-          y = 1
-          while (y < n) {
-            val yb = y + joff
-            var mn = fd(prow + y) + rxa
-            val d2 = fd(row + y - 1) + ib(yb)
-            if (d2 < mn) mn = d2
-            if (whole && blj == bl(yb)) {
-              val d3 = fd(prow + y - 1) + (if (laxa == lb(yb)) 0 else 1)
-              if (d3 < mn) mn = d3
-              fd(row + y) = mn.toChar
-              td(tdrow + yb) = mn.toChar
-            } else {
-              val p = alxa - 1 - ioff
-              val q = bl(yb) - 1 - joff
-              val d3 = fd(p * n + q) + td(tdrow + yb)
-              if (d3 < mn) mn = d3
-              fd(row + y) = mn.toChar
-            }
-            y += 1
-          }
-          x += 1
-        }
-        kj += 1
-      }
-      ki += 1
-    }
-    pairsScored += 1
-    td((na - 1) * nb + (nb - 1))
+    val codes = scala.collection.mutable.HashMap("" -> 0L)
+    def intern(labels: Array[String]): Array[Long] =
+      labels.map(codes.getOrElseUpdate(_, codes.size.toLong))
+    distHashed(intern(a.labels), a.lmds, a.keyroots, intern(b.labels), b.lmds, b.keyroots, 0L)
   }
 }
