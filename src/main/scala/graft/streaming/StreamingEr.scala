@@ -17,61 +17,60 @@ import org.apache.spark.storage.StorageLevel
   * (id → clusterId), so each batch's connected-components run sees
   * |new matches| + |nodes| edges instead of the full match history.
   *
+  * There is one batch entry point, [[processBatchBucketed]]: state
+  * round-trips through storage every batch, with the block index kept as
+  * a key-bucketed table of capped member arrays, so a batch shuffles
+  * only its delta. [[startCheckpointedBucketed]] wires it into a
+  * Structured Streaming query and [[processDeletes]] applies a deletion
+  * batch to a returned state.
+  *
   * Scale notes (10^12-file deployment shape):
-  *  - State (trees, block index, assignments) lives in Iceberg tables
-  *    partitioned/bucketed by block key and id, so the new-vs-bucket
-  *    join prunes to touched buckets instead of shuffling the corpus;
-  *    in this sandbox state is carried as persisted Datasets, which is
-  *    the same dataflow without the storage pruning.
+  *  - State (trees, block index, assignments) lives in tables bucketed
+  *    by id (trees) and block key (index), so the new-vs-bucket merge
+  *    and the replay guard read the state side without an exchange; with
+  *    Iceberg the merge additionally prunes to touched buckets.
   *  - The per-bucket cap bounds batch cost exactly like the batch path:
-  *    BOTH sides of the new-vs-bucket join are capped (the new side is
-  *    semi-joined against the capped set), so a new id landing beyond a
-  *    bucket's cap emits no pairs and per-batch cost is bounded by
-  *    |new ∩ capped| · maxBlockSize per key. Cap displacement over time
-  *    (a later, smaller id evicting an earlier member) can still leave
-  *    the stream with pairs scored before the eviction — matches are
-  *    never retracted, so stream recall is ≥ batch recall; clusters are
-  *    a coarsening of batch clusters in that corner. The driver oracle
-  *    therefore checks the stream's OWN invariant (clusters ==
-  *    connected components of the cumulative match set, recomputed
-  *    independently) rather than corpus-dependent batch equality.
+  *    a new id landing beyond a bucket's cap emits no pairs, so per-batch
+  *    cost is bounded by |new ∩ capped| · maxBlockSize per key. Cap
+  *    displacement over time (a later, smaller id evicting an earlier
+  *    member) can still leave the stream with pairs scored before the
+  *    eviction — matches are never retracted, so stream recall is ≥
+  *    batch recall; clusters are a coarsening of batch clusters in that
+  *    corner. The DuckDB oracle therefore checks the stream's OWN
+  *    invariant (clusters == connected components of the cumulative
+  *    match set, recomputed independently) rather than corpus-dependent
+  *    batch equality.
   *  - Star-edge contraction keeps each batch's CC input proportional to
   *    the delta, not history: components converge in O(log n) rounds on
   *    an edge set that is (previous assignment) ∪ (new matches).
   */
 object StreamingEr {
 
-  /** Running state after processing a batch. All members are
-    * materialized (persisted + counted) so foreachBatch state handoff
-    * is stable across micro-batches. `matches` is the cumulative match
-    * edge set — the clusters are provably CC(matches) (star contraction
-    * preserves connectivity), which is what the driver oracle recomputes
-    * independently. */
+  /** Table-name prefix of every state table the stream writes. */
+  private val Prefix = "bstream"
+  /** State generations kept on disk; older ones are pruned per batch. */
+  private val Retain = 2
+
+  /** Running state after processing a batch: storage read-backs of the
+    * tables the batch just wrote (checkpointed frames after
+    * [[processDeletes]]), so no state holds lineage into an earlier one.
+    * `matches` is the cumulative match edge set — the clusters are
+    * provably CC(matches) (star contraction preserves connectivity),
+    * which is what the DuckDB oracle recomputes independently. */
   final case class ErState(
       trees: Dataset[TreeRow],
       keyed: DataFrame, // (key: Long, id: String) block index
       clusters: DataFrame, // (id, clusterId)
       matches: DataFrame, // cumulative (idA, idB) match edges
-      batchesSeen: Int = 1,
-      // still-persisted ancestors the cumulative unions reference; they
-      // become unreachable (and are unpersisted) at the next lineage-
-      // truncation batch, once the eager checkpoint decouples the state
-      // from them — this bounds cached storage on unbounded streams to
-      // one truncation cycle instead of the whole history
-      retained: List[Dataset[_]] = Nil) {
-    /** End-of-stream teardown: unpersist every handle this state holds
-      * (safe on storage-backed states — unpersist is a no-op there). */
-    def release(): Unit =
-      (trees :: keyed :: clusters :: matches :: retained).foreach(_.unpersist())
-  }
+      batchesSeen: Int = 1)
 
   /** Exactly-once delta against at-least-once delivery: drop rows whose
     * id is already in state (a crash after the state write but before the
     * source offset commit re-delivers the whole batch) and in-batch
     * duplicates. Without this, replayed ids enter the cumulative
     * trees/index twice — duplicate rows distort the block cap (a dup
-    * occupies two of the cap's slots in the row-level path) and the
-    * pair/cluster sets silently drift from batch semantics. Ids are
+    * occupies two of the cap's slots) and the pair/cluster sets
+    * silently drift from batch semantics. Ids are
     * content-deterministic (sha256 prefix of the identity triple), so
     * "same id" == "same row" and dropping is always safe. The anti-join
     * probes the delta against cumulative state ids — at deployment scale
@@ -91,113 +90,12 @@ object StreamingEr {
     }
   }
 
-  /** Process one micro-batch of new files against the previous state. */
-  def processBatch(
-      spark: SparkSession,
-      newFiles: Dataset[FileRow],
-      prev: Option[ErState],
-      cfg: Pipeline.Config = Pipeline.Config()): ErState = {
-    import spark.implicits._
-    Pipeline.tune(spark)
-
-    // The replay guard's anti-join embeds prev.trees in the delta's plan;
-    // the cumulative union would then reference the previous state TWICE
-    // per batch — exponential logical-plan growth. The eager
-    // localCheckpoint truncates the delta's lineage (and stores its rows,
-    // so no separate persist/count is needed).
-    val newTrees = freshTrees(spark,
-      ParseStage.parse(newFiles, cfg.parse, cfg.blocking.mh),
-      prev.map(_.trees))
-      .localCheckpoint(true)
-    // key derivation is Blocking's — ONE definition for batch and stream
-    val newKeyed = Blocking.keyedIds(newTrees, cfg.blocking)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    val batches = prev.map(_.batchesSeen + 1).getOrElse(1)
-    // the union chain grows the logical plan per batch; truncate lineage
-    // every 8th batch (the checkpointed variant truncates every batch by
-    // round-tripping through storage, so this guard is for the
-    // in-memory path on long streams)
-    def truncate[T](ds: Dataset[T]): Dataset[T] =
-      if (batches % 8 == 0) ds.localCheckpoint(true) else ds
-    val allTrees = truncate(
-      prev.map(_.trees.unionByName(newTrees)).getOrElse(newTrees))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val allKeyed = truncate(
-      prev.map(_.keyed.unionByName(newKeyed)).getOrElse(newKeyed))
-
-    // new-vs-bucket candidates: every pair with >= 1 new member, bucket
-    // membership capped through CandidateGen's ONE cap definition (keep
-    // lowest ids). BOTH sides of the pairing are capped: the new side is
-    // semi-joined against the capped set, so a new id landing beyond a
-    // bucket's cap emits no pairs — exactly like the batch path, where an
-    // over-cap member never reaches pair emission. Without this, a hot
-    // bucket would pair every over-cap new arrival (unbounded per-batch
-    // cost) and the stream's pair set would silently exceed batch's.
-    val capped = CandidateGen.capByKey(allKeyed, cfg.blocking.maxBlockSize)
-      .persist(StorageLevel.MEMORY_AND_DISK) // read 2×: new side + bucket side
-    val newCapped = capped.join(newKeyed, Seq("key", "id"), "left_semi")
-    val cand = newCapped.select($"key", $"id".as("nid"))
-      .join(capped, "key")
-      .where($"nid" =!= $"id")
-      .select(least($"nid", $"id").as("idA"), greatest($"nid", $"id").as("idB"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK) // read 3×: hot-degrees + 2 joins
-
-    val scores = Scoring.score(Scoring.attachTrees(cand, allTrees, cfg.salts), cfg.tau)
-    val newEdges = Scoring.matches(scores).persist(StorageLevel.MEMORY_AND_DISK)
-
-    // previous components contracted to star edges — CC input stays
-    // proportional to the delta, never the full match history
-    val prevStar = prev.map(_.clusters
-      .where($"id" =!= $"clusterId")
-      .select($"id".as("idA"), $"clusterId".as("idB")))
-    val edges = prevStar.map(newEdges.unionByName(_)).getOrElse(newEdges)
-
-    val clusters = Clustering
-      .connectedComponents(edges, allTrees.toDF().select($"id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    clusters.count() // materialize before the next batch mutates inputs
-
-    // cumulative match edges (small: one row per accepted match) — the
-    // oracle-visible artifact: clusters == CC(matches) by construction
-    val allMatches = truncate(
-      prev.map(_.matches.unionByName(newEdges)).getOrElse(newEdges))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    allMatches.count() // materialize before cand/newEdges unpersist below
-    newEdges.unpersist()
-    cand.unpersist()
-    capped.unpersist()
-
-    prev.foreach(_.clusters.unpersist())
-    // Persist lifecycle: between truncations, ancestors stay cached (the
-    // cumulative unions reference them) and are carried in `retained`; at
-    // a truncation batch the eager checkpoints above have decoupled this
-    // batch's state from ALL ancestors, so the whole previous cycle is
-    // released — cached storage on an unbounded stream is bounded by one
-    // truncation cycle, not the history.
-    val retained: List[Dataset[_]] =
-      if (batches % 8 == 0) {
-        prev.foreach(p =>
-          (p.trees :: p.keyed :: p.matches :: p.retained).foreach(_.unpersist()))
-        newTrees.unpersist()
-        newKeyed.unpersist()
-        Nil
-      } else
-        prev.map(p => List[Dataset[_]](p.trees, p.keyed, p.matches) ::: p.retained)
-          .getOrElse(Nil) ::: List[Dataset[_]](newTrees, newKeyed)
-    ErState(allTrees, keyed = allKeyed, clusters = clusters,
-      matches = allMatches, batchesSeen = batches, retained = retained)
-  }
-
   /** Deletion micro-batch — right-to-erasure in the incremental path:
     * remove `deleteIds` from every state surface (trees, block index,
     * cumulative matches) and re-derive components over the retained
     * edges (the [[graft.operators.Clustering.retract]] shape — CC is
     * not incrementally maintainable under deletion, so the component
-    * pass recomputes; nothing is re-parsed or re-scored). A deleted id
-    * re-ingested later passes the replay guard again (its tree is gone
-    * from state) and re-enters its cluster — spec-asserted.
+    * pass recomputes; nothing is re-parsed or re-scored).
     *
     * Cap caveat, stated honestly: the capped block index cannot
     * resurrect an id the cap evicted EARLIER, so a delete frees a cap
@@ -226,96 +124,27 @@ object StreamingEr {
       .persist(StorageLevel.MEMORY_AND_DISK)
     clusters.count()
     ErState(trees, keyed = keyed, clusters = clusters, matches = matches,
-      batchesSeen = prev.batchesSeen + 1, retained = Nil)
+      batchesSeen = prev.batchesSeen + 1)
   }
-
-  // ---- checkpointed state (kill-and-resume across processes) -----------
-
-  /** Process one batch with state checkpointed through [[TableIO]]: the
-    * cumulative (trees, keyed, clusters) state is written under
-    * batch-numbered table names after each batch, and `resumeState`
-    * reconstructs the latest COMPLETE batch on startup — a crash mid-
-    * write leaves the previous batch's `_SUCCESS`-gated dirs intact, so
-    * resume is atomic at batch granularity. With Iceberg the same hook
-    * becomes snapshot-append commits (delta rows only) instead of
-    * cumulative rewrites; TableIO isolates that swap. Reading state back
-    * from storage each batch also truncates lineage — the in-memory
-    * variant's unionByName chains grow per batch, this one's do not. */
-  def processBatchCheckpointed(
-      spark: SparkSession,
-      newFiles: Dataset[FileRow],
-      io: graft.sources.TableIO,
-      cfg: Pipeline.Config = Pipeline.Config(),
-      prefix: String = "stream"): ErState = {
-    import spark.implicits._
-    val (prev, k) = resumeState(spark, io, prefix)
-    val next = processBatch(spark, newFiles, prev, cfg)
-    io.write(next.trees.toDF(), s"${prefix}_trees_b$k")
-    io.write(next.keyed, s"${prefix}_keyed_b$k")
-    io.write(next.clusters, s"${prefix}_clusters_b$k")
-    io.write(next.matches, s"${prefix}_matches_b$k")
-    // state is durable now — release EVERY in-memory handle this batch
-    // (and its resume) created, so the checkpointed path's cache is
-    // bounded per batch, not per stream (the in-memory path's
-    // truncation-cycle bound never fires here: each call starts from a
-    // fresh storage read)
-    (next.trees :: next.keyed :: next.clusters :: next.matches :: next.retained)
-      .foreach(_.unpersist())
-    prev.foreach(p =>
-      (p.trees :: p.keyed :: p.clusters :: p.matches :: p.retained).foreach(_.unpersist()))
-    ErState(
-      trees = io.read(spark, s"${prefix}_trees_b$k").as[TreeRow],
-      keyed = io.read(spark, s"${prefix}_keyed_b$k"),
-      clusters = io.read(spark, s"${prefix}_clusters_b$k"),
-      matches = io.read(spark, s"${prefix}_matches_b$k"),
-      batchesSeen = k + 1)
-  }
-
-  /** Latest complete checkpointed state (all four tables `_SUCCESS`-
-    * gated) and the next batch id. `prefix` namespaces the state, so two
-    * independent streams can share one TableIO root without reading each
-    * other's tables (this simple variant keeps its full generation
-    * history — useful for audit; the bucketed variant GCs). */
-  def resumeState(spark: SparkSession, io: graft.sources.TableIO,
-                  prefix: String = "stream"): (Option[ErState], Int) = {
-    import spark.implicits._
-    var k = 0
-    while (io.exists(spark, s"${prefix}_trees_b$k") &&
-        io.exists(spark, s"${prefix}_keyed_b$k") &&
-        io.exists(spark, s"${prefix}_clusters_b$k") &&
-        io.exists(spark, s"${prefix}_matches_b$k")) k += 1
-    if (k == 0) (None, 0)
-    else {
-      val b = k - 1
-      val st = ErState(
-        trees = io.read(spark, s"${prefix}_trees_b$b").as[TreeRow]
-          .persist(StorageLevel.MEMORY_AND_DISK),
-        keyed = io.read(spark, s"${prefix}_keyed_b$b"),
-        clusters = io.read(spark, s"${prefix}_clusters_b$b"),
-        matches = io.read(spark, s"${prefix}_matches_b$b"),
-        batchesSeen = k) // the true count — downstream `batches` math sees it
-      (Some(st), k)
-    }
-  }
-
-  // ---- bucketed state (shuffle-free block-index merge) -----------------
 
   /** Process one micro-batch with the block index persisted as a BUCKETED
     * capped table (`(key, members)`, hash-distributed by key via
     * [[graft.sources.BucketedState]]) instead of raw `(key, id)` rows.
     *
-    * Why: the in-memory/checkpointed paths re-cap the FULL cumulative
-    * block index every batch — `capByKey` re-shuffles corpus-sized state
-    * per micro-batch, which is the dominant incremental cost at 10^12
-    * files. Here the state is stored already capped AND already
+    * Why: re-capping the FULL cumulative `(key, id)` block index every
+    * batch (`capByKey`) re-shuffles corpus-sized state per micro-batch,
+    * which is the dominant incremental cost at 10^12 files (BENCH.md,
+    * "Incremental-ER state layouts": 177.3 s against 80.5 s over 12
+    * batches at sf0.01). Here the state is stored already capped AND already
     * distributed by key, so each batch does ONE small exchange (the
     * delta's groupBy) and merges against the state side with zero
     * exchange; pair emission needs no join at all (block membership is
     * colocated in the row). Correctness rests on cap subset-monotonicity:
     * cap(old ∪ new) = cap(cap(old) ∪ new) — see
     * [[graft.operators.CandidateGen.mergeCappedMembers]] — so the pair,
-    * match, and cluster sets are IDENTICAL to the other two paths
-    * (BucketedStreamSpec asserts both the equality and the plan shape).
+    * match, and cluster sets are IDENTICAL to re-capping the full index
+    * (CandidateGenSpec asserts the merge against `capByKey`;
+    * BucketedStreamSpec asserts the batch equality and the plan shape).
     * At deployment scale the bucketed table is an Iceberg bucket
     * partition spec and the merge additionally prunes to buckets touched
     * by the batch.
@@ -340,10 +169,7 @@ object StreamingEr {
       io: graft.sources.TableIO,
       bucketRoot: String,
       numBuckets: Int,
-      cfg: Pipeline.Config = Pipeline.Config(),
-      prefix: String = "bstream",
-      retain: Int = 2): ErState = {
-    require(retain >= 1, "must retain at least the latest generation")
+      cfg: Pipeline.Config = Pipeline.Config()): ErState = {
     import spark.implicits._
     import graft.sources.BucketedState
     Pipeline.tune(spark)
@@ -356,8 +182,8 @@ object StreamingEr {
     // (clusters/matches) state: two bucketed streams sharing a session
     // catalog or one TableIO root must never resolve each other's tables
     // during the resume scan
-    def tbl(kind: String, b: Int) = s"${prefix}_${tag}_${kind}_b$b"
-    def path(kind: String, b: Int) = s"$bucketRoot/${prefix}_${kind}_b$b"
+    def tbl(kind: String, b: Int) = s"${Prefix}_${tag}_${kind}_b$b"
+    def path(kind: String, b: Int) = s"$bucketRoot/${Prefix}_${kind}_b$b"
     def bucketedExists(kind: String, b: Int): Boolean =
       BucketedState.isComplete(spark, path(kind, b))
     // catalog read when the session still has the table (pre-distributed,
@@ -372,7 +198,7 @@ object StreamingEr {
     def idxTable(b: Int) = tbl("index", b)
     def idxPath(b: Int) = path("index", b)
 
-    val gens = StateGenerations.list(spark, bucketRoot, s"${prefix}_index_b")
+    val gens = StateGenerations.list(spark, bucketRoot, s"${Prefix}_index_b")
     val prev = StateGenerations.latestComplete(gens, g =>
       bucketedExists("trees", g) && bucketedExists("index", g) &&
         io.exists(spark, tbl("clusters", g)) &&
@@ -381,10 +207,10 @@ object StreamingEr {
     // state persisted by a pre-tag version used untagged TableIO names;
     // resuming past it as "fresh" would silently drop the accumulated
     // clusters, so refuse loudly and tell the operator what to rename
-    if (k == 0 && io.exists(spark, s"${prefix}_clusters_b0"))
+    if (k == 0 && io.exists(spark, s"${Prefix}_clusters_b0"))
       throw new IllegalStateException(
-        s"found legacy untagged state '${prefix}_clusters_b0' under this " +
-          s"TableIO root; rename the ${prefix}_* tables to ${prefix}_${tag}_* " +
+        s"found legacy untagged state '${Prefix}_clusters_b0' under this " +
+          s"TableIO root; rename the ${Prefix}_* tables to ${Prefix}_${tag}_* " +
           "(or point the stream at a fresh root) before resuming")
     // trees state is bucketed by id: the replay guard's anti-join and any
     // id-probe read it pre-distributed — only the delta shuffles
@@ -427,9 +253,9 @@ object StreamingEr {
     newEdges.unpersist(); cand.unpersist(); merged.unpersist()
     newTrees.unpersist(); allTrees.unpersist(); clusters.unpersist()
 
-    // GC: generation k is complete — storage stays O(retain) generations
+    // GC: generation k is complete — storage stays O(Retain) generations
     // instead of growing per batch for the stream's lifetime
-    StateGenerations.prune(gens, k - retain) { g =>
+    StateGenerations.prune(gens, k - Retain) { g =>
       // keyed artifact (the index dir the generation listing is built
       // from) goes LAST — deleting it first and crashing would orphan
       // the sibling tables beyond any later prune's reach
@@ -451,11 +277,12 @@ object StreamingEr {
       batchesSeen = k + 1)
   }
 
-  /** foreachBatch wiring for the bucketed-state path: like
-    * [[startCheckpointed]] (stop/restart/crash-safe — every micro-batch
-    * resumes from the latest complete state), with the block index kept
-    * as a key-bucketed capped table so each batch's merge shuffles only
-    * the delta. */
+  /** foreachBatch wiring: every micro-batch resumes from the latest
+    * complete state under `bucketRoot`/`io` and writes the next one, so
+    * the QUERY ITSELF can be stopped and restarted (or crash) and the
+    * next incarnation continues where the tables left off — the
+    * streaming twin of Pipeline's stage-checkpoint resume. `onBatch`
+    * observes each new state. */
   def startCheckpointedBucketed(
       spark: SparkSession,
       stream: Dataset[FileRow],
@@ -470,42 +297,4 @@ object StreamingEr {
         onBatch(processBatchBucketed(spark, batch, io, bucketRoot, numBuckets, cfg))
       }
       .start()
-
-  /** Checkpointed foreachBatch wiring: every micro-batch resumes from
-    * the latest complete state in `io` and writes the next one, so the
-    * QUERY ITSELF can be stopped and restarted (or crash) and the next
-    * incarnation continues where the tables left off — the streaming
-    * twin of Pipeline's stage-checkpoint resume. */
-  def startCheckpointed(
-      spark: SparkSession,
-      stream: Dataset[FileRow],
-      io: graft.sources.TableIO,
-      cfg: Pipeline.Config = Pipeline.Config())(
-      onBatch: ErState => Unit): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[FileRow], _: Long) =>
-        onBatch(processBatchCheckpointed(spark, batch, io, cfg))
-      }
-      .start()
-
-  /** Wire the incremental pipeline into a Structured Streaming query via
-    * foreachBatch with in-memory state. `onBatch` observes each new
-    * state (tests read the clustering from it); production uses
-    * [[startCheckpointed]]. */
-  def start(
-      spark: SparkSession,
-      stream: Dataset[FileRow],
-      cfg: Pipeline.Config = Pipeline.Config())(
-      onBatch: ErState => Unit): StreamingQuery = {
-    val state = new java.util.concurrent.atomic.AtomicReference[Option[ErState]](None)
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[FileRow], _: Long) =>
-        val next = processBatch(spark, batch, state.get(), cfg)
-        state.set(Some(next))
-        onBatch(next)
-      }
-      .start()
-  }
 }

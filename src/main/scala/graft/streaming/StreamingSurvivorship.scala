@@ -36,8 +36,8 @@ object StreamingSurvivorship {
   /** Fold one batch: `clusters` is the ER state's full current
     * assignment, `batchAttrs` the NEW ids' attribute rows. At cluster
     * scale `attrs`/`golden` live as TableIO tables; here they are
-    * checkpointed DataFrames (same algebra, in-memory twin — the
-    * pattern StreamingEr.processBatch establishes). */
+    * checkpointed DataFrames (same algebra; `clusters` may be the
+    * storage read-back StreamingEr.processBatchBucketed returns). */
   def update(clusters: DataFrame, batchAttrs: DataFrame,
       prev: Option[GoldenState]): GoldenState = {
     val attrs = prev match {

@@ -19,6 +19,13 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Runs `body` over a fresh temp directory and deletes it afterwards. */
+  def withTempRoot[T](prefix: String)(body: String => T): T = {
+    val root = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(root.toString)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(root)
+  }
 }
 
 class PipelineSpec extends AnyFunSuite {

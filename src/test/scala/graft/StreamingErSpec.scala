@@ -1,98 +1,71 @@
 package graft
 
+import graft.SparkTestSession.withTempRoot
 import graft.model.FileRow
-import graft.sources.CorpusGen
+import graft.sources.{CorpusGen, ParquetTableIO}
 import graft.streaming.StreamingEr
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Incremental ER must converge to the batch pipeline's clustering: the
-  * union of per-batch new-vs-bucket pair sets covers every batch-mode
-  * candidate pair (bucket sizes stay under the cap at this scale), and
-  * star-edge contraction preserves connectivity, so the final
-  * assignments are identical.
+/** Incremental ER beyond plain arrival: deletions, block-cap overflow and
+  * at-least-once redelivery, each on the bucketed-state path. Batch
+  * equality on the uncapped corpus, resume and query restart are
+  * asserted in BucketedStreamSpec.
   */
 class StreamingErSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  private def clustersOf(df: org.apache.spark.sql.DataFrame): Set[(String, String)] =
+  private def pairsOf(df: org.apache.spark.sql.DataFrame): Set[(String, String)] =
     df.collect().map(r => (r.getString(0), r.getString(1))).toSet
 
-  test("incremental clusters over 3 batches == batch pipeline clusters") {
-    import spark.implicits._
-    val files = CorpusGen.corpus(spark, "/root/testdata/sf0.001").persist()
-    val batchClusters = clustersOf(Pipeline.run(spark, files).clusters)
+  /** Deterministic `n`-way arrival split; it interleaves duplicate groups
+    * across batches. */
+  private def part(files: Dataset[FileRow], n: Int, b: Int): Dataset[FileRow] =
+    files.filter((f: FileRow) => math.floorMod(graft.util.Hashing.hashString(f.path), n) == b)
 
-    // deterministic 3-way split; arrival order deliberately interleaves
-    // duplicate groups across batches
-    def part(b: Int) = files.filter((f: FileRow) =>
-      math.floorMod(graft.util.Hashing.hashString(f.path), 3) == b)
-    var state: Option[StreamingEr.ErState] = None
-    for (b <- 0 until 3)
-      state = Some(StreamingEr.processBatch(spark, part(b), state))
-
-    val incClusters = clustersOf(state.get.clusters)
-    assert(incClusters.map(_._1) == batchClusters.map(_._1), "node universes differ")
-    assert(incClusters == batchClusters, {
-      val onlyInc = incClusters -- batchClusters
-      val onlyBatch = batchClusters -- incClusters
-      s"incremental != batch: +${onlyInc.take(5)} -${onlyBatch.take(5)}"
-    })
-    files.unpersist()
+  /** Feeds the `n` arrival batches of `files` through the stream with
+    * state under `root`, returning the final state. */
+  private def stream(files: Dataset[FileRow], n: Int, root: String,
+      cfg: Pipeline.Config = Pipeline.Config()): StreamingEr.ErState = {
+    val io = new ParquetTableIO(root)
+    (0 until n).map(b =>
+      StreamingEr.processBatchBucketed(spark, part(files, n, b), io, root, 4, cfg)).last
   }
 
-  test("deletes: add-add-delete == batch pipeline over the surviving corpus; re-add rejoins") {
-    import spark.implicits._
+  test("deletes: add-add-delete == batch pipeline over the surviving corpus") {
     import org.apache.spark.sql.functions.col
     val files = CorpusGen.corpus(spark, "/root/testdata/sf0.001").persist()
-    def part(b: Int) = files.filter((f: FileRow) =>
-      math.floorMod(graft.util.Hashing.hashString(f.path), 2) == b)
-    var state: Option[StreamingEr.ErState] = None
-    for (b <- 0 until 2)
-      state = Some(StreamingEr.processBatch(spark, part(b), state))
+    try withTempRoot("graft_stream_del") { root =>
+      val state = stream(files, 2, root)
 
-    // delete a deterministic slice (ids whose first hex digit is '0')
-    val del = state.get.trees.toDF().select(col("id"))
-      .where(col("id").startsWith("0")).persist()
-    val delIds = del.collect().map(_.getString(0)).toSet
-    assert(delIds.nonEmpty, "slice must be non-trivial")
-    val afterDel = StreamingEr.processDeletes(spark, del, state.get)
+      // delete a deterministic slice (ids whose first hex digit is '0')
+      val del = state.trees.toDF().select(col("id"))
+        .where(col("id").startsWith("0")).persist()
+      val delIds = del.collect().map(_.getString(0)).toSet
+      assert(delIds.nonEmpty, "slice must be non-trivial")
+      val afterDel = StreamingEr.processDeletes(spark, del, state)
 
-    // every surface purged
-    assert(afterDel.trees.toDF().where(col("id").startsWith("0")).count() == 0)
-    assert(afterDel.keyed.where(col("id").startsWith("0")).count() == 0)
-    assert(afterDel.matches.where(
-      col("idA").startsWith("0") || col("idB").startsWith("0")).count() == 0)
+      // every surface purged
+      assert(afterDel.trees.toDF().where(col("id").startsWith("0")).count() == 0)
+      assert(afterDel.keyed.where(col("id").startsWith("0")).count() == 0)
+      assert(afterDel.matches.where(
+        col("idA").startsWith("0") || col("idB").startsWith("0")).count() == 0)
 
-    // equals the batch pipeline run on the surviving corpus (no block
-    // overflows its cap on this corpus, so no displacement caveat)
-    val surviving = files.filter((f: FileRow) => !delIds.contains(
-      graft.util.Hashing.rowId128Hex(f.repo, f.path, f.commit)))
-    val batchClusters = clustersOf(Pipeline.run(spark, surviving).clusters)
-    assert(clustersOf(afterDel.clusters) == batchClusters)
-
-    // re-ingesting a deleted file passes the replay guard and rejoins
-    val readd = files.filter((f: FileRow) => delIds.contains(
-      graft.util.Hashing.rowId128Hex(f.repo, f.path, f.commit))).limit(50)
-    val rejoined = StreamingEr.processBatch(spark, readd, Some(afterDel))
-    val expectIds = delIds.intersect(
-      readd.collect().map(f => graft.util.Hashing.rowId128Hex(f.repo, f.path, f.commit)).toSet)
-    val back = rejoined.trees.toDF().select(col("id"))
-      .collect().map(_.getString(0)).toSet
-    assert(expectIds.subsetOf(back), "re-added ids must re-enter state")
-    // and the rejoined clustering equals batch over surviving + re-added
-    val batchReadd = clustersOf(
-      Pipeline.run(spark, surviving.unionByName(readd)).clusters)
-    assert(clustersOf(rejoined.clusters) == batchReadd)
-    files.unpersist(); del.unpersist()
+      // equals the batch pipeline run on the surviving corpus (no block
+      // overflows its cap on this corpus, so no displacement caveat)
+      val surviving = files.filter((f: FileRow) => !delIds.contains(
+        graft.util.Hashing.rowId128Hex(f.repo, f.path, f.commit)))
+      val batchClusters = pairsOf(Pipeline.run(spark, surviving).clusters)
+      assert(pairsOf(afterDel.clusters) == batchClusters)
+      del.unpersist()
+    } finally files.unpersist()
   }
 
   test("cap overflow: stream matches ⊇ batch matches, clusters coarsen, CC invariant holds") {
-    import spark.implicits._
     import org.apache.spark.sql.functions._
     // maxBlockSize=2 forces block-cap overflow everywhere — the corner
     // where stream and batch may legitimately diverge. The PROVABLE
-    // invariants (given the capped semi-join on the new side):
+    // invariants (the merge caps the new side too):
     //  1. every full-batch pair is emitted in the batch where its later
     //     member arrives (cap membership is subset-monotone), so stream
     //     matches ⊇ batch matches;
@@ -103,182 +76,51 @@ class StreamingErSpec extends AnyFunSuite {
     val files = CorpusGen.corpus(spark, "/root/testdata/sf0.001").persist()
     val tinyCap = Pipeline.Config(blocking =
       graft.operators.Blocking.BlockingConfig(maxBlockSize = 2))
-    val batch = Pipeline.run(spark, files, tinyCap)
-    val batchMatches = batch.matches.collect().map(r => (r.getString(0), r.getString(1))).toSet
+    try withTempRoot("graft_stream_cap") { root =>
+      val batch = Pipeline.run(spark, files, tinyCap)
+      val batchMatches = pairsOf(batch.matches)
+      val st = stream(files, 3, root, tinyCap)
+      val streamMatches = pairsOf(st.matches)
 
-    def part(b: Int) = files.filter((f: FileRow) =>
-      math.floorMod(graft.util.Hashing.hashString(f.path), 3) == b)
-    var state: Option[StreamingEr.ErState] = None
-    for (b <- 0 until 3)
-      state = Some(StreamingEr.processBatch(spark, part(b), state, tinyCap))
-    val st = state.get
-    val streamMatches = st.matches.collect().map(r => (r.getString(0), r.getString(1))).toSet
+      assert(batchMatches.subsetOf(streamMatches),
+        s"batch matches missing from stream: ${(batchMatches -- streamMatches).take(5)}")
 
-    assert(batchMatches.subsetOf(streamMatches),
-      s"batch matches missing from stream: ${(batchMatches -- streamMatches).take(5)}")
+      // refinement: no batch cluster is split across stream clusters
+      val bc = batch.clusters.withColumnRenamed("clusterId", "bCl")
+      val sc = st.clusters.withColumnRenamed("clusterId", "sCl")
+      val split = bc.join(sc, "id").groupBy(col("bCl"))
+        .agg(countDistinct(col("sCl")).as("n")).where(col("n") > 1).count()
+      assert(split == 0, "a batch cluster is split across stream clusters")
 
-    // refinement: no batch cluster is split across stream clusters
-    val bc = batch.clusters.withColumnRenamed("clusterId", "bCl")
-    val sc = st.clusters.withColumnRenamed("clusterId", "sCl")
-    val split = bc.join(sc, "id").groupBy(col("bCl"))
-      .agg(countDistinct(col("sCl")).as("n")).where(col("n") > 1).count()
-    assert(split == 0, "a batch cluster is split across stream clusters")
-
-    // clusters == CC(cumulative matches), recomputed directly
-    val direct = graft.operators.Clustering
-      .connectedComponents(st.matches, st.trees.toDF().select(col("id")))
-    assert(clustersOf(st.clusters) == clustersOf(direct))
-    files.unpersist()
+      // clusters == CC(cumulative matches), recomputed directly
+      val direct = graft.operators.Clustering
+        .connectedComponents(st.matches, st.trees.toDF().select(col("id")))
+      assert(pairsOf(st.clusters) == pairsOf(direct))
+    } finally files.unpersist()
   }
 
-  test("long stream (10 batches) crosses the lineage-truncation boundary") {
-    import spark.implicits._
-    // small subset so 10 scoring rounds stay cheap
-    val files = CorpusGen.corpus(spark, "/root/testdata/sf0.001")
-      .filter((f: FileRow) => math.floorMod(graft.util.Hashing.hashString(f.path), 5) == 0)
-      .persist()
-    val batchClusters = clustersOf(Pipeline.run(spark, files).clusters)
-    def part(b: Int) = files.filter((f: FileRow) =>
-      math.floorMod(graft.util.Hashing.hashString(f.repo + f.path), 10) == b)
-    var state: Option[StreamingEr.ErState] = None
-    var at7: StreamingEr.ErState = null
-    var at8: StreamingEr.ErState = null
-    for (b <- 0 until 10) {
-      state = Some(StreamingEr.processBatch(spark, part(b), state))
-      if (state.get.batchesSeen == 7) at7 = state.get
-      if (state.get.batchesSeen == 8) at8 = state.get
-    }
-    assert(state.get.batchesSeen == 10)
-    assert(clustersOf(state.get.clusters) == batchClusters)
-    // the truncation batch (8) released the previous cycle's cache: the
-    // batch-7 state's handles are unpersisted and nothing is carried
-    assert(at8.retained.isEmpty, "truncation batch must release all ancestors")
-    assert(at7.trees.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-      "pre-truncation state must be unpersisted after the checkpoint decouples it")
-    // between truncations the carried set grows only with the cycle
-    assert(state.get.retained.nonEmpty && state.get.retained.size <= 10)
-    files.unpersist()
-  }
-
-  test("at-least-once delivery: a replayed batch is a state no-op in both paths") {
-    import spark.implicits._
+  test("at-least-once delivery: a replayed batch is a state no-op, in-batch duplicates collapse") {
     // crash-after-state-write-before-offset-commit re-delivers the whole
     // batch; the id guard must reduce it to an empty delta so state
-    // (trees, matches, clusters) is unchanged — in the in-memory, the
-    // checkpointed, AND the bucketed path
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_replay").toString
-    val io = new graft.sources.ParquetTableIO(root)
+    // (trees, matches, clusters) is unchanged
     val files = CorpusGen.corpus(spark, "/root/testdata/sf0.001").persist()
-    def part(b: Int) = files.filter((f: FileRow) =>
-      math.floorMod(graft.util.Hashing.hashString(f.path), 2) == b)
-
-    // in-memory: batch 0, batch 1, then batch 1 REPLAYED
-    var st: Option[StreamingEr.ErState] = None
-    for (b <- Seq(0, 1)) st = Some(StreamingEr.processBatch(spark, part(b), st))
-    val before = (st.get.trees.count(), clustersOf(st.get.clusters),
-      st.get.matches.count())
-    st = Some(StreamingEr.processBatch(spark, part(1), st))
-    assert(st.get.trees.count() == before._1, "replay duplicated tree rows")
-    assert(clustersOf(st.get.clusters) == before._2, "replay changed clusters")
-    assert(st.get.matches.count() == before._3, "replay changed the match set")
-
-    // a batch with internal duplicates is deduped to one row per id
-    val dup = part(0).unionByName(part(0))
-    val solo = StreamingEr.processBatch(spark, dup, None)
-    assert(solo.trees.count() == part(0).count(), "in-batch duplicates survived")
-
-    // checkpointed: same replay through the storage round-trip
-    StreamingEr.processBatchCheckpointed(spark, part(0), io)
-    val c1 = StreamingEr.processBatchCheckpointed(spark, part(1), io)
-    val c1Clusters = clustersOf(c1.clusters)
-    val c2 = StreamingEr.processBatchCheckpointed(spark, part(1), io) // replay
-    assert(c2.trees.count() == c1.trees.count())
-    assert(clustersOf(c2.clusters) == c1Clusters)
-
-    // bucketed: replayed batch is a no-op there too
-    val broot = java.nio.file.Files.createTempDirectory("graft_bstream_replay").toString
-    val bio = new graft.sources.ParquetTableIO(broot)
-    StreamingEr.processBatchBucketed(spark, part(0), bio, broot, 4)
-    val b1 = StreamingEr.processBatchBucketed(spark, part(1), bio, broot, 4)
-    val b1Clusters = clustersOf(b1.clusters)
-    val b2 = StreamingEr.processBatchBucketed(spark, part(1), bio, broot, 4) // replay
-    assert(b2.trees.count() == b1.trees.count())
-    assert(clustersOf(b2.clusters) == b1Clusters)
-    files.unpersist()
-  }
-
-  test("checkpointed state survives a process kill between batches") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_ckpt").toString
-    val io = new graft.sources.ParquetTableIO(root)
-    val files = CorpusGen.corpus(spark, "/root/testdata/sf0.001").persist()
-    def part(b: Int) = files.filter((f: FileRow) =>
-      math.floorMod(graft.util.Hashing.hashString(f.path), 2) == b)
-
-    // batch 0, then "crash": drop every in-memory handle
-    StreamingEr.processBatchCheckpointed(spark, part(0), io)
-    // fresh process: resume from storage alone and feed batch 1
-    val resumed = StreamingEr.processBatchCheckpointed(spark, part(1), io)
-
-    val batchClusters = clustersOf(Pipeline.run(spark, files).clusters)
-    assert(clustersOf(resumed.clusters) == batchClusters)
-
-    // resumeState reports the next batch id and a complete state
-    val (st, nextB) = StreamingEr.resumeState(spark, io)
-    assert(nextB == 2 && st.isDefined)
-    assert(st.get.trees.count() == files.count())
-    files.unpersist()
-  }
-
-  test("checkpointed query restart: a NEW streaming query continues from storage") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_q").toString
-    val io = new graft.sources.ParquetTableIO(root)
-    val files = CorpusGen.corpus(spark, "/root/testdata/sf0.001")
-      .filter((f: FileRow) => math.floorMod(graft.util.Hashing.hashString(f.path), 10) == 1)
-      .collect()
-    val (b1, b2) = files.splitAt(files.length / 2)
-
-    // first query incarnation processes batch 1, then is STOPPED
-    val s1 = MemoryStream[FileRow]
-    val q1 = StreamingEr.startCheckpointed(spark, s1.toDS(), io) { _ => () }
-    try { s1.addData(b1.toSeq); q1.processAllAvailable() } finally q1.stop()
-
-    // second incarnation: fresh query, fresh source — resumes from io
-    val s2 = MemoryStream[FileRow]
-    @volatile var last: Option[StreamingEr.ErState] = None
-    val q2 = StreamingEr.startCheckpointed(spark, s2.toDS(), io) { st => last = Some(st) }
-    try { s2.addData(b2.toSeq); q2.processAllAvailable() } finally q2.stop()
-
-    val batchClusters = clustersOf(
-      Pipeline.run(spark, spark.createDataset(files.toSeq)).clusters)
-    assert(last.isDefined)
-    assert(clustersOf(last.get.clusters) == batchClusters)
-  }
-
-  test("foreachBatch wiring: MemoryStream drives the incremental pipeline") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val files = CorpusGen.corpus(spark, "/root/testdata/sf0.001")
-      .filter((f: FileRow) => math.floorMod(graft.util.Hashing.hashString(f.path), 10) == 0)
-      .collect()
-    val (b1, b2) = files.splitAt(files.length / 2)
-
-    val stream = MemoryStream[FileRow]
-    @volatile var last: Option[StreamingEr.ErState] = None
-    val q = StreamingEr.start(spark, stream.toDS()) { st => last = Some(st) }
     try {
-      stream.addData(b1.toSeq)
-      q.processAllAvailable()
-      stream.addData(b2.toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(last.isDefined, "no batch processed")
-    val incClusters = clustersOf(last.get.clusters)
-    val batchClusters = clustersOf(
-      Pipeline.run(spark, spark.createDataset(files.toSeq)).clusters)
-    assert(incClusters == batchClusters)
+      withTempRoot("graft_stream_replay") { root =>
+        val io = new ParquetTableIO(root)
+        StreamingEr.processBatchBucketed(spark, part(files, 2, 0), io, root, 4)
+        val b1 = StreamingEr.processBatchBucketed(spark, part(files, 2, 1), io, root, 4)
+        val before = (b1.trees.count(), pairsOf(b1.clusters), b1.matches.count())
+        val b2 = StreamingEr.processBatchBucketed(spark, part(files, 2, 1), io, root, 4) // replay
+        assert(b2.trees.count() == before._1, "replay duplicated tree rows")
+        assert(pairsOf(b2.clusters) == before._2, "replay changed clusters")
+        assert(b2.matches.count() == before._3, "replay changed the match set")
+      }
+      // a batch with internal duplicates is deduped to one row per id
+      withTempRoot("graft_stream_dup") { root =>
+        val dup = part(files, 2, 0).unionByName(part(files, 2, 0))
+        val solo = StreamingEr.processBatchBucketed(spark, dup, new ParquetTableIO(root), root, 4)
+        assert(solo.trees.count() == part(files, 2, 0).count(), "in-batch duplicates survived")
+      }
+    } finally files.unpersist()
   }
 }
