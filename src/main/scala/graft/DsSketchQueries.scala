@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{DsSketches, ZOrder}
+import graft.util.SessionMemo
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -90,134 +91,117 @@ object DsSketchQueries {
 
   // ---- frozen (build-once) estimate tables --------------------------------
 
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-  private def frozen(s: SparkSession, dir: String, key: String)
-                    (build: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir, key), {
-      val df = build
+  /** One estimate table, collected to the driver once per (session,
+    * sf-dir) and read back from those rows ever after. */
+  private def frozen(build: (SparkSession, String) => DataFrame) =
+    SessionMemo { (s, dir: String) =>
+      val df = build(s, dir)
       val rows = java.util.Arrays.asList(df.collect(): _*)
       s.createDataFrame(rows, df.schema)
-    })
-
-  private val freqMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Array[Byte]]
-  private def freqBytes(s: SparkSession, dir: String): Array[Byte] =
-    freqMemo.getOrElseUpdate((s, dir),
-      DsSketches.freqSketch(t(s, dir, "events"), freqKey))
-
-  private def setopsEst(s: SparkSession, dir: String): DataFrame =
-    frozen(s, dir, "theta_setops") {
-      DsSketches.thetaCohortSetOps(t(s, dir, "events"), "event_type", "user_id")
     }
 
-  private def mergeEst(s: SparkSession, dir: String): DataFrame =
-    frozen(s, dir, "theta_merge") {
-      DsSketches.thetaMergeEstimate(
-        DsSketches.thetaPartials(t(s, dir, "events"), Seq("event_type"),
-          to_date(col("ts")), "user_id"),
-        Seq("event_type"))
-    }
+  private val freqBytes = SessionMemo { (s, dir: String) =>
+    DsSketches.freqSketch(t(s, dir, "events"), freqKey)
+  }
 
-  private def kllEst(s: SparkSession, dir: String): DataFrame =
-    frozen(s, dir, "kll_est") {
-      DsSketches.kllMergedQuantiles(
-        DsSketches.kllPartials(t(s, dir, "events"), Seq("event_type"),
-          to_date(col("ts")), "value"),
-        Seq("event_type"), QuantilePs)
-    }
+  private val setopsEst = frozen { (s, dir) =>
+    DsSketches.thetaCohortSetOps(t(s, dir, "events"), "event_type", "user_id")
+  }
 
-  private def freqItemsEst(s: SparkSession, dir: String): DataFrame =
-    frozen(s, dir, "freq_items") {
-      DsSketches.freqItems(s, freqBytes(s, dir)).orderBy(col("item"))
-    }
+  private val mergeEst = frozen { (s, dir) =>
+    DsSketches.thetaMergeEstimate(
+      DsSketches.thetaPartials(t(s, dir, "events"), Seq("event_type"),
+        to_date(col("ts")), "user_id"),
+      Seq("event_type"))
+  }
+
+  private val kllEst = frozen { (s, dir) =>
+    DsSketches.kllMergedQuantiles(
+      DsSketches.kllPartials(t(s, dir, "events"), Seq("event_type"),
+        to_date(col("ts")), "value"),
+      Seq("event_type"), QuantilePs)
+  }
+
+  private val freqItemsEst = frozen { (s, dir) =>
+    DsSketches.freqItems(s, freqBytes(s, dir)).orderBy(col("item"))
+  }
 
   /** One frozen row per (cohort, retained sample): the reservoir's
     * exact stream length rides along for the n_ok verdict. */
-  private def reservoirEst(s: SparkSession, dir: String): DataFrame =
-    frozen(s, dir, "reservoir") {
-      DsSketches.reservoirSketch(t(s, dir, "events"), Seq("event_type"), "event_id")
-        .select(col("event_type"),
-          DsSketches.reservoirN(col("sketch")).as("n_stream"),
-          explode(DsSketches.reservoirSamples(col("sketch"))).as("sample_id"))
-    }
+  private val reservoirEst = frozen { (s, dir) =>
+    DsSketches.reservoirSketch(t(s, dir, "events"), Seq("event_type"), "event_id")
+      .select(col("event_type"),
+        DsSketches.reservoirN(col("sketch")).as("n_stream"),
+        explode(DsSketches.reservoirSamples(col("sketch"))).as("sample_id"))
+  }
 
   /** One frozen row per (cohort, retained weighted sample): the exact
     * stream length and preserved total weight ride along. */
-  private def varoptEst(s: SparkSession, dir: String): DataFrame =
-    frozen(s, dir, "varopt") {
-      DsSketches.varoptSketch(t(s, dir, "events"), Seq("event_type"),
-          "event_id", "value")
-        .select(col("event_type"),
-          DsSketches.varoptN(col("sketch")).as("n_stream"),
-          DsSketches.varoptTotalWeight(col("sketch")).as("total_weight"),
-          explode(DsSketches.varoptSamples(col("sketch"))).as("sw"))
-        .select(col("event_type"), col("n_stream"), col("total_weight"),
-          col("sw._1").as("sample_id"), col("sw._2").as("adj_weight"))
-    }
+  private val varoptEst = frozen { (s, dir) =>
+    DsSketches.varoptSketch(t(s, dir, "events"), Seq("event_type"),
+        "event_id", "value")
+      .select(col("event_type"),
+        DsSketches.varoptN(col("sketch")).as("n_stream"),
+        DsSketches.varoptTotalWeight(col("sketch")).as("total_weight"),
+        explode(DsSketches.varoptSamples(col("sketch"))).as("sw"))
+      .select(col("event_type"), col("n_stream"), col("total_weight"),
+        col("sw._1").as("sample_id"), col("sw._2").as("adj_weight"))
+  }
 
   /** Per-cohort tuple sketches (distinct user_id, summary = Σ value):
     * kept as sketches so both the per-cohort metrics AND the pairwise
     * intersection query derive from ONE frozen build. */
-  private def tupleSk(s: SparkSession, dir: String): DataFrame =
-    frozen(s, dir, "tuple_sk") {
-      DsSketches.tupleSketch(t(s, dir, "events"), Seq("event_type"),
-        "user_id", "value")
-    }
+  private val tupleSk = frozen { (s, dir) =>
+    DsSketches.tupleSketch(t(s, dir, "events"), Seq("event_type"),
+      "user_id", "value")
+  }
 
-  private def tupleEst(s: SparkSession, dir: String): DataFrame =
-    frozen(s, dir, "tuple_est") {
-      tupleSk(s, dir).select(col("event_type"),
-        DsSketches.tupleEstimate(col("sketch")).as("est_users"),
-        DsSketches.tupleLower(col("sketch")).as("lb"),
-        DsSketches.tupleUpper(col("sketch")).as("ub"),
-        DsSketches.tupleSumEstimate(col("sketch")).as("sum_est"))
-    }
+  private val tupleEst = frozen { (s, dir) =>
+    tupleSk(s, dir).select(col("event_type"),
+      DsSketches.tupleEstimate(col("sketch")).as("est_users"),
+      DsSketches.tupleLower(col("sketch")).as("lb"),
+      DsSketches.tupleUpper(col("sketch")).as("ub"),
+      DsSketches.tupleSumEstimate(col("sketch")).as("sum_est"))
+  }
 
-  private val freqTokMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Array[Byte]]
-  private def freqTokBytes(s: SparkSession, dir: String): Array[Byte] =
-    freqTokMemo.getOrElseUpdate((s, dir),
-      DsSketches.freqStringsSketch(t(s, dir, "documents"), docTokens, FreqTokMapSize))
+  private val freqTokBytes = SessionMemo { (s, dir: String) =>
+    DsSketches.freqStringsSketch(t(s, dir, "documents"), docTokens, FreqTokMapSize)
+  }
 
-  private def freqTokensEst(s: SparkSession, dir: String): DataFrame =
-    frozen(s, dir, "freq_tokens") {
-      DsSketches.freqStringItems(s, freqTokBytes(s, dir)).orderBy(col("item"))
-    }
+  private val freqTokensEst = frozen { (s, dir) =>
+    DsSketches.freqStringItems(s, freqTokBytes(s, dir)).orderBy(col("item"))
+  }
 
   /** Merged per-lang string-quantile split points from per-shard
     * partials (shard = doc_id % 8 — 8 "files" per lang). */
-  private def kllStrEst(s: SparkSession, dir: String): DataFrame =
-    frozen(s, dir, "kll_str") {
-      DsSketches.kllStringsMergedQuantiles(
-        DsSketches.kllStringsPartials(
-          t(s, dir, "documents").withColumn("path_key", pathKey),
-          Seq("lang"), pmod(col("doc_id"), lit(8)), "path_key"),
-        Seq("lang"), QuantilePs)
-    }
+  private val kllStrEst = frozen { (s, dir) =>
+    DsSketches.kllStringsMergedQuantiles(
+      DsSketches.kllStringsPartials(
+        t(s, dir, "documents").withColumn("path_key", pathKey),
+        Seq("lang"), pmod(col("doc_id"), lit(8)), "path_key"),
+      Seq("lang"), QuantilePs)
+  }
 
   /** One metadata-only range-count row from per-day KLL partials. */
-  private def rangeCountEst(s: SparkSession, dir: String): DataFrame =
-    frozen(s, dir, "range_count") {
-      DsSketches.kllRangeCount(
-        DsSketches.kllPartials(t(s, dir, "events"), Seq.empty,
-          to_date(col("ts")), "value"),
-        RangeLo, RangeHi)
-    }
+  private val rangeCountEst = frozen { (s, dir) =>
+    DsSketches.kllRangeCount(
+      DsSketches.kllPartials(t(s, dir, "events"), Seq.empty,
+        to_date(col("ts")), "value"),
+      RangeLo, RangeHi)
+  }
 
-  private def tupleOverlapEst(s: SparkSession, dir: String): DataFrame =
-    frozen(s, dir, "tuple_overlap") {
-      val sk = tupleSk(s, dir)
-      val a = sk.select(col("event_type").as("cohort_a"), col("sketch").as("sk_a"))
-      val b = sk.select(col("event_type").as("cohort_b"), col("sketch").as("sk_b"))
-      a.join(b, col("cohort_a") < col("cohort_b"))
-        .withColumn("sk_i", DsSketches.tupleIntersectPair(col("sk_a"), col("sk_b")))
-        .select(col("cohort_a"), col("cohort_b"),
-          DsSketches.tupleEstimate(col("sk_i")).as("est_common"),
-          DsSketches.tupleLower(col("sk_i")).as("lb"),
-          DsSketches.tupleUpper(col("sk_i")).as("ub"),
-          DsSketches.tupleSumEstimate(col("sk_i")).as("sum_common_est"))
-    }
+  private val tupleOverlapEst = frozen { (s, dir) =>
+    val sk = tupleSk(s, dir)
+    val a = sk.select(col("event_type").as("cohort_a"), col("sketch").as("sk_a"))
+    val b = sk.select(col("event_type").as("cohort_b"), col("sketch").as("sk_b"))
+    a.join(b, col("cohort_a") < col("cohort_b"))
+      .withColumn("sk_i", DsSketches.tupleIntersectPair(col("sk_a"), col("sk_b")))
+      .select(col("cohort_a"), col("cohort_b"),
+        DsSketches.tupleEstimate(col("sk_i")).as("est_common"),
+        DsSketches.tupleLower(col("sk_i")).as("lb"),
+        DsSketches.tupleUpper(col("sk_i")).as("ub"),
+        DsSketches.tupleSumEstimate(col("sk_i")).as("sum_common_est"))
+  }
 
   /** Shared z-layout of lineitem on (l_partkey, l_orderkey) with the
     * y envelope — one definition for the frozen sidecar builds, the
@@ -242,14 +226,13 @@ object DsSketchQueries {
   /** Frozen per-z-tile KLL partials over y — ONE sidecar build feeding
     * every probe below (a production sidecar is written once and
     * probed many times). */
-  private def kllTilePartials(s: SparkSession, dir: String): DataFrame =
-    frozen(s, dir, "kll_tile_partials") {
-      val (zfiled, _, _) = zfiledLineitem(s, dir)
-      DsSketches.kllPartials(
-          zfiled.withColumn("v", col("y").cast("double")),
-          Seq.empty, col("zfile"), "v")
-        .withColumnRenamed("shard", "zfile")
-    }
+  private val kllTilePartials = frozen { (s, dir) =>
+    val (zfiled, _, _) = zfiledLineitem(s, dir)
+    DsSketches.kllPartials(
+        zfiled.withColumn("v", col("y").cast("double")),
+        Seq.empty, col("zfile"), "v")
+      .withColumnRenamed("shard", "zfile")
+  }
 
   /** One frozen row per z-tile: the KLL sidecar's scan-planning read
     * (n, mn, mx, est, lb, ub, pruned) for the y-slice probe. The
@@ -259,12 +242,11 @@ object DsSketchQueries {
     * envelope cannot give. (Reading a frozen sketch is deterministic,
     * but the stats table is frozen too so the dump and the query are
     * one build by construction.) */
-  private def kllTileEst(s: SparkSession, dir: String): DataFrame =
-    frozen(s, dir, "kll_tiles") {
-      val (_, ymn, ymx) = zfiledLineitem(s, dir)
-      DsSketches.kllTileStats(kllTilePartials(s, dir),
-        yAt(ymn, ymx, TileLoPct).toDouble, yAt(ymn, ymx, TileHiPct).toDouble)
-    }
+  private val kllTileEst = frozen { (s, dir) =>
+    val (_, ymn, ymx) = zfiledLineitem(s, dir)
+    DsSketches.kllTileStats(kllTilePartials(s, dir),
+      yAt(ymn, ymx, TileLoPct).toDouble, yAt(ymn, ymx, TileHiPct).toDouble)
+  }
 
   /** Per-lang merged theta sketches over sha256(content) of the ER
     * corpus — the pipeline-metrics shape: every partition/micro-batch
@@ -272,55 +254,51 @@ object DsSketchQueries {
     * metrics table merges them without touching row data. The `*` row
     * merges ALL partials (global distinct-content count → corpus dedup
     * ratio vs Σ per-lang). */
-  private def erLangThetaEst(s: SparkSession, dir: String): DataFrame =
-    frozen(s, dir, "er_lang_theta") {
-      val corpus = graft.sources.CorpusGen.corpus(s, dir).toDF()
-        .withColumn("sha", sha2(col("content"), 256))
-      val partials = DsSketches.thetaPartials(corpus, Seq("lang"),
-        col("repo"), "sha")
-      DsSketches.thetaMergeEstimate(partials, Seq("lang"))
-        .unionByName(DsSketches.thetaMergeEstimate(
-          partials.withColumn("lang", lit("*")), Seq("lang")))
-    }
+  private val erLangThetaEst = frozen { (s, dir) =>
+    val corpus = graft.sources.CorpusGen.corpus(s, dir).toDF()
+      .withColumn("sha", sha2(col("content"), 256))
+    val partials = DsSketches.thetaPartials(corpus, Seq("lang"),
+      col("repo"), "sha")
+    DsSketches.thetaMergeEstimate(partials, Seq("lang"))
+      .unionByName(DsSketches.thetaMergeEstimate(
+        partials.withColumn("lang", lit("*")), Seq("lang")))
+  }
 
   /** Same sidecar, read for the asymmetric budget probe. */
-  private def kllTileBudgetEst(s: SparkSession, dir: String): DataFrame =
-    frozen(s, dir, "kll_tile_budget") {
-      val (_, ymn, ymx) = zfiledLineitem(s, dir)
-      DsSketches.kllTileStats(kllTilePartials(s, dir),
-        yAt(ymn, ymx, TileLoPct).toDouble, yAt(ymn, ymx, BudgetHiPct).toDouble)
-    }
+  private val kllTileBudgetEst = frozen { (s, dir) =>
+    val (_, ymn, ymx) = zfiledLineitem(s, dir)
+    DsSketches.kllTileStats(kllTilePartials(s, dir),
+      yAt(ymn, ymx, TileLoPct).toDouble, yAt(ymn, ymx, BudgetHiPct).toDouble)
+  }
 
   /** Distinct l_suppkey across the FILES the y-slice probe must read,
     * merged from per-tile theta partials of only the unpruned tiles —
     * metadata-only distinct-count planning (dictionary / broadcast /
     * dedup-state sizing) for an arbitrary file subset, the question a
     * bloom (membership) and a KLL (cardinality) sidecar cannot answer. */
-  private def thetaTileEst(s: SparkSession, dir: String): DataFrame =
-    frozen(s, dir, "theta_tiles") {
-      val (zfiled, _, _) = zfiledLineitem(s, dir)
-      val partials = DsSketches
-        .thetaPartials(zfiled, Seq.empty, col("zfile"), "k")
-        .withColumnRenamed("shard", "zfile")
-      DsSketches.thetaMergeEstimate(
-        partials
-          .join(kllTileEst(s, dir).select(col("zfile"), col("pruned")), "zfile")
-          .where(!col("pruned")),
-        Seq.empty)
-    }
+  private val thetaTileEst = frozen { (s, dir) =>
+    val (zfiled, _, _) = zfiledLineitem(s, dir)
+    val partials = DsSketches
+      .thetaPartials(zfiled, Seq.empty, col("zfile"), "k")
+      .withColumnRenamed("shard", "zfile")
+    DsSketches.thetaMergeEstimate(
+      partials
+        .join(kllTileEst(s, dir).select(col("zfile"), col("pruned")), "zfile")
+        .where(!col("pruned")),
+      Seq.empty)
+  }
 
   /** GLOBAL string split points over the documents path key (quartiles
     * from per-shard partials) — the sketch-driven replacement for
     * RangePartitioner's row sample. Frozen: the split strings define a
     * physical layout, so they must be the same bytes everywhere. */
-  private def rangeSplitsEst(s: SparkSession, dir: String): DataFrame =
-    frozen(s, dir, "range_splits") {
-      DsSketches.kllStringsMergedQuantiles(
-        DsSketches.kllStringsPartials(
-          t(s, dir, "documents").withColumn("path_key", pathKey),
-          Seq.empty, pmod(col("doc_id"), lit(8)), "path_key"),
-        Seq.empty, QuantilePs)
-    }
+  private val rangeSplitsEst = frozen { (s, dir) =>
+    DsSketches.kllStringsMergedQuantiles(
+      DsSketches.kllStringsPartials(
+        t(s, dir, "documents").withColumn("path_key", pathKey),
+        Seq.empty, pmod(col("doc_id"), lit(8)), "path_key"),
+      Seq.empty, QuantilePs)
+  }
 
   /** The three split strings, ascending. */
   private def splitStrings(s: SparkSession, dir: String): Seq[String] =
@@ -331,21 +309,17 @@ object DsSketchQueries {
   private def bucketOf(key: Column, splits: Seq[String]): Column =
     splits.map(sp => when(key > lit(sp), 1L).otherwise(0L)).reduce(_ + _)
 
-  private val layoutMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** Documents written range-partitioned by path-key bucket — the
     * layout a sorted 100 TB key space needs so a key-range read opens
-    * only the covering buckets. Written once per (session, sf). */
-  private def rangeLayoutPath(s: SparkSession, dir: String): String =
-    layoutMemo.getOrElseUpdate((s, dir), {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_range_layout").toString
-      t(s, dir, "documents").withColumn("path_key", pathKey)
-        .withColumn("bucket", bucketOf(col("path_key"), splitStrings(s, dir)))
-        .write.mode("overwrite").partitionBy("bucket").parquet(path)
-      path
-    })
+    * only the covering buckets. Written once per (session, sf), into a
+    * memo temp dir. */
+  private val rangeLayoutPath = SessionMemo { (s, dir: String) =>
+    val path = SessionMemo.tempDir(s, "graft_range_layout")
+    t(s, dir, "documents").withColumn("path_key", pathKey)
+      .withColumn("bucket", bucketOf(col("path_key"), splitStrings(s, dir)))
+      .write.mode("overwrite").partitionBy("bucket").parquet(path)
+    path
+  }
 
   /** Shared DuckDB CTE prefix re-deriving every lineitem row's z-tile
     * (generated from the SAME constants as the Scala expressions) plus

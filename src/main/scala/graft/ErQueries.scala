@@ -3,6 +3,7 @@ package graft
 import graft.functions.{AffineGapFn, AffineGapKernel, DamerauLevenshteinFn, JaroWinkler, SmithWatermanFn, SmithWatermanKernel}
 import graft.operators._
 import graft.sources.CorpusGen
+import graft.util.SessionMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,15 +23,8 @@ import org.apache.spark.sql.functions._
 object ErQueries {
 
   private def pipeline(spark: SparkSession, sfDir: String): Pipeline.Result =
-    Results.cached(spark, sfDir)
+    results(spark, sfDir)
 
-  /** τ grid for er_threshold_curve: 0.01 steps from 0 up to (and
-    * including) the scoring band edge `Pipeline.Config().tau` — the ONE
-    * definition both the Scala query and the DuckDB oracle interpolate,
-    * so a tau/band change moves both grids together (and the grid can
-    * never silently extend past the band, where censored distances
-    * would be counted as matches). Values are exact k/100 doubles whose
-    * toString round-trips identically in Scala and DuckDB. */
   /** er_collective thresholds — ONE definition for the Scala query and
     * the interpolated oracle SQL. tauHi = the confident band (matches
     * on attributes alone); the lo band is the pipeline's scoring edge
@@ -102,6 +96,13 @@ object ErQueries {
       |    SELECT reach.id, e.b FROM reach JOIN e ON e.a = reach.r)
       |SELECT id, min(r) AS clusterId FROM reach GROUP BY id ORDER BY id""".stripMargin
 
+  /** τ grid for er_threshold_curve: 0.01 steps from 0 up to (and
+    * including) the scoring band edge `Pipeline.Config().tau` — the ONE
+    * definition both the Scala query and the DuckDB oracle interpolate,
+    * so a tau/band change moves both grids together (and the grid can
+    * never silently extend past the band, where censored distances
+    * would be counted as matches). Values are exact k/100 doubles whose
+    * toString round-trips identically in Scala and DuckDB. */
   private[graft] val tauGrid: Seq[Double] = {
     val tau = Pipeline.Config().tau
     // floor, not round: a half-centesimal band edge (tau = 0.085) must
@@ -123,68 +124,55 @@ object ErQueries {
     * the same value so query and oracle can never drift. */
   private[graft] val SplitEvalHex = Survivorship.DefaultEvalBound
 
-  /** Cache pipeline results per (session, sfDir) so Verify/Bench running
-    * many queries do not re-run the whole DAG per query. Keyed by the
-    * session too: a cached Dataset is bound to the session that built it,
-    * so a second session in the same JVM must get its own build. */
-  private object Results {
-    private val cache =
-      scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Pipeline.Result]
-    def cached(spark: SparkSession, sfDir: String): Pipeline.Result =
-      cache.getOrElseUpdate((spark, sfDir), {
-        Pipeline.run(spark, CorpusGen.corpus(spark, sfDir))
-      })
+  /** Pipeline results per (session, sfDir), so Verify/Bench running
+    * many queries do not re-run the whole DAG per query. */
+  private[graft] val results = SessionMemo { (spark, sfDir: String) =>
+    val r = Pipeline.run(spark, CorpusGen.corpus(spark, sfDir))
+    SessionMemo.onRelease(spark)(r.unpersist())
+    r
   }
 
-  /** Incremental-ER twin of [[Results]]: the final state after feeding
+  private final case class StreamTwin(
+      er: graft.streaming.StreamingEr.ErState,
+      golden: graft.streaming.StreamingSurvivorship.GoldenState)
+
+  /** Incremental-ER twin of [[results]]: the final state after feeding
     * the corpus through [[graft.streaming.StreamingEr.processBatchBucketed]]
     * in two deterministic arrival batches (state round-trips through a
-    * key-bucketed capped block index under a temp root deleted at JVM
-    * exit), PLUS the incrementally-maintained golden-record table
+    * key-bucketed capped block index under a memo temp root), PLUS the
+    * incrementally-maintained golden-record table
     * ([[graft.streaming.StreamingSurvivorship]]) folded alongside each
     * batch — one loop builds both so Verify/Bench never run the stream
     * twice. */
-  private object StreamResults {
-    final case class Twin(
-        er: graft.streaming.StreamingEr.ErState,
-        golden: graft.streaming.StreamingSurvivorship.GoldenState)
-    private val cache = scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), Twin]
-    def cachedTwin(spark: SparkSession, sfDir: String): Twin =
-      cache.getOrElseUpdate((spark, sfDir), {
-        import spark.implicits._
-        val dir = java.nio.file.Files.createTempDirectory("graft_bstream_q").toFile
-        sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
-        val root = dir.toString
-        val io = new graft.sources.ParquetTableIO(root)
-        val numBuckets = spark.conf.get("spark.sql.shuffle.partitions").toInt
-        val files = CorpusGen.corpus(spark, sfDir)
-        def part(b: Int) = files.filter(f =>
-          math.floorMod(graft.util.Hashing.hashString(f.path), 2) == b)
-        var st: graft.streaming.StreamingEr.ErState = null
-        var gs: Option[graft.streaming.StreamingSurvivorship.GoldenState] = None
-        for (b <- 0 until 2) {
-          val batch = part(b)
-          st = graft.streaming.StreamingEr.processBatchBucketed(spark, batch,
-            io, root, numBuckets)
-          val battrs = batch.map(f => (
-            graft.util.Hashing.rowId128Hex(f.repo, f.path, f.commit),
-            f.lang, f.commit, graft.util.Hashing.sha256Hex(f.content),
-            f.content.length.toLong))
-            .toDF("id", "lang", "commit", "sha256", "content_len")
-          gs = Some(graft.streaming.StreamingSurvivorship.update(
-            st.clusters, battrs, gs))
-        }
-        Twin(st, gs.get)
-      })
-    def cached(spark: SparkSession, sfDir: String): graft.streaming.StreamingEr.ErState =
-      cachedTwin(spark, sfDir).er
+  private val streamResults = SessionMemo { (spark, sfDir: String) =>
+    import spark.implicits._
+    val root = SessionMemo.tempDir(spark, "graft_bstream_q")
+    val io = new graft.sources.ParquetTableIO(root)
+    val numBuckets = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val files = CorpusGen.corpus(spark, sfDir)
+    def part(b: Int) = files.filter(f =>
+      math.floorMod(graft.util.Hashing.hashString(f.path), 2) == b)
+    var st: graft.streaming.StreamingEr.ErState = null
+    var gs: Option[graft.streaming.StreamingSurvivorship.GoldenState] = None
+    for (b <- 0 until 2) {
+      val batch = part(b)
+      st = graft.streaming.StreamingEr.processBatchBucketed(spark, batch,
+        io, root, numBuckets)
+      val battrs = batch.map(f => (
+        graft.util.Hashing.rowId128Hex(f.repo, f.path, f.commit),
+        f.lang, f.commit, graft.util.Hashing.sha256Hex(f.content),
+        f.content.length.toLong))
+        .toDF("id", "lang", "commit", "sha256", "content_len")
+      gs = Some(graft.streaming.StreamingSurvivorship.update(
+        st.clusters, battrs, gs))
+    }
+    StreamTwin(st, gs.get)
   }
 
   /** Force the shared pipeline's persisted stages once, so per-query
     * timings downstream measure the query, not the pipeline build. */
   def warm(spark: SparkSession, sfDir: String): Unit = {
-    val r = Results.cached(spark, sfDir)
+    val r = results(spark, sfDir)
     r.trees.count()
     r.scores.count()
     r.clusters.count()
@@ -198,7 +186,7 @@ object ErQueries {
     * (StreamingSurvivorship rides the same loop), so er_stream_golden
     * times a cache read too. */
   def warmStream(spark: SparkSession, sfDir: String): Unit = {
-    val t = StreamResults.cachedTwin(spark, sfDir)
+    val t = streamResults(spark, sfDir)
     t.er.clusters.count()
     t.golden.golden.count()
     ()
@@ -208,7 +196,7 @@ object ErQueries {
     * build as [[warmStream]] (there is one incremental path), so after
     * warmStream it times a cache read. */
   def warmStreamBucketed(spark: SparkSession, sfDir: String): Unit = {
-    StreamResults.cached(spark, sfDir).clusters.count()
+    streamResults(spark, sfDir).er.clusters.count()
     ()
   }
 
@@ -227,10 +215,10 @@ object ErQueries {
     * in the sweep silently absorbs it (same attribution rule as the
     * stream/edit-script twins). */
   def warmFs(spark: SparkSession, sfDir: String): Unit = {
-    FsResults.cached(spark, sfDir).vectors.count()
+    fsResults(spark, sfDir).vectors.count()
     // the missing-data twin rides the same line: it reuses the persisted
     // feature table, adding only its own vector persist + ternary EM
-    FsMissingResults.cached(spark, sfDir).vectors.count()
+    fsMissingResults(spark, sfDir).vectors.count()
     ()
   }
 
@@ -283,7 +271,7 @@ object ErQueries {
     // (Rastogi et al. ICDE'13) — second CC family, cross-checked by the
     // same recursive-CTE oracle recompute as er_clusters
     "er_cc_hashmin" -> ((s, dir) => {
-      ClusterResults.cached(s, dir).hashmin.orderBy(col("id"))
+      clusterResults(s, dir).hashmin.orderBy(col("id"))
     }),
     // CENTER clustering (weight-ordered star partitioning) — the oracle
     // replays the SEQUENTIAL edge scan one edge per recursive-CTE
@@ -291,7 +279,7 @@ object ErQueries {
     // is checked against the literal sequential definition (round is
     // parallel-schedule metadata and stays out of the compared columns)
     "er_center_clusters" -> ((s, dir) => {
-      ClusterResults.cached(s, dir).center
+      clusterResults(s, dir).center
         .select(col("id"), col("clusterId"), col("is_center"))
         .orderBy(col("id"))
     }),
@@ -300,7 +288,7 @@ object ErQueries {
     // from the final states, and recomputes the components with its own
     // recursive CTE
     "er_merge_center" -> ((s, dir) => {
-      ClusterResults.cached(s, dir).mergeCenter.orderBy(col("id"))
+      clusterResults(s, dir).mergeCenter.orderBy(col("id"))
     }),
     // collective (relational) ER: borderline pairs (in the tau band but
     // not confident) accepted only when the repo pair / directory pair
@@ -470,10 +458,10 @@ object ErQueries {
     // dumped cumulative matches. er_stream_bucketed reads the same state
     // (there is one incremental path) against its own dump of them.
     "er_stream_clusters" -> ((s, dir) => {
-      StreamResults.cached(s, dir).clusters.orderBy(col("id"))
+      streamResults(s, dir).er.clusters.orderBy(col("id"))
     }),
     "er_stream_bucketed" -> ((s, dir) => {
-      StreamResults.cached(s, dir).clusters.orderBy(col("id"))
+      streamResults(s, dir).er.clusters.orderBy(col("id"))
     }),
     // streaming right-to-erasure: the same deterministic '0'-prefix
     // delete set applied to the storage-backed INCREMENTAL state via
@@ -481,7 +469,7 @@ object ErQueries {
     // re-derived. The oracle recomputes CC over the stream's own dumped
     // cumulative matches pruned of deleted endpoints.
     "er_stream_retract" -> ((s, dir) => {
-      val st = StreamResults.cached(s, dir)
+      val st = streamResults(s, dir).er
       val del = st.trees.toDF().select(col("id")).where(col("id").startsWith("0"))
       graft.streaming.StreamingEr.processDeletes(s, del, st)
         .clusters.orderBy(col("id"))
@@ -492,7 +480,7 @@ object ErQueries {
     // replay over the dumped stream clusters + raw corpus proves the
     // carry/recompute bookkeeping loses nothing
     "er_stream_golden" -> ((s, dir) => {
-      StreamResults.cachedTwin(s, dir).golden.golden.orderBy(col("clusterId"))
+      streamResults(s, dir).golden.golden.orderBy(col("clusterId"))
     }),
     // blocking-channel recall diagnostics: for each candidate channel
     // (LSH blocking, sorted-neighborhood, meta-blocking kept set) the
@@ -505,15 +493,15 @@ object ErQueries {
       val truth = truthPairs(r.trees.toDF().select(col("id"), col("groupId")))
       val chans = Seq(
         "lsh" -> r.pairs.select(col("idA"), col("idB")),
-        "snm" -> SnmResults.cached(s, dir),
-        "meta_kept" -> MetaResults.cached(s, dir).pruned
+        "snm" -> snmResults(s, dir),
+        "meta_kept" -> metaResults(s, dir).pruned
           .where(col("kept")).select(col("idA"), col("idB")),
         // the privacy-preserving channel: candidates found entirely in
         // encoded space (composite-CLK Hamming-LSH, purged blocks)
-        "pprl_hlsh" -> PprlResults.cached(s, dir).pairs,
+        "pprl_hlsh" -> pprlResults(s, dir).pairs,
         // the STRUCTURE channel: banded MinHash over pq-gram sets —
         // shape evidence, complementary to the token-shingle lsh
-        "pqgram_mh" -> PqResults.cached(s, dir).pairs)
+        "pqgram_mh" -> pqResults(s, dir).pairs)
       val tagged = chans.map { case (nm, df) =>
         df.select(lit(nm).as("channel"), col("idA"), col("idB"))
       }.reduce(_ unionByName _)
@@ -585,14 +573,14 @@ object ErQueries {
     // derivation AND the windowed pairing are fully redone by the oracle
     // from the (already-verified) er_tree_stats dump.
     "er_snm_pairs" -> ((s, dir) => {
-      SnmResults.cached(s, dir).orderBy(col("idA"), col("idB"))
+      snmResults(s, dir).orderBy(col("idA"), col("idB"))
     }),
     // meta-blocking over the ER block index: CBS pair weights + weighted
     // node pruning. The (key,id) index is engine-internal (MinHash band
     // hashes), so it is dumped and DuckDB redoes cap → pair → weight →
     // prune from it — the established stage-table oracle pattern.
     "er_meta_blocking" -> ((s, dir) => {
-      MetaResults.cached(s, dir).pruned.orderBy(col("idA"), col("idB"))
+      metaResults(s, dir).pruned.orderBy(col("idA"), col("idB"))
     }),
     // progressive (pay-as-you-go) ER: the CBS-ranked verification
     // schedule's quality curve — cumulative truth recall at each spend
@@ -607,8 +595,8 @@ object ErQueries {
     // arithmetic, and recomputes both recall columns
     "er_progressive" -> ((s, dir) => {
       val r = pipeline(s, dir)
-      val weights = MetaResults.cached(s, dir).weights
-      val snm = SnmResults.cached(s, dir)
+      val weights = metaResults(s, dir).weights
+      val snm = snmResults(s, dir)
         .select(col("idA"), col("idB"), lit(0L).as("weight"))
       val combined = weights.unionByName(snm)
         .groupBy(col("idA"), col("idB")).agg(max(col("weight")).as("weight"))
@@ -640,7 +628,7 @@ object ErQueries {
     // candidate pair (γ of Fellegi & Sunter 1969). The oracle recomputes
     // every bit from the dumped narrow feature table.
     "er_fs_vectors" -> ((s, dir) => {
-      FsResults.cached(s, dir).vectors
+      fsResults(s, dir).vectors
         .select(col("idA"), col("idB"), col("g0"), col("g1"), col("g2"),
           col("g3"), col("g4"), col("pattern"))
         .orderBy(col("idA"), col("idB"))
@@ -651,7 +639,7 @@ object ErQueries {
     // the pattern histogram it rebuilds itself from the feature dump.
     "er_fs_params" -> ((s, dir) => {
       import s.implicits._
-      val ps = FsResults.cached(s, dir).params
+      val ps = fsResults(s, dir).params
       FellegiSunter.fieldNames.indices.map(j =>
         (j, FellegiSunter.fieldNames(j), ps.m(j), ps.u(j), ps.p))
         .toDF("j", "field", "m_raw", "u_raw", "p_raw")
@@ -664,7 +652,7 @@ object ErQueries {
     // three per pair from the FULL-precision dumped params (bit-exact
     // parquet doubles) + its own vector re-derivation.
     "er_fs_weights" -> ((s, dir) => {
-      FsResults.cached(s, dir).weighted
+      fsResults(s, dir).weighted
         .select(col("idA"), col("idB"), col("pattern"), col("weight"),
           col("posterior"), col("decision"))
         .orderBy(col("idA"), col("idB"))
@@ -673,7 +661,7 @@ object ErQueries {
     // the acceptance eval of the probabilistic layer (blocking recall is
     // er_blocking_recall's job)
     "er_fs_eval" -> ((s, dir) => {
-      FellegiSunter.evalDecisions(FsResults.cached(s, dir).weighted)
+      FellegiSunter.evalDecisions(fsResults(s, dir).weighted)
     }),
     // the Fellegi–Sunter OPTIMAL decision rule: per-pattern match /
     // clerical-review / non-match regions bounding the false-match rate
@@ -683,7 +671,7 @@ object ErQueries {
     // dumped params with window sums over the identical total order.
     "er_fs_thresholds" -> ((s, dir) => {
       import s.implicits._
-      FellegiSunter.thresholdTable(FsResults.cached(s, dir).params)
+      FellegiSunter.thresholdTable(fsResults(s, dir).params)
         .toDF("ord", "pattern", "weight", "pm_raw", "pu_raw", "cu_raw", "cm_raw", "region")
         .select(col("ord"), col("pattern"), col("weight"),
           round(col("pm_raw"), 6).as("m_prob"), round(col("pu_raw"), 6).as("u_prob"),
@@ -701,7 +689,7 @@ object ErQueries {
     // params + its own vector re-derivation.
     "er_fs_explain" -> ((s, dir) => {
       import s.implicits._
-      val fs = FsResults.cached(s, dir)
+      val fs = fsResults(s, dir)
       val tbl = FellegiSunter.contributionTable(fs.params)
         .toDF("pattern", "j", "field", "agree", "c_raw")
       fs.vectors.select(col("idA"), col("idB"), col("pattern"))
@@ -717,7 +705,7 @@ object ErQueries {
     // window anywhere, so the queue ranks at any scale even though in
     // practice it is reviewer-capacity bounded.
     "er_fs_review" -> ((s, dir) => {
-      val poss = FsResults.cached(s, dir).weighted
+      val poss = fsResults(s, dir).weighted
         .where(col("decision") === "possible")
         .select(col("idA"), col("idB"), col("pattern"), col("weight"), col("posterior"))
         .withColumn("negw", -col("weight"))
@@ -734,7 +722,7 @@ object ErQueries {
     // frequency table from the raw corpus, the exact pair algebra, and
     // both weights from the full-precision dumped params.
     "er_fs_value_weights" -> ((s, dir) => {
-      val fs = FsResults.cached(s, dir)
+      val fs = fsResults(s, dir)
       FellegiSunter.valueWeights(fs.features, pipeline(s, dir).trees.toDF(), fs.params)
         .orderBy(col("idA"), col("idB"))
     }),
@@ -746,7 +734,7 @@ object ErQueries {
     // full fixed-iteration ternary EM as a generated SQL chain
     "er_fs_missing_params" -> ((s, dir) => {
       import s.implicits._
-      val fsm = FsMissingResults.cached(s, dir)
+      val fsm = fsMissingResults(s, dir)
       val rateCols = FellegiSunter.fieldNames.indices.map(j =>
         round(avg(when(col(s"c$j") === FellegiSunter.CodeMissing, 1.0)
           .otherwise(0.0)), 6).as(s"r$j"))
@@ -765,7 +753,7 @@ object ErQueries {
     // likelihoods. The oracle recomputes everything from the feature
     // dump + the full-precision dumped ternary params
     "er_fs_missing" -> ((s, dir) => {
-      FsMissingResults.cached(s, dir).weighted
+      fsMissingResults(s, dir).weighted
         .select(col("idA"), col("idB"), col("c0"), col("c1"), col("c2"),
           col("c3"), col("c4"), col("pattern"), col("weight"),
           col("posterior"), col("decision"))
@@ -775,7 +763,7 @@ object ErQueries {
     // robustness row: ~27 %/20 %/33 % of three fields' observations
     // withheld, decisions re-derived, confusion recomputed by DuckDB
     "er_fs_missing_eval" -> ((s, dir) => {
-      FellegiSunter.evalDecisions(FsMissingResults.cached(s, dir).weighted)
+      FellegiSunter.evalDecisions(fsMissingResults(s, dir).weighted)
     }),
     // native Jaro / Jaro–Winkler comparators (codegen'd Catalyst
     // expressions) over the candidate pairs' member filename and full
@@ -784,7 +772,7 @@ object ErQueries {
     // implementation from the dumped feature table.
     "er_jaro_winkler" -> ((s, dir) => {
       JaroWinkler.register(s)
-      FsResults.cached(s, dir).features
+      fsResults(s, dir).features
         .select(col("idA"), col("idB"),
           round(JaroWinkler.jaroWinklerSim(
             element_at(split(col("pathA"), "/"), -1),
@@ -800,7 +788,7 @@ object ErQueries {
     // damerau_levenshtein / levenshtein implementations
     "er_damerau" -> ((s, dir) => {
       DamerauLevenshteinFn.register(s)
-      FsResults.cached(s, dir).features
+      fsResults(s, dir).features
         .select(col("idA"), col("idB"),
           DamerauLevenshteinFn.dl(
             element_at(split(col("pathA"), "/"), -1),
@@ -822,7 +810,7 @@ object ErQueries {
     // columns are literal true here and MEASURED there.
     "er_affine_gap" -> ((s, dir) => {
       AffineGapFn.register(s)
-      FsResults.cached(s, dir).features
+      fsResults(s, dir).features
         .select(col("idA"), col("idB"),
           AffineGapFn.affineGap(col("pathA"), col("pathB")).as("ag_path"),
           lit(true).as("cells_complete"),
@@ -840,7 +828,7 @@ object ErQueries {
     // and MEASURED there.
     "er_smith_waterman" -> ((s, dir) => {
       SmithWatermanFn.register(s)
-      FsResults.cached(s, dir).features
+      fsResults(s, dir).features
         .select(col("idA"), col("idB"),
           SmithWatermanFn.smithWaterman(col("pathA"), col("pathB")).as("sw_path"),
           lit(true).as("cells_complete"),
@@ -855,8 +843,8 @@ object ErQueries {
     // with DuckDB's OWN bit_count/& — the full comparator algebra; the
     // encoding itself is golden-pinned in PprlSpec.
     "er_pprl" -> ((s, dir) => {
-      Pprl.dice(FsResults.cached(s, dir).features.select(col("idA"), col("idB")),
-          PprlResults.cached(s, dir).pathEnc)
+      Pprl.dice(fsResults(s, dir).features.select(col("idA"), col("idB")),
+          pprlResults(s, dir).pathEnc)
         .orderBy(col("idA"), col("idB"))
     }),
     // PPRL completed into a PIPELINE: candidate generation happens in
@@ -871,7 +859,7 @@ object ErQueries {
     // from the ONE bandPositions definition), replays the purge + pair
     // algebra, and redoes the Dice arithmetic.
     "er_pprl_blocks" -> ((s, dir) => {
-      val p = PprlResults.cached(s, dir)
+      val p = pprlResults(s, dir)
       Pprl.dice(p.pairs, p.compEnc)
         .orderBy(col("idA"), col("idB"))
     }),
@@ -883,9 +871,9 @@ object ErQueries {
     // independently oracle-verified dumps, and the oracle redoes the
     // cross-tabulation itself.
     "er_pprl_tradeoff" -> ((s, dir) => {
-      val fs = FsResults.cached(s, dir)
+      val fs = fsResults(s, dir)
       val pairs = fs.features.select(col("idA"), col("idB"))
-      val pr = PprlResults.cached(s, dir)
+      val pr = pprlResults(s, dir)
       // both encodings' Dice verdicts tagged and unioned, then ONE join
       // chain against the FS decisions + truth and one grouped count —
       // the per-encoding loop replayed the (unpersisted) weighted table
@@ -916,7 +904,7 @@ object ErQueries {
     // over alive blocks). Same oracle SQL as er_pprl_blocks: the fold
     // has to land on the identical candidate set + Dice rows.
     "er_pprl_stream" -> ((s, dir) => {
-      val p = PprlResults.cached(s, dir)
+      val p = pprlResults(s, dir)
       Pprl.dice(p.streamPairs, p.compEnc)
         .orderBy(col("idA"), col("idB"))
     }),
@@ -927,7 +915,7 @@ object ErQueries {
     // Pprl.HlshConfig)
     "er_pprl_recall" -> ((s, dir) => {
       val r = pipeline(s, dir)
-      val pairs = PprlResults.cached(s, dir).pairs
+      val pairs = pprlResults(s, dir).pairs
       val truth = truthPairs(r.trees.toDF().select(col("id"), col("groupId")))
       val total = truth.agg(count(lit(1)).as("n_true_total"))
       pairs.join(truth.withColumn("isDup", lit(true)), Seq("idA", "idB"), "left")
@@ -946,7 +934,7 @@ object ErQueries {
     // the dumped match edges, and sequential equivalence is
     // differential-tested in PivotClusteringSpec.
     "er_pivot_clusters" -> ((s, dir) => {
-      ClusterResults.cached(s, dir).pivot.orderBy(col("id"))
+      clusterResults(s, dir).pivot.orderBy(col("id"))
     }),
     // the two clustering strategies judged side by side on the SAME
     // match graph: B³ P/R/F1 + ARI against ground truth (ClusterEval's
@@ -958,7 +946,7 @@ object ErQueries {
     // assignment dumps + its own truth labels + the er_scores dump.
     "er_clustering_compare" -> ((s, dir) => {
       val r = pipeline(s, dir)
-      val cr = ClusterResults.cached(s, dir)
+      val cr = clusterResults(s, dir)
       val truth = r.trees.toDF().select(col("id"),
         concat(lit("g"), col("groupId")).as("truthId"))
       val pivot = cr.pivot.select(col("id"), col("clusterId"))
@@ -1012,7 +1000,7 @@ object ErQueries {
     // recursive-CTE CC + violation + eviction chain from the
     // er_snm_pairs dump and its own md5 sampling/ordering.
     "er_feedback_clusters" -> ((s, dir) => {
-      FbResults.cached(s, dir).constrained.orderBy(col("id"))
+      fbResults(s, dir).constrained.orderBy(col("id"))
     }),
     // what the feedback bought, in one accounted row: edge/constraint
     // volumes, violations found, evictions paid, must-links the repair
@@ -1020,7 +1008,7 @@ object ErQueries {
     // AFTER (edited + repaired) — the steward-loop progress metric.
     "er_feedback_report" -> ((s, dir) => {
       val r = pipeline(s, dir)
-      val f = FbResults.cached(s, dir)
+      val f = fbResults(s, dir)
       val fb = f.sets
       val truth = r.trees.toDF().select(col("id"),
         concat(lit("g"), col("groupId")).as("truthId"))
@@ -1066,7 +1054,7 @@ object ErQueries {
     "er_tfidf_cosine" -> ((s, dir) => {
       val docs = contentDocs(s, dir)
         .select(col("id"), TokenSim.tokens(col("content")).as("toks"))
-      val pairs = FsResults.cached(s, dir).features.select(col("idA"), col("idB"))
+      val pairs = fsResults(s, dir).features.select(col("idA"), col("idB"))
       TokenSim.tfidfCosine(docs, pairs).orderBy(col("idA"), col("idB"))
     }),
     // Monge–Elkan hybrid comparator (KDD'96) with the native
@@ -1080,7 +1068,7 @@ object ErQueries {
       JaroWinkler.register(s)
       val docs = contentDocs(s, dir)
         .select(col("id"), slice(TokenSim.tokens(col("content")), 1, 8).as("toks"))
-      FsResults.cached(s, dir).features.select(col("idA"), col("idB"))
+      fsResults(s, dir).features.select(col("idA"), col("idB"))
         .join(docs.select(col("id").as("idA"), col("toks").as("tA")), Seq("idA"))
         .join(docs.select(col("id").as("idB"), col("toks").as("tB")), Seq("idB"))
         .select(col("idA"), col("idB"),
@@ -1099,7 +1087,7 @@ object ErQueries {
       val docs = contentDocs(s, dir)
         .select(col("id"), slice(TokenSim.tokens(col("content")), 1, 8).as("toks"))
       val wl = TokenSim.softWeightLists(docs)
-      FsResults.cached(s, dir).features.select(col("idA"), col("idB"))
+      fsResults(s, dir).features.select(col("idA"), col("idB"))
         .join(wl.select(col("id").as("idA"), col("wl").as("tA")), Seq("idA"))
         .join(wl.select(col("id").as("idB"), col("wl").as("tB")), Seq("idB"))
         .select(col("idA"), col("idB"),
@@ -1117,14 +1105,14 @@ object ErQueries {
     // round-equivalence to sequential greedy is property-tested in
     // OneToOneMatchingSpec.
     "er_link_1to1" -> ((s, dir) => {
-      LinkResults.cached(s, dir).matched.orderBy(col("lft"))
+      linkResults(s, dir).matched.orderBy(col("lft"))
     }),
     // incremental twin: the same edges folded through StreamingLink in
     // 3 deterministic arrival batches; must equal the batch matching
     // EXACTLY (round numbers included) — the oracle replays the same
     // fixed-round chain over the full edge set
     "er_link_stream" -> ((s, dir) => {
-      LinkStreamResults.cached(s, dir).matched.orderBy(col("lft"))
+      linkStreamResults(s, dir).matched.orderBy(col("lft"))
     }),
     // linkage quality: edge/match counts, precision of the 1:1
     // assignment against ground-truth labels, and recall/F1 against ALL
@@ -1133,7 +1121,7 @@ object ErQueries {
     // honest catalog-linkage metric). The oracle rebuilds the truth
     // pair set from the raw corpus labels + the same catalog split.
     "er_link_eval" -> ((s, dir) => {
-      val lr = LinkResults.cached(s, dir)
+      val lr = linkResults(s, dir)
       val joined = lr.matched.join(lr.edges, Seq("lft", "rgt"))
       val totals = lr.edges.agg(count(lit(1)).as("n_edges"))
       val stats = joined.agg(
@@ -1141,7 +1129,7 @@ object ErQueries {
         count(when(col("glft") === col("grgt"), 1)).as("tp"),
         count(when(col("glft") =!= col("grgt"), 1)).as("fp"))
       val lab = pipeline(s, dir).trees.toDF().select(col("id"), col("groupId"),
-        substring(col("id"), 32, 1).isin(LinkResults.LeftDigits: _*).as("isL"))
+        substring(col("id"), 32, 1).isin(LinkLeftDigits: _*).as("isL"))
       val truth = lab.as("a").join(lab.as("b"),
         col("a.groupId") === col("b.groupId") &&
           col("a.id") < col("b.id") && col("a.isL") =!= col("b.isL"))
@@ -1192,7 +1180,7 @@ object ErQueries {
     // the oracle, only the table ref differs), so DuckDB re-derives the
     // table from raw documents with zero Spark involvement
     "er_truth_claims" -> ((s, dir) =>
-      TruthResults.cached(s, dir).claims
+      truthResults(s, dir).claims
         .orderBy(col("source"), col("entity"))),
 
     // truth discovery vs majority vote, per entity: the Investment
@@ -1204,7 +1192,7 @@ object ErQueries {
     // whole 5-round fixpoint, the vote, and the win/tie rule are
     // unrolled in the oracle from raw documents
     "er_truth_discovery" -> ((s, dir) => {
-      val t = TruthResults.cached(s, dir)
+      val t = truthResults(s, dir)
       val truth = t.claims.select(col("entity"), col("truth")).distinct()
       // resolveFrom = the operator's own winner/tie/support algebra over
       // the cached fixpoint — ONE definition, never re-implemented here
@@ -1229,7 +1217,7 @@ object ErQueries {
     // engine at any parallelism (round-4 fix: the rounded-double dump
     // was hash-flaky at decimal boundaries)
     "er_source_trust" -> ((s, dir) => {
-      val t = TruthResults.cached(s, dir)
+      val t = truthResults(s, dir)
       val stats = t.claims.groupBy(col("source"))
         .agg(count(lit(1)).as("n_claims"),
           sum(when(col("value") =!= col("truth"), 1L).otherwise(0L)).as("n_wrong"))
@@ -1249,7 +1237,7 @@ object ErQueries {
     // parents, ordered child lists, the extended-tree padding, and
     // every gram window from the dumped postorder structure alone
     "er_pqgram_profile" -> ((s, dir) =>
-      PqResults.cached(s, dir).profiles
+      pqResults(s, dir).profiles
         .orderBy(col("id"), col("gram"))),
 
     // streaming-truth twin: the resolution after folding the claims in
@@ -1259,8 +1247,8 @@ object ErQueries {
     // stream state's OWN dumped cumulative claims, with the planted
     // truth recomputed independently from the entity ids
     "er_truth_stream" -> ((s, dir) => {
-      val st = StreamTruthResults.cached(s, dir)
-      val truth = TruthResults.cached(s, dir).claims
+      val st = streamTruthResults(s, dir)
+      val truth = truthResults(s, dir).claims
         .select(col("entity"), col("truth")).distinct()
       val nClaims = st.claims.count()
       st.resolved
@@ -1277,7 +1265,7 @@ object ErQueries {
     // redoes the set-semantic cap + pair algebra from the dumped
     // (key, id) index (MinHash keys engine-internal, like er_meta_blocking)
     "er_pqgram_pairs" -> ((s, dir) =>
-      PqResults.cached(s, dir).pairs.orderBy(col("idA"), col("idB"))),
+      pqResults(s, dir).pairs.orderBy(col("idA"), col("idB"))),
 
     // pq-gram distance over the pipeline's candidate pairs, next to the
     // exact banded-kernel distance — the approximate-vs-exact
@@ -1292,7 +1280,7 @@ object ErQueries {
     // doubles)
     "er_pqgram" -> ((s, dir) => {
       val r = pipeline(s, dir)
-      val prof = PqResults.cached(s, dir).profiles
+      val prof = pqResults(s, dir).profiles
       PqGrams.pairDistances(
           r.pairs.toDF().select(col("idA"), col("idB")), prof)
         .join(r.scores.toDF().select(col("idA"), col("idB"), col("dist"),
@@ -1317,7 +1305,7 @@ object ErQueries {
     // cell algebra from the verified tree-stats dump
     "er_pqgram_tradeoff" -> ((s, dir) => {
       val r = pipeline(s, dir)
-      val pq = PqResults.cached(s, dir)
+      val pq = pqResults(s, dir)
       val t = r.trees.toDF().select(col("id"), col("groupId"), col("n"))
       val d = PqGrams.pairDistances(pq.pairs, pq.profiles)
         .join(t.select(col("id").as("idA"), col("groupId").as("gA"),
@@ -1401,29 +1389,24 @@ object ErQueries {
          |    FROM $docsRef) g) t""".stripMargin
   }
 
+  private[graft] final case class TruthLayer(claims: DataFrame,
+      inv: graft.operators.TruthDiscovery.Result,
+      sm: graft.operators.TruthDiscovery.Result)
+
   /** Truth-discovery layer, computed once per (session, sfDir): the
     * claims table plus both fixpoints' final trust/beliefs (each
     * result's frames are already localCheckpointed by the operator).
     * Three queries share it; Bench warms it as truth_build_sec. */
-  private[graft] object TruthResults {
-    final case class T(claims: DataFrame,
-                       inv: graft.operators.TruthDiscovery.Result,
-                       sm: graft.operators.TruthDiscovery.Result)
-    private val cache =
-      scala.collection.concurrent.TrieMap.empty[(SparkSession, String), T]
-    def cached(spark: SparkSession, sfDir: String): T =
-      cache.getOrElseUpdate((spark, sfDir), {
-        val claims = spark.sql(
-            TruthModel.claimsSql(s"parquet.`$sfDir/documents.parquet`"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        T(claims,
-          graft.operators.TruthDiscovery.investment(claims),
-          graft.operators.TruthDiscovery.sums(claims))
-      })
+  private[graft] val truthResults = SessionMemo { (spark, sfDir: String) =>
+    val claims = SessionMemo.persist(spark.sql(
+      TruthModel.claimsSql(s"parquet.`$sfDir/documents.parquet`")))
+    TruthLayer(claims,
+      graft.operators.TruthDiscovery.investment(claims),
+      graft.operators.TruthDiscovery.sums(claims))
   }
 
   def warmTruth(spark: SparkSession, sfDir: String): Unit = {
-    val t = TruthResults.cached(spark, sfDir)
+    val t = truthResults(spark, sfDir)
     t.claims.count(); t.inv.trust.count(); t.sm.trust.count()
   }
 
@@ -1438,87 +1421,61 @@ object ErQueries {
     * state must absorb). The final state's cumulative claims are dumped
     * to `_aux/struth_claims`; the er_truth_stream oracle re-runs the
     * whole fixpoint from that dump alone. */
-  private[graft] object StreamTruthResults {
-    private val cache = scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), graft.streaming.StreamingTruth.TruthState]
-    def cached(spark: SparkSession, sfDir: String)
-        : graft.streaming.StreamingTruth.TruthState =
-      cache.getOrElseUpdate((spark, sfDir), {
-        val claims = TruthResults.cached(spark, sfDir).claims
-        val bCol = substring(
-          md5(concat(lit("tb:"), col("source"), lit(":"), col("entity"))), 1, 1)
-        val b0 = claims.where(bCol < "5")
-        val b1 = claims.where(bCol >= "5" && bCol < "a")
-        val b2 = claims.where(bCol >= "a")
-        var st = graft.streaming.StreamingTruth.update(spark, b0, None)
-        st = graft.streaming.StreamingTruth.update(spark, b1, Some(st))
-        st = graft.streaming.StreamingTruth.update(spark,
-          b1.unionByName(b2), Some(st)) // b1 redelivered — must be a no-op
-        st
-      })
+  private[graft] val streamTruthResults = SessionMemo { (spark, sfDir: String) =>
+    val claims = truthResults(spark, sfDir).claims
+    val bCol = substring(
+      md5(concat(lit("tb:"), col("source"), lit(":"), col("entity"))), 1, 1)
+    val b0 = claims.where(bCol < "5")
+    val b1 = claims.where(bCol >= "5" && bCol < "a")
+    val b2 = claims.where(bCol >= "a")
+    var st = graft.streaming.StreamingTruth.update(spark, b0, None)
+    st = graft.streaming.StreamingTruth.update(spark, b1, Some(st))
+    st = graft.streaming.StreamingTruth.update(spark,
+      b1.unionByName(b2), Some(st)) // b1 redelivered — must be a no-op
+    st
   }
 
   def warmStreamTruth(spark: SparkSession, sfDir: String): Unit = {
-    val st = StreamTruthResults.cached(spark, sfDir)
+    val st = streamTruthResults(spark, sfDir)
     st.claims.count(); st.resolved.count()
   }
+
+  private[graft] final case class PqLayer(profiles: DataFrame,
+      blockKeys: DataFrame, pairs: DataFrame)
 
   /** pq-gram layer, computed once per (session, sfDir): the exploded
     * profile table and the structure-channel block index — three
     * queries, the pqgram_mh recall channel, and the aux dump share
     * them; Bench warms it as pq_build_sec. */
-  private[graft] object PqResults {
-    final case class P(profiles: DataFrame, blockKeys: DataFrame,
-                       pairs: DataFrame)
-    private val cache =
-      scala.collection.concurrent.TrieMap.empty[(SparkSession, String), P]
-    def cached(spark: SparkSession, sfDir: String): P =
-      cache.getOrElseUpdate((spark, sfDir), {
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val trees = Results.cached(spark, sfDir).trees
-        val keys = PqGrams.blockKeys(trees).persist(lvl)
-        // ONE capped candidate generation shared by er_pqgram_pairs,
-        // the pqgram_mh recall channel, and er_pqgram_tradeoff — the
-        // three can never drift if cap semantics change
-        P(PqGrams.profiles(trees).persist(lvl), keys,
-          CandidateGen.pairsFromKeys(keys,
-            Pipeline.Config().blocking.maxBlockSize).persist(lvl))
-      })
+  private[graft] val pqResults = SessionMemo { (spark, sfDir: String) =>
+    val trees = results(spark, sfDir).trees
+    val keys = SessionMemo.persist(PqGrams.blockKeys(trees))
+    // ONE capped candidate generation shared by er_pqgram_pairs,
+    // the pqgram_mh recall channel, and er_pqgram_tradeoff — the
+    // three can never drift if cap semantics change
+    PqLayer(SessionMemo.persist(PqGrams.profiles(trees)), keys,
+      SessionMemo.persist(CandidateGen.pairsFromKeys(keys,
+        Pipeline.Config().blocking.maxBlockSize)))
   }
 
   def warmPq(spark: SparkSession, sfDir: String): Unit = {
-    val p = PqResults.cached(spark, sfDir)
+    val p = pqResults(spark, sfDir)
     p.profiles.count(); p.blockKeys.count(); p.pairs.count()
   }
 
-  /** Edit scripts for the first 50 matched pairs (by id order), one row
-    * per operation — shared by er_edit_scripts (the dump) and
-    * er_edit_cost (the oracle-checked rollup over the dump). Memoized
-    * per (session, sfDir) like [[Results]] so the two queries run the
-    * ops DP once between them. */
-  /** Fellegi–Sunter layer, computed once per (session, sfDir): narrow
-    * pair features (also the `_aux/fs_pairs` oracle dump), comparison
-    * vectors, EM-fitted params, and the weighted/decided pair table.
-    * Only `features` and `vectors` are persisted — `weighted` is a
-    * broadcast join over `vectors`, cheap to replay. */
   /** (id, content) for every corpus row: the parsed trees (which carry
     * the id but deliberately NOT the content) joined back to the raw
     * corpus on the identity triple — the standard enrich join a
     * content-grain comparator pays at any scale (narrow id side shuffles
-    * against the fat content side exactly once). */
-  private val contentDocsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[graft] def contentDocs(spark: SparkSession, sfDir: String): DataFrame =
-    // memoized: four comparator queries (tfidf/monge-elkan/soft-tfidf)
-    // plus the composite-CLK encoding each paid this content-grain
-    // enrich join per line
-    contentDocsCache.getOrElseUpdate((spark, sfDir),
-      Results.cached(spark, sfDir).trees.toDF()
-        .select(col("id"), col("repo"), col("path"), col("commit"))
-        .join(CorpusGen.corpus(spark, sfDir).toDF(), Seq("repo", "path", "commit"))
-        .select(col("id"), col("content"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    * against the fat content side exactly once). Memoized: four
+    * comparator queries (tfidf/monge-elkan/soft-tfidf) plus the
+    * composite-CLK encoding each paid this join per line. */
+  private[graft] val contentDocs = SessionMemo { (spark, sfDir: String) =>
+    SessionMemo.persist(results(spark, sfDir).trees.toDF()
+      .select(col("id"), col("repo"), col("path"), col("commit"))
+      .join(CorpusGen.corpus(spark, sfDir).toDF(), Seq("repo", "path", "commit"))
+      .select(col("id"), col("content")))
+  }
 
   /** The composite-CLK quasi-identifier set — path bigrams, language,
     * content tokens — as element arrays, ONE definition shared by the
@@ -1526,7 +1483,7 @@ object ErQueries {
     * table and its oracle can never drift. */
   private[graft] def compositeClkDocs(spark: SparkSession,
                                       sfDir: String): DataFrame =
-    Results.cached(spark, sfDir).trees.toDF()
+    results(spark, sfDir).trees.toDF()
       .select(col("id"), col("path"), col("lang"))
       .join(contentDocs(spark, sfDir), Seq("id"))
       .select(col("id"),
@@ -1534,49 +1491,43 @@ object ErQueries {
         array(lower(col("lang"))).as("langElem"),
         TokenSim.tokens(col("content")).as("contentToks"))
 
+  private[graft] final case class PprlLayer(pathEnc: DataFrame,
+      compEnc: DataFrame, pairs: DataFrame) {
+    /** The 3-batch streaming-blocking twin's candidate pairs — the
+      * same deterministic id-hash split and fold er_pprl_stream always
+      * ran, built once on the warmed layer like the other streaming
+      * twins (er_stream_clusters / er_link_stream / er_truth_stream
+      * all read a warm-built state; this one inexplicably re-folded
+      * per sweep). The fold reads the persisted compEnc. */
+    lazy val streamPairs: DataFrame = {
+      var st: Option[graft.streaming.StreamingPprl.State] = None
+      (0 until 3).foreach { b =>
+        val batch = compEnc.where(pmod(xxhash64(col("id")), lit(3)) === b)
+        st = Some(graft.streaming.StreamingPprl.foldBatch(st,
+          Pprl.hlshKeys(batch, Pprl.HlshConfig(), Pprl.CompositeClk)))
+      }
+      SessionMemo.persist(graft.streaming.StreamingPprl.pairs(st.get))
+    }
+  }
+
   /** PPRL layer, computed once per (session, sfDir): both encodings
     * persisted and the encoded-space candidate pairs — five queries
     * (er_pprl_blocks/recall/stream/tradeoff + the er_blocking_recall
     * pprl channel) share it, so Bench warms it as its own
     * pprl_build_sec line instead of every query re-encoding. */
-  private[graft] object PprlResults {
-    final case class P(pathEnc: DataFrame, compEnc: DataFrame,
-                       pairs: DataFrame) {
-      /** The 3-batch streaming-blocking twin's candidate pairs — the
-        * same deterministic id-hash split and fold er_pprl_stream always
-        * ran, built once on the warmed layer like the other streaming
-        * twins (er_stream_clusters / er_link_stream / er_truth_stream
-        * all read a warm-built state; this one inexplicably re-folded
-        * per sweep). The fold reads the persisted compEnc. */
-      lazy val streamPairs: DataFrame = {
-        var st: Option[graft.streaming.StreamingPprl.State] = None
-        (0 until 3).foreach { b =>
-          val batch = compEnc.where(pmod(xxhash64(col("id")), lit(3)) === b)
-          st = Some(graft.streaming.StreamingPprl.foldBatch(st,
-            Pprl.hlshKeys(batch, Pprl.HlshConfig(), Pprl.CompositeClk)))
-        }
-        graft.streaming.StreamingPprl.pairs(st.get)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
-    }
-    private val cache =
-      scala.collection.concurrent.TrieMap.empty[(SparkSession, String), P]
-    def cached(spark: SparkSession, sfDir: String): P =
-      cache.getOrElseUpdate((spark, sfDir), {
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val pathEnc = Pprl.encode(Results.cached(spark, sfDir).trees.toDF()
-          .select(col("id"), col("path").as("field"))).persist(lvl)
-        val compEnc = Pprl.encodeComposite(compositeClkDocs(spark, sfDir),
-          Seq("pathGrams", "langElem", "contentToks"), Pprl.CompositeClk)
-          .persist(lvl)
-        val pairs = Pprl.encodedPairs(compEnc, clk = Pprl.CompositeClk)
-          .persist(lvl)
-        P(pathEnc, compEnc, pairs)
-      })
+  private[graft] val pprlResults = SessionMemo { (spark, sfDir: String) =>
+    val pathEnc = SessionMemo.persist(Pprl.encode(results(spark, sfDir).trees.toDF()
+      .select(col("id"), col("path").as("field"))))
+    val compEnc = SessionMemo.persist(Pprl.encodeComposite(
+      compositeClkDocs(spark, sfDir),
+      Seq("pathGrams", "langElem", "contentToks"), Pprl.CompositeClk))
+    val pairs = SessionMemo.persist(
+      Pprl.encodedPairs(compEnc, clk = Pprl.CompositeClk))
+    PprlLayer(pathEnc, compEnc, pairs)
   }
 
   def warmPprl(spark: SparkSession, sfDir: String): Unit = {
-    val p = PprlResults.cached(spark, sfDir)
+    val p = pprlResults(spark, sfDir)
     p.pathEnc.count(); p.compEnc.count(); p.pairs.count()
     p.streamPairs.count()
     ()
@@ -1597,7 +1548,7 @@ object ErQueries {
     * (or unlabeled-singleton) ones cannot-links. */
   private def feedbackSets(spark: SparkSession, sfDir: String): FbSets = {
     val r = pipeline(spark, sfDir)
-    val snm = SnmResults.cached(spark, sfDir).select(col("idA"), col("idB"))
+    val snm = snmResults(spark, sfDir).select(col("idA"), col("idB"))
     val lab = r.trees.toDF().select(col("id"), col("groupId"))
     val labeled = snm
       .join(lab.select(col("id").as("idA"), col("groupId").as("gA")), "idA")
@@ -1619,37 +1570,41 @@ object ErQueries {
     * layer's edge set, and the FS assessment-pair union). Each used to
     * rebuild the full rank + windowed pair emission from scratch
     * (guide §1.2: remove redundant passes before tuning anything). */
-  private[graft] object SnmResults {
-    private val cache =
-      scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-    def cached(spark: SparkSession, sfDir: String): DataFrame =
-      cache.getOrElseUpdate((spark, sfDir), {
-        val r = Results.cached(spark, sfDir)
-        SortedNeighborhood.pairs(
-            r.trees.toDF().select(col("id"), col("nTokens")),
-            "id", Seq("nTokens", "id"), SnmWindow)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+  private[graft] val snmResults = SessionMemo { (spark, sfDir: String) =>
+    SessionMemo.persist(SortedNeighborhood.pairs(
+      results(spark, sfDir).trees.toDF().select(col("id"), col("nTokens")),
+      "id", Seq("nTokens", "id"), SnmWindow))
   }
+
+  private[graft] final case class MetaLayer(weights: DataFrame, pruned: DataFrame)
 
   /** Meta-blocking layer over the ER block index, computed once per
     * (session, sfDir): the CBS pair-weight table and its pruned form —
     * er_meta_blocking, er_blocking_recall's meta channel and
     * er_progressive's schedule all read these instead of re-deriving
     * the keyed index + weight aggregation per query line. */
-  private[graft] object MetaResults {
-    final case class M(weights: DataFrame, pruned: DataFrame)
-    private val cache =
-      scala.collection.concurrent.TrieMap.empty[(SparkSession, String), M]
-    def cached(spark: SparkSession, sfDir: String): M =
-      cache.getOrElseUpdate((spark, sfDir), {
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val cfg = Pipeline.Config().blocking
-        val keyed = Blocking.keyedIds(Results.cached(spark, sfDir).trees, cfg)
-        val weights = MetaBlocking.pairWeights(keyed, cfg.maxBlockSize)
-          .persist(lvl)
-        M(weights, MetaBlocking.prune(weights).persist(lvl))
-      })
+  private[graft] val metaResults = SessionMemo { (spark, sfDir: String) =>
+    val cfg = Pipeline.Config().blocking
+    val keyed = Blocking.keyedIds(results(spark, sfDir).trees, cfg)
+    val weights = SessionMemo.persist(
+      MetaBlocking.pairWeights(keyed, cfg.maxBlockSize))
+    MetaLayer(weights, SessionMemo.persist(MetaBlocking.prune(weights)))
+  }
+
+  private[graft] final class ClusterLayer(spark: SparkSession, sfDir: String) {
+    private def r = results(spark, sfDir)
+    private def nodes = r.trees.toDF().select(col("id"))
+    private def wEdges = r.scores.toDF().where(col("isMatch"))
+      .select(col("idA").as("src"), col("idB").as("dst"),
+        col("normDist").as("w"))
+    lazy val pivot: DataFrame = SessionMemo.persist(PivotClustering.cluster(
+      r.matches.select(col("idA").as("src"), col("idB").as("dst")), nodes))
+    lazy val hashmin: DataFrame =
+      SessionMemo.persist(HashToMin.connectedComponents(r.matches, nodes))
+    lazy val center: DataFrame =
+      SessionMemo.persist(CenterClustering.cluster(wEdges, nodes))
+    lazy val mergeCenter: DataFrame =
+      SessionMemo.persist(CenterClustering.mergeCenter(wEdges, center))
   }
 
   /** The non-CC clustering families over the SAME match graph, each
@@ -1659,29 +1614,31 @@ object ErQueries {
     * stops re-running clusterings that already have their own query
     * lines. The iterative operators themselves are unchanged; this
     * removes the duplicate executions (guide §1.2 step 1). */
-  private[graft] object ClusterResults {
-    final class C(spark: SparkSession, sfDir: String) {
-      private val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      private def r = Results.cached(spark, sfDir)
-      private def nodes = r.trees.toDF().select(col("id"))
-      private def wEdges = r.scores.toDF().where(col("isMatch"))
-        .select(col("idA").as("src"), col("idB").as("dst"),
-          col("normDist").as("w"))
-      lazy val pivot: DataFrame = PivotClustering.cluster(
-          r.matches.select(col("idA").as("src"), col("idB").as("dst")),
-          nodes)
-        .persist(lvl)
-      lazy val hashmin: DataFrame =
-        HashToMin.connectedComponents(r.matches, nodes).persist(lvl)
-      lazy val center: DataFrame =
-        CenterClustering.cluster(wEdges, nodes).persist(lvl)
-      lazy val mergeCenter: DataFrame =
-        CenterClustering.mergeCenter(wEdges, center).persist(lvl)
+  private[graft] val clusterResults = SessionMemo(new ClusterLayer(_, _: String))
+
+  private[graft] final class FbLayer(spark: SparkSession, sfDir: String) {
+    private def nodes =
+      results(spark, sfDir).trees.toDF().select(col("id"))
+    /** must/cannot persisted: the steward constraint sets are tiny and
+      * read by eff, the evictions, and three report counters each */
+    lazy val sets: FbSets = {
+      val raw = feedbackSets(spark, sfDir)
+      FbSets(raw.edges, SessionMemo.persist(raw.must),
+        SessionMemo.persist(raw.cannot))
     }
-    private val cache =
-      scala.collection.concurrent.TrieMap.empty[(SparkSession, String), C]
-    def cached(spark: SparkSession, sfDir: String): C =
-      cache.getOrElseUpdate((spark, sfDir), new C(spark, sfDir))
+    /** components of the RAW candidate graph (the "before" picture) */
+    lazy val before: DataFrame = SessionMemo.persist(Clustering
+      .connectedComponents(sets.edges.select(col("idA"), col("idB")), nodes))
+    /** components of the steward-edited graph — the one CC run the
+      * whole layer shares */
+    lazy val editedCc: DataFrame = SessionMemo.persist(Clustering
+      .connectedComponents(
+        Feedback.editedEdges(sets.edges, sets.must, sets.cannot), nodes))
+    lazy val ev: DataFrame = SessionMemo.persist(
+      Feedback.evictions(editedCc, sets.cannot, sets.must))
+    /** the final constrained assignment = editedCc + eviction repair */
+    lazy val constrained: DataFrame =
+      SessionMemo.persist(Feedback.applyEvictions(editedCc, ev))
   }
 
   /** The clerical-feedback layer, computed once per (session, sfDir)
@@ -1691,36 +1648,7 @@ object ErQueries {
     * everything er_feedback_clusters had already computed — the
     * single-build layer removes all of that duplicate work while
     * keeping every derived frame definitionally identical. */
-  private[graft] object FbResults {
-    final class F(spark: SparkSession, sfDir: String) {
-      private val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      private def nodes =
-        Results.cached(spark, sfDir).trees.toDF().select(col("id"))
-      /** must/cannot persisted: the steward constraint sets are tiny and
-        * read by eff, the evictions, and three report counters each */
-      lazy val sets: FbSets = {
-        val raw = feedbackSets(spark, sfDir)
-        FbSets(raw.edges, raw.must.persist(lvl), raw.cannot.persist(lvl))
-      }
-      /** components of the RAW candidate graph (the "before" picture) */
-      lazy val before: DataFrame = Clustering.connectedComponents(
-          sets.edges.select(col("idA"), col("idB")), nodes).persist(lvl)
-      /** components of the steward-edited graph — the one CC run the
-        * whole layer shares */
-      lazy val editedCc: DataFrame = Clustering.connectedComponents(
-          Feedback.editedEdges(sets.edges, sets.must, sets.cannot), nodes)
-        .persist(lvl)
-      lazy val ev: DataFrame =
-        Feedback.evictions(editedCc, sets.cannot, sets.must).persist(lvl)
-      /** the final constrained assignment = editedCc + eviction repair */
-      lazy val constrained: DataFrame =
-        Feedback.applyEvictions(editedCc, ev).persist(lvl)
-    }
-    private val cache =
-      scala.collection.concurrent.TrieMap.empty[(SparkSession, String), F]
-    def cached(spark: SparkSession, sfDir: String): F =
-      cache.getOrElseUpdate((spark, sfDir), new F(spark, sfDir))
-  }
+  private[graft] val fbResults = SessionMemo(new FbLayer(_, _: String))
 
   /** Ground-truth duplicate pairs (idA < idB) from the corpus labels —
     * the ONE definition er_blocking_recall and er_pprl_recall share. */
@@ -1732,62 +1660,64 @@ object ErQueries {
         (x, y) => struct(x.as("idA"), y.as("idB")))).as("p"))
       .select(col("p.idA"), col("p.idB"))
 
-  private[graft] object FsResults {
-    final case class Fs(
-        features: DataFrame,
-        vectors: DataFrame,
-        params: FellegiSunter.FsParams,
-        weighted: DataFrame)
-    private val cache =
-      scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Fs]
-    def cached(spark: SparkSession, sfDir: String): Fs =
-      cache.getOrElseUpdate((spark, sfDir), {
-        val r = Results.cached(spark, sfDir)
-        // Assessment pair set = LSH candidates ∪ sorted-neighborhood
-        // pairs. The MinHash blocking is precise enough that its
-        // candidates are almost all true matches — a one-class set EM
-        // cannot separate; the SNM channel contributes size-similar true
-        // NON-matches, giving the U class real mass. Only the SNM-delta
-        // pairs pay the DP (anti-join against the already-persisted
-        // candidate scores), through the exact same attach/score stages
-        // as the pipeline.
-        val snm = SnmResults.cached(spark, sfDir)
-        val extra = snm.join(r.pairs.select(col("idA"), col("idB")),
-          Seq("idA", "idB"), "left_anti")
-        val cfg = Pipeline.Config()
-        val extraScores = Scoring.score(
-          Scoring.attachTrees(extra, r.trees, cfg.salts), cfg.tau).toDF()
-        val scores = r.scores.toDF().unionByName(extraScores)
-        val features = FellegiSunter
-          .pairFeatures(scores, r.trees.toDF())
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val vectors = FellegiSunter.vectors(features)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val params = FellegiSunter.fitEm(vectors)
-        Fs(features, vectors, params, FellegiSunter.weigh(spark, vectors, params))
-      })
+  private[graft] final case class FsLayer(
+      features: DataFrame,
+      vectors: DataFrame,
+      params: FellegiSunter.FsParams,
+      weighted: DataFrame)
+
+  /** Fellegi–Sunter layer, computed once per (session, sfDir): narrow
+    * pair features (also the `_aux/fs_pairs` oracle dump), comparison
+    * vectors, EM-fitted params, and the weighted/decided pair table.
+    * Only `features` and `vectors` are persisted — `weighted` is a
+    * broadcast join over `vectors`, cheap to replay. */
+  private[graft] val fsResults = SessionMemo { (spark, sfDir: String) =>
+    val r = results(spark, sfDir)
+    // Assessment pair set = LSH candidates ∪ sorted-neighborhood
+    // pairs. The MinHash blocking is precise enough that its
+    // candidates are almost all true matches — a one-class set EM
+    // cannot separate; the SNM channel contributes size-similar true
+    // NON-matches, giving the U class real mass. Only the SNM-delta
+    // pairs pay the DP (anti-join against the already-persisted
+    // candidate scores), through the exact same attach/score stages
+    // as the pipeline.
+    val snm = snmResults(spark, sfDir)
+    val extra = snm.join(r.pairs.select(col("idA"), col("idB")),
+      Seq("idA", "idB"), "left_anti")
+    val cfg = Pipeline.Config()
+    val extraScores = Scoring.score(
+      Scoring.attachTrees(extra, r.trees, cfg.salts), cfg.tau).toDF()
+    val scores = r.scores.toDF().unionByName(extraScores)
+    val features = SessionMemo.persist(
+      FellegiSunter.pairFeatures(scores, r.trees.toDF()))
+    val vectors = SessionMemo.persist(FellegiSunter.vectors(features))
+    val params = FellegiSunter.fitEm(vectors)
+    FsLayer(features, vectors, params, FellegiSunter.weigh(spark, vectors, params))
   }
 
+  private[graft] final case class FsMissingLayer(
+      vectors: DataFrame,
+      params: FellegiSunter.FsParams,
+      weighted: DataFrame)
+
   /** Missing-data (ternary γ) Fellegi–Sunter twin, computed once per
-    * (session, sfDir) on top of [[FsResults]]' persisted feature table —
+    * (session, sfDir) on top of [[fsResults]]' persisted feature table —
     * deterministic missingness channels, ternary EM with per-field
     * observed masses, weight-0 missing contributions. */
-  private[graft] object FsMissingResults {
-    final case class FsM(
-        vectors: DataFrame,
-        params: FellegiSunter.FsParams,
-        weighted: DataFrame)
-    private val cache =
-      scala.collection.concurrent.TrieMap.empty[(SparkSession, String), FsM]
-    def cached(spark: SparkSession, sfDir: String): FsM =
-      cache.getOrElseUpdate((spark, sfDir), {
-        val vectors = FellegiSunter
-          .vectorsMissing(FsResults.cached(spark, sfDir).features)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val params = FellegiSunter.fitEmTernary(vectors)
-        FsM(vectors, params, FellegiSunter.weighTernary(spark, vectors, params))
-      })
+  private[graft] val fsMissingResults = SessionMemo { (spark, sfDir: String) =>
+    val vectors = SessionMemo.persist(
+      FellegiSunter.vectorsMissing(fsResults(spark, sfDir).features))
+    val params = FellegiSunter.fitEmTernary(vectors)
+    FsMissingLayer(vectors, params,
+      FellegiSunter.weighTernary(spark, vectors, params))
   }
+
+  private[graft] final case class LinkLayer(edges: DataFrame, matched: DataFrame)
+
+  /** Last-hex-digit values routed to the LEFT catalog of the one-to-one
+    * linkage layer — the ONE definition both the Scala split and the
+    * oracle SQL interpolate. */
+  private[graft] val LinkLeftDigits: Seq[String] = (0 to 7).map(_.toHexString)
 
   /** One-to-one linkage layer, computed once per (session, sfDir): the
     * corpus split into two deterministic catalogs by the id's last hex
@@ -1798,32 +1728,21 @@ object ErQueries {
     * break on the id pair), and the greedy maximum-weight 1:1 matching
     * over them ([[OneToOneMatching.greedyMatch]]). Edges carry the
     * ground-truth gids so er_link_eval can score the assignment. */
-  private[graft] object LinkResults {
-    final case class Lr(edges: DataFrame, matched: DataFrame)
-    /** Last-hex-digit values routed to the LEFT catalog — the ONE
-      * definition both the Scala split and the oracle SQL interpolate. */
-    val LeftDigits: Seq[String] = (0 to 7).map(_.toHexString)
-    private val cache =
-      scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Lr]
-    def cached(spark: SparkSession, sfDir: String): Lr =
-      cache.getOrElseUpdate((spark, sfDir), {
-        val accepted = FsResults.cached(spark, sfDir).weighted
-          .where(col("decision") === "match")
-          .withColumn("lA", substring(col("idA"), 32, 1).isin(LeftDigits: _*))
-          .withColumn("lB", substring(col("idB"), 32, 1).isin(LeftDigits: _*))
-          .where(col("lA") =!= col("lB"))
-        val edges = accepted.select(
-          when(col("lA"), col("idA")).otherwise(col("idB")).as("lft"),
-          when(col("lA"), col("idB")).otherwise(col("idA")).as("rgt"),
-          col("weight").as("w"),
-          when(col("lA"), col("gidA")).otherwise(col("gidB")).as("glft"),
-          when(col("lA"), col("gidB")).otherwise(col("gidA")).as("grgt"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val matched = OneToOneMatching
-          .greedyMatch(edges.select(col("lft"), col("rgt"), col("w")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        Lr(edges, matched)
-      })
+  private[graft] val linkResults = SessionMemo { (spark, sfDir: String) =>
+    val accepted = fsResults(spark, sfDir).weighted
+      .where(col("decision") === "match")
+      .withColumn("lA", substring(col("idA"), 32, 1).isin(LinkLeftDigits: _*))
+      .withColumn("lB", substring(col("idB"), 32, 1).isin(LinkLeftDigits: _*))
+      .where(col("lA") =!= col("lB"))
+    val edges = SessionMemo.persist(accepted.select(
+      when(col("lA"), col("idA")).otherwise(col("idB")).as("lft"),
+      when(col("lA"), col("idB")).otherwise(col("idA")).as("rgt"),
+      col("weight").as("w"),
+      when(col("lA"), col("gidA")).otherwise(col("gidB")).as("glft"),
+      when(col("lA"), col("gidB")).otherwise(col("gidA")).as("grgt")))
+    val matched = SessionMemo.persist(OneToOneMatching
+      .greedyMatch(edges.select(col("lft"), col("rgt"), col("w"))))
+    LinkLayer(edges, matched)
   }
 
   /** Group-linkage weight table (er_group_linkage / er_group_matches):
@@ -1834,9 +1753,9 @@ object ErQueries {
     * two broadcast size dims), so no dedicated bench warm line. */
   private def groupWeightsDf(s: SparkSession, dir: String): DataFrame = {
     val lab = pipeline(s, dir).trees.toDF().select(col("id"), col("repo"),
-      substring(col("id"), 32, 1).isin(LinkResults.LeftDigits: _*).as("isL"))
+      substring(col("id"), 32, 1).isin(LinkLeftDigits: _*).as("isL"))
     GroupLinkage.groupWeights(
-      LinkResults.cached(s, dir).matched.select(col("lft"), col("rgt")),
+      linkResults(s, dir).matched.select(col("lft"), col("rgt")),
       lab.where(col("isL")).select(col("id"), col("repo").as("gid")),
       lab.where(!col("isL")).select(col("id"), col("repo").as("gid")))
   }
@@ -1848,40 +1767,35 @@ object ErQueries {
     * them (same attribution rule as the stream / edit-script / FS
     * builds). */
   def warmLink(spark: SparkSession, sfDir: String): Unit = {
-    LinkResults.cached(spark, sfDir).matched.count()
-    LinkStreamResults.cached(spark, sfDir).matched.count()
+    linkResults(spark, sfDir).matched.count()
+    linkStreamResults(spark, sfDir).matched.count()
     ()
   }
 
-  /** Incremental twin of [[LinkResults]]: the same edge set folded
+  /** Incremental twin of [[linkResults]]: the same edge set folded
     * through [[graft.streaming.StreamingLink]] in three deterministic
     * arrival batches (hash of the edge). Its final matching must equal
     * the batch matching EXACTLY, round numbers included — the oracle
     * replays the identical chain over all edges. */
-  private object LinkStreamResults {
-    private val cache = scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), graft.streaming.StreamingLink.LinkState]
-    def cached(spark: SparkSession, sfDir: String): graft.streaming.StreamingLink.LinkState =
-      cache.getOrElseUpdate((spark, sfDir), {
-        val edges = LinkResults.cached(spark, sfDir).edges
-          .select(col("lft"), col("rgt"), col("w"))
-        def part(b: Int) = edges.where(
-          pmod(xxhash64(col("lft"), col("rgt")), lit(3)) === b)
-        var st: Option[graft.streaming.StreamingLink.LinkState] = None
-        for (b <- 0 until 3)
-          st = Some(graft.streaming.StreamingLink.update(spark, part(b), st))
-        st.get
-      })
+  private val linkStreamResults = SessionMemo { (spark, sfDir: String) =>
+    val edges = linkResults(spark, sfDir).edges
+      .select(col("lft"), col("rgt"), col("w"))
+    def part(b: Int) = edges.where(
+      pmod(xxhash64(col("lft"), col("rgt")), lit(3)) === b)
+    var st: Option[graft.streaming.StreamingLink.LinkState] = None
+    for (b <- 0 until 3)
+      st = Some(graft.streaming.StreamingLink.update(spark, part(b), st))
+    st.get
   }
 
-  private val editScriptsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def editScripts(s: SparkSession, dir: String): DataFrame =
-    editScriptsCache.getOrElseUpdate((s, dir), {
-      buildEditScripts(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+  /** Edit scripts for the first 50 matched pairs (by id order), one row
+    * per operation — shared by er_edit_scripts (the dump) and
+    * er_edit_cost (the oracle-checked rollup over the dump). Memoized
+    * per (session, sfDir) like [[results]] so the two queries run the
+    * ops DP once between them. */
+  private val editScripts = SessionMemo { (s, dir: String) =>
+    SessionMemo.persist(buildEditScripts(s, dir))
+  }
 
   private def buildEditScripts(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1917,13 +1831,13 @@ object ErQueries {
   def dumpAux(spark: SparkSession, sfDir: String, outDir: String): Unit = {
     CorpusGen.corpus(spark, sfDir).toDF()
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/corpus")
-    Results.cached(spark, sfDir).metrics
+    results(spark, sfDir).metrics
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/metrics_raw")
     // the streaming twin's cumulative match edges, once per oracle: the
     // er_stream_clusters and er_stream_bucketed oracles recompute
     // connected components over these independently
     for (dump <- Seq("stream_matches", "bstream_matches"))
-      StreamResults.cached(spark, sfDir).matches
+      streamResults(spark, sfDir).er.matches
         .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$dump")
     // postorder structure (node index → leftmost-leaf-descendant) of
     // every tree touched by the 50-pair edit-script sample: the
@@ -1933,7 +1847,7 @@ object ErQueries {
       val eds = editScripts(spark, sfDir)
       val ids = eds.select(col("idA").as("id"))
         .union(eds.select(col("idB").as("id"))).distinct()
-      Results.cached(spark, sfDir).trees.toDF().join(ids, "id")
+      results(spark, sfDir).trees.toDF().join(ids, "id")
         .select(col("id"), posexplode(col("lmds")).as(Seq("i", "lmd")))
         .coalesce(1).write.mode("overwrite").parquet(s"$outDir/script_tree_nodes")
     }
@@ -1941,7 +1855,7 @@ object ErQueries {
     // er_pqgram_profile oracle re-derives parents, ordered children
     // lists, the extended-tree padding, and every pq-gram window from
     // these rows alone
-    Results.cached(spark, sfDir).trees.toDF()
+    results(spark, sfDir).trees.toDF()
       .select(col("id"),
         posexplode(arrays_zip(col("labels"), col("lmds"))).as(Seq("i", "z")))
       .select(col("id"), col("i"), col("z.labels").as("label"), col("z.lmds").as("lmd"))
@@ -1952,18 +1866,18 @@ object ErQueries {
     // bit-exact, so the weight/posterior oracle recomputes from the
     // identical numbers the engine used — the rounded er_fs_params query
     // checks the EM itself via the replayed-SQL-EM oracle)
-    FsResults.cached(spark, sfDir).features
+    fsResults(spark, sfDir).features
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/fs_pairs")
     // packed PPRL bitset words (id, widx, word): the er_pprl oracle
     // recomputes popcounts, pair intersections, dice, and decisions
     // from these with DuckDB's own bit arithmetic
-    PprlResults.cached(spark, sfDir).pathEnc
+    pprlResults(spark, sfDir).pathEnc
       .select(col("id"), posexplode(col("bf")).as(Seq("widx", "word")))
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/pprl_words")
     // packed COMPOSITE CLK words (1024-bit: path grams + lang +
     // content tokens): the er_pprl_blocks / er_pprl_recall oracles
     // re-derive band keys, purge, pairs, and Dice from these
-    PprlResults.cached(spark, sfDir).compEnc
+    pprlResults(spark, sfDir).compEnc
       .select(col("id"), posexplode(col("bf")).as(Seq("widx", "word")))
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/pprl2_words")
     // full Gotoh D/P/Q matrices per candidate pair (INF encoded -1):
@@ -1971,7 +1885,7 @@ object ErQueries {
     // recurrences cell-by-cell and reads the corner as the distance
     locally {
       import spark.implicits._
-      FsResults.cached(spark, sfDir).features
+      fsResults(spark, sfDir).features
         .select("idA", "idB", "pathA", "pathB")
         .as[(String, String, String, String)]
         .flatMap { case (ia, ib, pa, pb) =>
@@ -1988,7 +1902,7 @@ object ErQueries {
     // recurrence cell-by-cell and reads the matrix max as the score
     locally {
       import spark.implicits._
-      FsResults.cached(spark, sfDir).features
+      fsResults(spark, sfDir).features
         .select("idA", "idB", "pathA", "pathB")
         .as[(String, String, String, String)]
         .flatMap { case (ia, ib, pa, pb) =>
@@ -2002,14 +1916,14 @@ object ErQueries {
     }
     locally {
       import spark.implicits._
-      val ps = FsResults.cached(spark, sfDir).params
+      val ps = fsResults(spark, sfDir).params
       FellegiSunter.fieldNames.indices
         .map(j => (j, ps.m(j), ps.u(j), ps.p))
         .toDF("j", "m", "u", "p")
         .coalesce(1).write.mode("overwrite").parquet(s"$outDir/fs_params_full")
       // full-precision ternary params for the missing-data twin's
       // weight/posterior oracle arithmetic (parquet doubles, bit-exact)
-      val pm = FsMissingResults.cached(spark, sfDir).params
+      val pm = fsMissingResults(spark, sfDir).params
       FellegiSunter.fieldNames.indices
         .map(j => (j, pm.m(j), pm.u(j), pm.p))
         .toDF("j", "m", "u", "p")
@@ -2017,18 +1931,18 @@ object ErQueries {
     }
     // (key,id) block-index rows — engine-internal MinHash band keys; the
     // er_meta_blocking oracle redoes cap → pair → weight → prune from it
-    Blocking.keyedIds(Results.cached(spark, sfDir).trees, Pipeline.Config().blocking)
+    Blocking.keyedIds(results(spark, sfDir).trees, Pipeline.Config().blocking)
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/er_block_index")
     // (key,id) STRUCTURE-channel index (banded MinHash over pq-gram
     // sets, engine-internal keys): the er_pqgram_pairs oracle redoes
     // the set-semantic cap + pair algebra from it
-    PqResults.cached(spark, sfDir).blockKeys
+    pqResults(spark, sfDir).blockKeys
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/pqgram_block_index")
     // the streaming-truth twin's cumulative claims state: the
     // er_truth_stream oracle re-runs the full Investment fixpoint over
     // THIS dump (not the batch model), so the stream state itself is
     // what gets verified
-    StreamTruthResults.cached(spark, sfDir).claims
+    streamTruthResults(spark, sfDir).claims
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/struth_claims")
     // uncapped lexer event stream per file: the er_tree_stats oracle
     // recomputes n / n_tokens / truncated from it (the cap bookkeeping
@@ -2232,9 +2146,9 @@ object ErQueries {
     // cross-catalog FS-accepted edges re-derived from `dec` (which the
     // oracle itself rebuilt from the feature dump + full-precision
     // params): the catalog split is the id's last hex digit, exactly
-    // LinkResults.LeftDigits
+    // LinkLeftDigits
     val linkEdges = {
-      val digits = LinkResults.LeftDigits.map(d => s"'$d'").mkString(",")
+      val digits = LinkLeftDigits.map(d => s"'$d'").mkString(",")
       s"""edges AS MATERIALIZED (
          |  SELECT
          |    CASE WHEN lA THEN idA ELSE idB END AS lft,
@@ -2282,7 +2196,7 @@ object ErQueries {
     // replayed record matching, sizes per catalog side, Jaccard/Dice/
     // overlap — the whole group grain redone independently
     val groupWeightCtes = {
-      val digits = LinkResults.LeftDigits.map(d => s"'$d'").mkString(",")
+      val digits = LinkLeftDigits.map(d => s"'$d'").mkString(",")
       s"""glab AS MATERIALIZED (
          |  SELECT $idExpr AS id, repo,
          |    substr($idExpr, 32, 1) IN ($digits) AS isL
@@ -3178,7 +3092,7 @@ object ErQueries {
            |SELECT lft AS glft, rgt AS grgt, w, round
            |FROM gmatched ORDER BY glft""".stripMargin,
       "er_link_eval" -> {
-        val digits = LinkResults.LeftDigits.map(d => s"'$d'").mkString(",")
+        val digits = LinkLeftDigits.map(d => s"'$d'").mkString(",")
         s"""WITH $fsVec,
            |$fsWeights,
            |$linkEdges,

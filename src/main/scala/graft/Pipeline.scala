@@ -63,9 +63,18 @@ object Pipeline {
     private val metricsAcc = new org.apache.spark.util.CollectionAccumulator[PartMetrics]
     spark.sparkContext.register(metricsAcc, "graft.score.partMetrics")
 
-    lazy val trees: Dataset[TreeRow] = staged(spark, cfg, "trees") {
+    private val persisted = new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
+    private def persist[T](ds: Dataset[T]): Dataset[T] = {
+      persisted.add(ds)
+      ds.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+
+    /** Unpersists the stages forced so far; the others hold nothing. */
+    def unpersist(): Unit = persisted.forEach(graft.util.SessionMemo.unpersist(_))
+
+    lazy val trees: Dataset[TreeRow] = persist(staged(spark, cfg, "trees") {
       parseStage()
-    }.as[TreeRow].persist(StorageLevel.MEMORY_AND_DISK)
+    }.as[TreeRow])
 
     private def parseStage(): DataFrame =
       ParseStage.parse(files, cfg.parse, cfg.blocking.mh, Some(metricsAcc)).toDF()
@@ -73,15 +82,15 @@ object Pipeline {
     // persist: the scoring stage reads pairs more than once (hot-degree
     // counts + the probe side of each tree-fetch join) — without it the
     // blocking shuffle re-executes per read
-    lazy val pairs: DataFrame = staged(spark, cfg, "pairs") {
+    lazy val pairs: DataFrame = persist(staged(spark, cfg, "pairs") {
       Blocking.candidatePairs(trees, cfg.blocking)
-    }.persist(StorageLevel.MEMORY_AND_DISK)
+    })
 
     // persist: matches, clusters, F1 and metrics all read scores — without
     // it every downstream action re-runs the (expensive) DP stage
-    lazy val scores: Dataset[ScoreRow] = staged(spark, cfg, "scores") {
+    lazy val scores: Dataset[ScoreRow] = persist(staged(spark, cfg, "scores") {
       scoreStage()
-    }.as[ScoreRow].persist(StorageLevel.MEMORY_AND_DISK)
+    }.as[ScoreRow])
 
     private def scoreStage(): DataFrame = {
       // optional pq-gram prefilter: drop candidates whose O(n)-per-tree
@@ -102,16 +111,16 @@ object Pipeline {
     // persist: the clustering families, feedback layer, retract and the
     // edit-script sample all read matches — same multi-consumer rule as
     // scores (without it each reader re-runs the threshold projection)
-    lazy val matches: DataFrame = staged(spark, cfg, "matches") {
+    lazy val matches: DataFrame = persist(staged(spark, cfg, "matches") {
       Scoring.matches(scores)
-    }.persist(StorageLevel.MEMORY_AND_DISK)
+    })
 
     // persist: ~8 queries read clusters (sizes, cohesion, golden, split,
     // eval, nmi, …) — each re-ran the CC finale's groupBy + anti-join
     // from the checkpointed edge set per action before this
-    lazy val clusters: DataFrame = staged(spark, cfg, "clusters") {
+    lazy val clusters: DataFrame = persist(staged(spark, cfg, "clusters") {
       Clustering.connectedComponents(matches, trees.toDF().select($"id"))
-    }.persist(StorageLevel.MEMORY_AND_DISK)
+    })
 
     /** Per-partition lineage/metrics for the parse AND score stages. The
       * accumulator fills when a stage actually executes; on resume it

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Multimodal, Similarity}
+import graft.util.SessionMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,22 +32,22 @@ object SimQueries {
   /** Embedding dimensionality per (session, sfDir) — one head() probe
     * instead of one per lshBuckets call (q_knn_lsh buckets two sides,
     * q_embed_neardup a third; each probe was its own Spark job). */
-  private val dimCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Int]
+  private val dims = SessionMemo { (s, dir: String) =>
+    emb(s, dir).select(col("embedding")).head().getSeq[Float](0).length
+  }
   private def embDim(s: SparkSession, dir: String): Option[Int] =
-    Some(dimCache.getOrElseUpdate((s, dir),
-      emb(s, dir).select(col("embedding")).head().getSeq[Float](0).length))
+    Some(dims(s, dir))
 
   /** The deterministic IVF/k-means quantizer per (session, sfDir,
     * nlist) — q_knn_ivf, q_knn_ivf_full, the semantic-dedup layer and
     * the aux dumps all train the IDENTICAL seeded centroids; one
     * count+collect+Lloyd pass serves them all. */
-  private val centCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), Array[Array[Float]]]
+  private val cents = SessionMemo { (s, key: (String, Int)) =>
+    graft.operators.Similarity.trainCentroids(emb(s, key._1), key._2)
+  }
   private def centroids(s: SparkSession, dir: String,
                         nlist: Int): Option[Array[Array[Float]]] =
-    Some(centCache.getOrElseUpdate((s, dir, nlist),
-      graft.operators.Similarity.trainCentroids(emb(s, dir), nlist)))
+    Some(cents(s, (dir, nlist)))
 
   /** Semantic-dedup pair table shared by q_semdedup_pairs and
     * q_semdedup_keepers — memoized per (session, sfDir) like the
@@ -54,14 +55,10 @@ object SimQueries {
     * the within-cluster cosines once between them. Bench warms it as
     * its own `semdedup_build_sec` line so neither sweep line silently
     * absorbs the build. */
-  private val semPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def semPairs(s: SparkSession, dir: String): DataFrame =
-    semPairsCache.getOrElseUpdate((s, dir),
-      Similarity.semDedupPairs(emb(s, dir), SemNlist, SemMinCosine,
-          centsHint = centroids(s, dir, SemNlist))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+  private val semPairs = SessionMemo { (s, dir: String) =>
+    SessionMemo.persist(Similarity.semDedupPairs(emb(s, dir), SemNlist,
+      SemMinCosine, centsHint = centroids(s, dir, SemNlist)))
+  }
 
   def warmSemDedup(spark: SparkSession, sfDir: String): Unit = {
     semPairs(spark, sfDir).count()

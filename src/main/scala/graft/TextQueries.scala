@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{BlockingScheme, BlockSplit, CandidateGen, Canopy, Decontaminate, Dedup, MatchMerge, Phonetic, PivotClustering, SetSimJoin, SuffixBlocking, TextAnalysis}
 import graft.sources.CorpusGen
+import graft.util.SessionMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -61,6 +62,11 @@ object TextQueries {
       .select(col("id"), array_distinct(transform(
         sequence(lit(0), size(col("tk")) - 3),
         i => concat_ws(" ", slice(col("tk"), i + lit(1), lit(3))))).as("toks"))
+
+  private[graft] final case class SetSimLayer(ordered: DataFrame,
+      jaccard: DataFrame, ppPre: DataFrame, ppPos: DataFrame, ppFin: DataFrame,
+      cosine: DataFrame)
+
   /** Exact set-similarity layer, computed once per (session, sfDir):
     * the rare-first ordered shingle frame (the shuffle-heavy shared
     * stage — tokenize → global token frequencies → per-doc reorder)
@@ -69,27 +75,19 @@ object TextQueries {
     * become cache reads instead of each rebuilding the same ~50 k-doc
     * shingle frame from scratch (round-4 verdict: ~30 s of redundant
     * build per sweep). Bench warms it as setsim_build_sec. */
-  private[graft] object SetSimResults {
-    final case class R(ordered: DataFrame, jaccard: DataFrame,
-                       ppPre: DataFrame, ppPos: DataFrame, ppFin: DataFrame,
-                       cosine: DataFrame)
-    private val cache =
-      scala.collection.concurrent.TrieMap.empty[(SparkSession, String), R]
-    def cached(s: SparkSession, dir: String): R =
-      cache.getOrElseUpdate((s, dir), {
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val ordered = SetSimJoin.rareFirst(setSimDocs(s, dir)).persist(lvl)
-        val (pre, pos, fin) =
-          SetSimJoin.ppjoinStages(ordered, SetSimNum, SetSimDen)
-        R(ordered,
-          SetSimJoin.joinOrdered(ordered, SetSimNum, SetSimDen).persist(lvl),
-          pre.persist(lvl), pos.persist(lvl), fin.persist(lvl),
-          SetSimJoin.cosineJoinOrdered(ordered, CosSimNum, CosSimDen).persist(lvl))
-      })
+  private[graft] val setSimResults = SessionMemo { (s, dir: String) =>
+    import SessionMemo.persist
+    val ordered = persist(SetSimJoin.rareFirst(setSimDocs(s, dir)))
+    val (pre, pos, fin) =
+      SetSimJoin.ppjoinStages(ordered, SetSimNum, SetSimDen)
+    SetSimLayer(ordered,
+      persist(SetSimJoin.joinOrdered(ordered, SetSimNum, SetSimDen)),
+      persist(pre), persist(pos), persist(fin),
+      persist(SetSimJoin.cosineJoinOrdered(ordered, CosSimNum, CosSimDen)))
   }
 
   def warmSetSim(spark: SparkSession, sfDir: String): Unit = {
-    val r = SetSimResults.cached(spark, sfDir)
+    val r = setSimResults(spark, sfDir)
     r.ordered.count(); r.jaccard.count(); r.ppPre.count(); r.ppPos.count()
     r.ppFin.count(); r.cosine.count()
   }
@@ -192,7 +190,7 @@ object TextQueries {
     // threshold, so any prefix-filter completeness bug shows as missing
     // rows.
     "q_setsim_join" -> ((s, dir) => {
-      SetSimResults.cached(s, dir).jaccard
+      setSimResults(s, dir).jaccard
         .select(col("idA"), col("idB"),
           col("isect").cast("long").as("isect"),
           col("union_n").cast("long").as("union_n"), col("jaccard"))
@@ -204,7 +202,7 @@ object TextQueries {
     // q_setsim_join, and the same brute-force oracle proves it
     // independently (not by comparing the two Spark outputs)
     "q_ppjoin" -> ((s, dir) => {
-      SetSimResults.cached(s, dir).ppFin
+      setSimResults(s, dir).ppFin
         .select(col("idA"), col("idB"),
           col("isect").cast("long").as("isect"),
           col("union_n").cast("long").as("union_n"), col("jaccard"))
@@ -217,7 +215,7 @@ object TextQueries {
     // so the filter's correctness AND its measured reduction are both
     // cross-engine-checked
     "q_ppjoin_stats" -> ((s, dir) => {
-      val r = SetSimResults.cached(s, dir)
+      val r = setSimResults(s, dir)
       SetSimJoin.funnelStats(r.ppPre, r.ppPos, r.ppFin)
     }),
 
@@ -227,7 +225,7 @@ object TextQueries {
     // float boundary). Same brute-force C(n,2) oracle shape as the
     // Jaccard twin: a prefix-completeness bug shows as missing rows
     "q_cosine_simjoin" -> ((s, dir) => {
-      SetSimResults.cached(s, dir).cosine
+      setSimResults(s, dir).cosine
         .orderBy(col("idA"), col("idB"))
     }),
 
@@ -359,7 +357,7 @@ object TextQueries {
     // MinHash LSH near-dup candidates on the code corpus (true dups
     // exist there) — verified by DedupSpec, rows-only for the driver
     "q_minhash_neardup" -> ((s, dir) => {
-      MinHashResults.cached(s, dir).pairs.orderBy(col("idA"), col("idB"))
+      minHashResults(s, dir).pairs.orderBy(col("idA"), col("idB"))
     }),
 
     // INCREMENTAL MinHash near-dup: the corpus folded through the
@@ -392,7 +390,7 @@ object TextQueries {
     // the closure with a recursive CTE over the dumped pair set
     "q_neardup_keepers" -> ((s, dir) => {
       Dedup.nearDupKeepers(corpusDf(s, dir), "doc_id",
-          MinHashResults.cached(s, dir).pairs)
+          minHashResults(s, dir).pairs)
         .orderBy(col("doc_id"))
     }),
 
@@ -404,7 +402,7 @@ object TextQueries {
 
     // n-gram Jaccard verification of the MinHash candidates
     "q_ngram_jaccard" -> ((s, dir) => {
-      Dedup.ngramJaccard(MinHashResults.cached(s, dir).pairs,
+      Dedup.ngramJaccard(minHashResults(s, dir).pairs,
           corpusDf(s, dir), "doc_id", "text")
         .orderBy(col("idA"), col("idB"))
     }),
@@ -443,7 +441,7 @@ object TextQueries {
     // The oracle replays the ENTIRE Soundex algorithm in SQL, so the
     // builtin's semantics are verified, not assumed
     "q_soundex_blocks" -> ((s, dir) => {
-      Phonetic.codeBlocks(BlockChanResults.cached(s, dir).vocab)
+      Phonetic.codeBlocks(blockChanResults(s, dir).vocab)
         .orderBy(col("code"))
     }),
 
@@ -454,7 +452,7 @@ object TextQueries {
     // way name fields do (smith/smyth/smithe, ashcraft/ashcroft, ...),
     // including same-code pairs beyond the edit bound (jackson/jaxon)
     "q_phonetic_pairs" -> ((s, dir) => {
-      Phonetic.candidatePairs(BlockChanResults.cached(s, dir).vocab)
+      Phonetic.candidatePairs(blockChanResults(s, dir).vocab)
         .orderBy(col("tokA"), col("tokB"))
     }),
 
@@ -464,7 +462,7 @@ object TextQueries {
     // bound. The oracle regenerates every suffix with a DuckDB list
     // comprehension and recounts
     "q_suffix_blocks" -> ((s, dir) => {
-      SuffixBlocking.blockHistogram(BlockChanResults.cached(s, dir).vocab)
+      SuffixBlocking.blockHistogram(blockChanResults(s, dir).vocab)
         .orderBy(col("n_tokens"))
     }),
 
@@ -474,7 +472,7 @@ object TextQueries {
     // verified. Suffix generation, purge, pair algebra, and
     // verification are ALL replayed by DuckDB
     "q_suffix_pairs" -> ((s, dir) => {
-      SuffixBlocking.candidatePairs(BlockChanResults.cached(s, dir).vocab)
+      SuffixBlocking.candidatePairs(blockChanResults(s, dir).vocab)
         .orderBy(col("tokA"), col("tokB"))
     }),
 
@@ -488,7 +486,7 @@ object TextQueries {
     // unrolled MIS round chain under its own md5 order, the membership
     // join
     "q_canopy" -> ((s, dir) => {
-      BlockChanResults.cached(s, dir).canopies
+      blockChanResults(s, dir).canopies
         .orderBy(col("center"), col("member"))
     }),
 
@@ -543,7 +541,7 @@ object TextQueries {
     // (member rank, block size, D(idx, n) bound, modular partner) from
     // the dumped raw (key, id) table and must reproduce every row
     "q_balanced_pairs" -> ((s, dir) => {
-      BlockSplit.balancedPairs(MinHashResults.cached(s, dir).keyed)
+      BlockSplit.balancedPairs(minHashResults(s, dir).keyed)
         .orderBy(col("key"), col("idA"), col("idB"))
     }),
 
@@ -555,7 +553,7 @@ object TextQueries {
     // (key, id) dump alone: brute pairs from its own self-join, emission
     // counts from its own replay of the circular rule
     "q_balanced_coverage" -> ((s, dir) => {
-      val kd = MinHashResults.cached(s, dir).keyed
+      val kd = minHashResults(s, dir).keyed
         .select(col("key"), col("id")).distinct().localCheckpoint(true)
       val ix = BlockSplit.indexed(kd).localCheckpoint(true)
       val pr = BlockSplit.balancedPairs(kd).localCheckpoint(true)
@@ -616,23 +614,19 @@ object TextQueries {
   )
 
   /** Memoized 3-batch run of the durable streaming-dedup state machine
-    * (fresh temp root per (session, sfDir)); both the q_dedup_stream
+    * (a memo temp root per (session, sfDir)); both the q_dedup_stream
     * query and Bench's warm path share it so the sweep line times a
     * cache read, not the stream build. */
-  private val streamDedupCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def streamDedupPairs(s: SparkSession, dir: String): DataFrame =
-    streamDedupCache.getOrElseUpdate((s, dir), {
-      val root = java.nio.file.Files.createTempDirectory("graft_dstream_q").toString
-      val io = new graft.sources.ParquetTableIO(root)
-      val c = corpusDf(s, dir)
-      var st: graft.streaming.StreamingDedup.DedupState = null
-      for (b <- 0 until IncDedupBatches)
-        st = graft.streaming.StreamingDedup.processBatchBucketed(
-          s, dedupBatch(c, b), "doc_id", "text", io, root, numBuckets = 8)
-      st.pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+  private val streamDedupPairs = SessionMemo { (s, dir: String) =>
+    val root = SessionMemo.tempDir(s, "graft_dstream_q")
+    val io = new graft.sources.ParquetTableIO(root)
+    val c = corpusDf(s, dir)
+    var st: graft.streaming.StreamingDedup.DedupState = null
+    for (b <- 0 until IncDedupBatches)
+      st = graft.streaming.StreamingDedup.processBatchBucketed(
+        s, dedupBatch(c, b), "doc_id", "text", io, root, numBuckets = 8)
+    SessionMemo.persist(st.pairs)
+  }
 
   /** Force the streaming-dedup twin's 3-batch build (Bench line
     * `dstream_build_sec` — same attribution rule as the ER twins). */
@@ -652,7 +646,7 @@ object TextQueries {
     val c = corpusDf(spark, sfDir)
     def dump(df: DataFrame, name: String): Unit =
       df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-    dump(MinHashResults.cached(spark, sfDir).keyed, "minhash_keys")
+    dump(minHashResults(spark, sfDir).keyed, "minhash_keys")
     // the same keys tagged with their q_dedup_incremental batch number:
     // the oracle replays the 3-batch incremental cap/merge/pair algebra
     dump((0 until IncDedupBatches).map(b =>
@@ -1272,7 +1266,7 @@ object TextQueries {
     * stage. */
   private def blockingChannels(s: SparkSession, dir: String)
       : (DataFrame, Seq[(String, DataFrame)], DataFrame) = {
-    val b = BlockChanResults.cached(s, dir)
+    val b = blockChanResults(s, dir)
     (b.vocab, b.chans, b.truth)
   }
 
@@ -1284,53 +1278,43 @@ object TextQueries {
     * q_blocking_quality, q_blocking_scheme and q_canopy each rebuilt
     * all of this from the raw documents per query line (~14 s of
     * triplicated work per sweep — guide §1.2 step 1). */
-  private[graft] object BlockChanResults {
-    final class B(s: SparkSession, dir: String) {
-      private val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      lazy val vocab: DataFrame =
-        Phonetic.vocabulary(phoneticDocs(s, dir), "ptext").localCheckpoint(true)
-      /** canopy membership — shared by q_canopy and the canopy channel */
-      lazy val canopies: DataFrame =
-        Canopy.canopies(Canopy.edges(vocab), vocab).persist(lvl)
-      lazy val ph: DataFrame = Phonetic.candidatePairs(vocab)
-        .select(col("tokA"), col("tokB")).persist(lvl)
-      lazy val sf: DataFrame = SuffixBlocking.candidatePairs(vocab)
-        .select(col("tokA"), col("tokB")).persist(lvl)
-      lazy val cn: DataFrame = Canopy.candidatePairs(canopies).persist(lvl)
-      // the bounded 3-arg levenshtein (banded O(n·k) DP, −1 past the
-      // bound) replaces the full O(n²) DP per pair — this brute-force
-      // diagnostic evaluates |vocab|²/2 pairs, so the kernel is the
-      // whole cost; the kept row set is identical
-      lazy val truth: DataFrame = vocab.select(col("tok").as("tokA"))
-        .crossJoin(vocab.select(col("tok").as("tokB")))
-        .where(col("tokA") < col("tokB") &&
-          levenshtein(col("tokA"), col("tokB"), Phonetic.DefaultMaxLev) >= 0)
-        .persist(lvl)
-      def chans: Seq[(String, DataFrame)] =
-        Seq("soundex" -> ph, "suffix" -> sf, "canopy" -> cn)
-    }
-    private val cache =
-      scala.collection.concurrent.TrieMap.empty[(SparkSession, String), B]
-    def cached(s: SparkSession, dir: String): B =
-      cache.getOrElseUpdate((s, dir), new B(s, dir))
+  private[graft] val blockChanResults = SessionMemo(new BlockChanLayer(_, _: String))
+
+  private[graft] final class BlockChanLayer(s: SparkSession, dir: String) {
+    import SessionMemo.persist
+    lazy val vocab: DataFrame =
+      Phonetic.vocabulary(phoneticDocs(s, dir), "ptext").localCheckpoint(true)
+    /** canopy membership — shared by q_canopy and the canopy channel */
+    lazy val canopies: DataFrame =
+      persist(Canopy.canopies(Canopy.edges(vocab), vocab))
+    lazy val ph: DataFrame = persist(Phonetic.candidatePairs(vocab)
+      .select(col("tokA"), col("tokB")))
+    lazy val sf: DataFrame = persist(SuffixBlocking.candidatePairs(vocab)
+      .select(col("tokA"), col("tokB")))
+    lazy val cn: DataFrame = persist(Canopy.candidatePairs(canopies))
+    // the bounded 3-arg levenshtein (banded O(n·k) DP, −1 past the
+    // bound) replaces the full O(n²) DP per pair — this brute-force
+    // diagnostic evaluates |vocab|²/2 pairs, so the kernel is the
+    // whole cost; the kept row set is identical
+    lazy val truth: DataFrame = persist(vocab.select(col("tok").as("tokA"))
+      .crossJoin(vocab.select(col("tok").as("tokB")))
+      .where(col("tokA") < col("tokB") &&
+        levenshtein(col("tokA"), col("tokB"), Phonetic.DefaultMaxLev) >= 0))
+    def chans: Seq[(String, DataFrame)] =
+      Seq("soundex" -> ph, "suffix" -> sf, "canopy" -> cn)
   }
 
   /** MinHash near-dup layer, computed once per (session, sfDir): the
     * banded (key, id) block index and the capped candidate pairs over
     * it. Five query lines consumed one or the other and each re-ran
     * the full shingle → signature → band pass over the corpus. */
-  private[graft] object MinHashResults {
-    final class M(s: SparkSession, dir: String) {
-      private val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      lazy val keyed: DataFrame =
-        Dedup.minHashKeyed(corpusDf(s, dir), "doc_id", "text").persist(lvl)
-      lazy val pairs: DataFrame =
-        CandidateGen.pairsFromKeys(keyed, Dedup.MinHashParams().cap).persist(lvl)
-    }
-    private val cache =
-      scala.collection.concurrent.TrieMap.empty[(SparkSession, String), M]
-    def cached(s: SparkSession, dir: String): M =
-      cache.getOrElseUpdate((s, dir), new M(s, dir))
+  private[graft] val minHashResults = SessionMemo(new MinHashLayer(_, _: String))
+
+  private[graft] final class MinHashLayer(s: SparkSession, dir: String) {
+    lazy val keyed: DataFrame = SessionMemo.persist(
+      Dedup.minHashKeyed(corpusDf(s, dir), "doc_id", "text"))
+    lazy val pairs: DataFrame = SessionMemo.persist(
+      CandidateGen.pairsFromKeys(keyed, Dedup.MinHashParams().cap))
   }
 
   private def authorSql: String =

@@ -154,7 +154,7 @@ class FellegiSunterSpec extends AnyFunSuite {
     // the assessment set (LSH ∪ SNM, SNM supplying true non-matches) and
     // the fit come from the shared query-layer cache — the same objects
     // the er_fs_* oracle rows check
-    val fs = ErQueries.FsResults.cached(spark, "/root/testdata/sf0.001")
+    val fs = ErQueries.fsResults(spark, "/root/testdata/sf0.001")
     val params = fs.params
     // the match class must sit on the agreeing side for the strong
     // fields (ted_close, lang_eq); name_eq is negatively informative on
@@ -230,7 +230,7 @@ class FellegiSunterSpec extends AnyFunSuite {
   }
 
   test("pipeline integration: ternary FS decisions stay >= 0.98 F1 under injected missingness") {
-    val fsm = ErQueries.FsMissingResults.cached(spark, "/root/testdata/sf0.001")
+    val fsm = ErQueries.fsMissingResults(spark, "/root/testdata/sf0.001")
     // the three channels really fire (rates > 0) and the strong fields
     // stay informative
     val rates = fsm.vectors.agg(

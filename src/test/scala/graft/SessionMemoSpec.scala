@@ -1,0 +1,107 @@
+package graft
+
+import graft.util.SessionMemo
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.mutable
+
+/** The one memo every shared layer goes through: one build per
+  * (session, key), a separate build per session, and `release` leaving
+  * nothing a session's layers hold behind — no memo entry, no persisted
+  * frame or RDD a frame reads, no temp dir. */
+class SessionMemoSpec extends AnyFunSuite {
+  lazy val spark: SparkSession = SparkTestSession.spark
+  private val dir = "/root/testdata/sf0.001"
+
+  private final class Counted {
+    val builds = new AtomicInteger()
+    val memo = SessionMemo { (_, key: String) => builds.incrementAndGet(); new Object }
+  }
+
+  test("the same (session, key) returns the same instance, built once") {
+    val c = new Counted
+    val s = spark.newSession()
+    val a = c.memo(s, "k")
+    assert(c.memo(s, "k") eq a)
+    assert(c.builds.get === 1)
+    assert(c.memo(s, "other") ne a)
+    assert(c.builds.get === 2)
+    SessionMemo.release(s)
+  }
+
+  test("a new session gets its own build") {
+    val c = new Counted
+    val (s1, s2) = (spark.newSession(), spark.newSession())
+    val a = c.memo(s1, "k")
+    val b = c.memo(s2, "k")
+    assert(b ne a)
+    assert(c.builds.get === 2)
+    assert(c.memo(s2, "k") eq b)
+    SessionMemo.release(s2)
+    assert(c.memo(s1, "k") eq a, "releasing one session keeps the other's entry")
+    SessionMemo.release(s1)
+  }
+
+  /** Ids of the persisted RDDs `df`'s plan reads. */
+  private def readIds(df: DataFrame): Set[Int] = {
+    val ids = mutable.Set.empty[Int]
+    def lineage(r: RDD[_]): Unit = {
+      if (r.getStorageLevel.isValid) ids += r.id
+      r.dependencies.foreach(d => lineage(d.rdd))
+    }
+    df.queryExecution.analyzed.foreach {
+      case l: LogicalRDD => lineage(l.rdd)
+      case _ =>
+    }
+    ids.toSet
+  }
+
+  /** Builds and forces five layers in `s`. Returns the session's temp
+    * dir and the persisted RDDs the layers' frames read; no reference
+    * to a layer outlives the call. */
+  private def buildLayers(s: SparkSession): (java.io.File, Set[Int]) = {
+    ErQueries.warm(s, dir)
+    ErQueries.warmPq(s, dir)
+    val r = ErQueries.results(s, dir)
+    val pq = ErQueries.pqResults(s, dir)
+    val snm = ErQueries.snmResults(s, dir)
+    val m = ErQueries.metaResults(s, dir)
+    snm.count(); m.weights.count(); m.pruned.count()
+    val hashmin = ErQueries.clusterResults(s, dir).hashmin
+    hashmin.count()
+    val frames = Seq(r.trees.toDF(), r.pairs, r.scores.toDF(), r.matches,
+      r.clusters, pq.profiles, pq.blockKeys, pq.pairs, snm, m.weights,
+      m.pruned, hashmin)
+    val tmp = new java.io.File(SessionMemo.tempDir(s, "graft_memo_spec"))
+    assert(tmp.isDirectory)
+    (tmp, frames.flatMap(readIds).toSet)
+  }
+
+  test("release unpersists, deletes and evicts what both sessions' layers hold") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val sessions = Seq(spark.newSession(), spark.newSession())
+    val (dirs, read) = sessions.map(buildLayers).unzip
+    val c = new Counted
+    sessions.foreach(c.memo(_, dir))
+    val persisted = sc.getPersistentRDDs.keySet.toSet -- before
+    val checkpointsRead = read.flatten.toSet
+    assert(checkpointsRead.nonEmpty && checkpointsRead.subsetOf(persisted))
+
+    sessions.foreach(SessionMemo.release)
+    dirs.foreach(d => assert(!d.exists(), s"$d survived release"))
+    val left = sc.getPersistentRDDs.filter { case (id, _) => persisted(id) }
+    assert(left.keySet.intersect(checkpointsRead).isEmpty,
+      "a released frame's local checkpoints are still persisted")
+    // what may stay is only a local checkpoint of a round no layer reads
+    left.values.foreach(r => assert(r.toDebugString.contains("LocalCheckpointRDD"),
+      s"still persisted after release: ${r.toDebugString}"))
+    // evicted: the next call in either session is a new build
+    sessions.foreach(c.memo(_, dir))
+    assert(c.builds.get === 4)
+    sessions.foreach(SessionMemo.release)
+  }
+}

@@ -1,5 +1,6 @@
 package graft
 
+import graft.SparkTestSession.withTempRoot
 import graft.operators.IncrementalAgg
 import graft.sources.ParquetTableIO
 import graft.streaming.StreamingAgg
@@ -26,33 +27,35 @@ class StreamingAggSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_sagg").toString
-    val io = new ParquetTableIO(root)
-    val rows = events.select($"event_type", $"value").as[(String, Double)].collect()
-    val stream = MemoryStream[(String, Double)]
-    val q = StreamingAgg.start(stream.toDS().toDF("event_type", "value"),
-      Seq("event_type"), Seq("value"), io, s"$root/_ckpt")
-    try {
-      rows.grouped((rows.length + 2) / 3).foreach { chunk =>
-        stream.addData(chunk.toSeq); q.processAllAvailable()
-      }
-    } finally q.stop()
-    assert(StreamingAgg.latestGen(spark, io).contains(2L))
-    assert(asMap(StreamingAgg.state(spark, io).get) == full)
+    withTempRoot("graft_sagg") { root =>
+      val io = new ParquetTableIO(root)
+      val rows = events.select($"event_type", $"value").as[(String, Double)].collect()
+      val stream = MemoryStream[(String, Double)]
+      val q = StreamingAgg.start(stream.toDS().toDF("event_type", "value"),
+        Seq("event_type"), Seq("value"), io, s"$root/_ckpt")
+      try {
+        rows.grouped((rows.length + 2) / 3).foreach { chunk =>
+          stream.addData(chunk.toSeq); q.processAllAvailable()
+        }
+      } finally q.stop()
+      assert(StreamingAgg.latestGen(spark, io).contains(2L))
+      assert(asMap(StreamingAgg.state(spark, io).get) == full)
+    }
   }
 
   test("replaying a batch recomputes its generation from the prior one — no double count") {
-    val root = java.nio.file.Files.createTempDirectory("graft_saggrep").toString
-    val io = new ParquetTableIO(root)
-    val b0 = events.where(col("event_id") % 2 === 0)
-    val b1 = events.where(col("event_id") % 2 =!= 0)
-    StreamingAgg.processBatch(b0, 0L, Seq("event_type"), Seq("value"), io)
-    StreamingAgg.processBatch(b1, 1L, Seq("event_type"), Seq("value"), io)
-    val before = asMap(StreamingAgg.state(spark, io).get)
-    // at-least-once: batch 1 re-delivered — must fold into gen 0 again,
-    // not into its own complete gen 1 output
-    StreamingAgg.processBatch(b1, 1L, Seq("event_type"), Seq("value"), io)
-    assert(asMap(StreamingAgg.state(spark, io).get) == before)
-    assert(before == full)
+    withTempRoot("graft_saggrep") { root =>
+      val io = new ParquetTableIO(root)
+      val b0 = events.where(col("event_id") % 2 === 0)
+      val b1 = events.where(col("event_id") % 2 =!= 0)
+      StreamingAgg.processBatch(b0, 0L, Seq("event_type"), Seq("value"), io)
+      StreamingAgg.processBatch(b1, 1L, Seq("event_type"), Seq("value"), io)
+      val before = asMap(StreamingAgg.state(spark, io).get)
+      // at-least-once: batch 1 re-delivered — must fold into gen 0 again,
+      // not into its own complete gen 1 output
+      StreamingAgg.processBatch(b1, 1L, Seq("event_type"), Seq("value"), io)
+      assert(asMap(StreamingAgg.state(spark, io).get) == before)
+      assert(before == full)
+    }
   }
 }

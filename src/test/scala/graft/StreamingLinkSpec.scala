@@ -1,5 +1,6 @@
 package graft
 
+import graft.SparkTestSession.withTempRoot
 import graft.operators.OneToOneMatching
 import graft.streaming.StreamingLink
 import org.apache.spark.sql.DataFrame
@@ -49,59 +50,61 @@ class StreamingLinkSpec extends AnyFunSuite {
   }
 
   test("durable fold: kill-and-resume, half-written generations skipped, GC keeps retain, fold == batch") {
-    val root = java.nio.file.Files.createTempDirectory("graft_slink").toString
-    val io = new graft.sources.ParquetTableIO(root)
-    val b1 = Seq(("l1", "r1", 3.0), ("l2", "r2", 2.0))
-    val b2 = Seq(("l3", "r1", 5.0), ("l2", "r3", 4.0))
-    val b3 = Seq(("l1", "r4", 9.0), ("l4", "r2", 1.0))
-    // two batches, then "crash" — each call resumes purely from storage
-    StreamingLink.updateDurable(spark, toDf(b1), io)
-    StreamingLink.updateDurable(spark, toDf(b2), io)
-    val (resumed, k) = StreamingLink.resumeState(spark, io, "slink")
-    assert(k == 2 && resumed.get.batches == 2)
-    assert(collectMatched(resumed.get.matched) ==
-      OneToOneMatching.sequentialGreedy(b1 ++ b2).toSet)
-    // a crash between the two writes leaves a HALF generation: the
-    // resume scan must refuse it and the retried batch overwrite it
-    io.write(toDf(b3), "slink_edges_b2")
-    val (afterCrash, k2) = StreamingLink.resumeState(spark, io, "slink")
-    assert(k2 == 2 && afterCrash.get.batches == 2, "half generation must not resume")
-    val st3 = StreamingLink.updateDurable(spark, toDf(b3), io, retain = 1)
-    assert(st3.batches == 3)
-    assert(collectMatched(st3.matched) ==
-      OneToOneMatching.sequentialGreedy(b1 ++ b2 ++ b3).toSet)
-    // retain = 1 at generation 2 pruned generations <= 1 — and the
-    // directory-listing resume still lands on the latest complete
-    // generation instead of restarting from empty past the hole
-    assert(!io.exists(spark, "slink_edges_b0") &&
-      !io.exists(spark, "slink_edges_b1"), "old generations must be GC'd")
-    val (fin, k3) = StreamingLink.resumeState(spark, io, "slink")
-    assert(k3 == 3 && fin.get.batches == 3,
-      "resume must survive pruned early generations")
-    assert(collectMatched(fin.get.matched) == collectMatched(st3.matched))
+    withTempRoot("graft_slink") { root =>
+      val io = new graft.sources.ParquetTableIO(root)
+      val b1 = Seq(("l1", "r1", 3.0), ("l2", "r2", 2.0))
+      val b2 = Seq(("l3", "r1", 5.0), ("l2", "r3", 4.0))
+      val b3 = Seq(("l1", "r4", 9.0), ("l4", "r2", 1.0))
+      // two batches, then "crash" — each call resumes purely from storage
+      StreamingLink.updateDurable(spark, toDf(b1), io)
+      StreamingLink.updateDurable(spark, toDf(b2), io)
+      val (resumed, k) = StreamingLink.resumeState(spark, io, "slink")
+      assert(k == 2 && resumed.get.batches == 2)
+      assert(collectMatched(resumed.get.matched) ==
+        OneToOneMatching.sequentialGreedy(b1 ++ b2).toSet)
+      // a crash between the two writes leaves a HALF generation: the
+      // resume scan must refuse it and the retried batch overwrite it
+      io.write(toDf(b3), "slink_edges_b2")
+      val (afterCrash, k2) = StreamingLink.resumeState(spark, io, "slink")
+      assert(k2 == 2 && afterCrash.get.batches == 2, "half generation must not resume")
+      val st3 = StreamingLink.updateDurable(spark, toDf(b3), io, retain = 1)
+      assert(st3.batches == 3)
+      assert(collectMatched(st3.matched) ==
+        OneToOneMatching.sequentialGreedy(b1 ++ b2 ++ b3).toSet)
+      // retain = 1 at generation 2 pruned generations <= 1 — and the
+      // directory-listing resume still lands on the latest complete
+      // generation instead of restarting from empty past the hole
+      assert(!io.exists(spark, "slink_edges_b0") &&
+        !io.exists(spark, "slink_edges_b1"), "old generations must be GC'd")
+      val (fin, k3) = StreamingLink.resumeState(spark, io, "slink")
+      assert(k3 == 3 && fin.get.batches == 3,
+        "resume must survive pruned early generations")
+      assert(collectMatched(fin.get.matched) == collectMatched(st3.matched))
+    }
   }
 
   test("GC reclaims a generation remnant that lost its _SUCCESS marker") {
-    val root = java.nio.file.Files.createTempDirectory("graft_slinkgc").toString
-    val io = new graft.sources.ParquetTableIO(root)
-    val b = (i: Int) => Seq((s"l$i", s"r$i", i.toDouble))
-    StreamingLink.updateDurable(spark, toDf(b(1)), io)
-    StreamingLink.updateDurable(spark, toDf(b(2)), io)
-    // simulate a crashed delete: generation 0's edges table lost its
-    // _SUCCESS but kept data files — a complete-only listing would
-    // never show it to any later prune (permanent storage leak)
-    val g0 = new java.io.File(root, "slink_edges_b0")
-    assert(new java.io.File(g0, "_SUCCESS").delete())
-    assert(g0.exists())
-    StreamingLink.updateDurable(spark, toDf(b(3)), io, retain = 1)
-    assert(!g0.exists(), "un-gated generation remnant must still be GC'd")
-    // and the ungated remnant never participated in the resume
-    val (fin, k) = StreamingLink.resumeState(spark, io, "slink")
-    assert(k == 3 && fin.get.batches == 3)
-    // retain = 0 is refused loudly, not honored destructively
-    val e = intercept[IllegalArgumentException] {
-      StreamingLink.updateDurable(spark, toDf(b(4)), io, retain = 0) }
-    assert(e.getMessage.contains("retain"))
+    withTempRoot("graft_slinkgc") { root =>
+      val io = new graft.sources.ParquetTableIO(root)
+      val b = (i: Int) => Seq((s"l$i", s"r$i", i.toDouble))
+      StreamingLink.updateDurable(spark, toDf(b(1)), io)
+      StreamingLink.updateDurable(spark, toDf(b(2)), io)
+      // simulate a crashed delete: generation 0's edges table lost its
+      // _SUCCESS but kept data files — a complete-only listing would
+      // never show it to any later prune (permanent storage leak)
+      val g0 = new java.io.File(root, "slink_edges_b0")
+      assert(new java.io.File(g0, "_SUCCESS").delete())
+      assert(g0.exists())
+      StreamingLink.updateDurable(spark, toDf(b(3)), io, retain = 1)
+      assert(!g0.exists(), "un-gated generation remnant must still be GC'd")
+      // and the ungated remnant never participated in the resume
+      val (fin, k) = StreamingLink.resumeState(spark, io, "slink")
+      assert(k == 3 && fin.get.batches == 3)
+      // retain = 0 is refused loudly, not honored destructively
+      val e = intercept[IllegalArgumentException] {
+        StreamingLink.updateDurable(spark, toDf(b(4)), io, retain = 0) }
+      assert(e.getMessage.contains("retain"))
+    }
   }
 
   test("re-scored pair deterministically upgrades to the max weight") {

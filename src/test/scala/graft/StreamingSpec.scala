@@ -1,5 +1,6 @@
 package graft
 
+import graft.SparkTestSession.withTempRoot
 import graft.streaming.StreamingIngest
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -74,42 +75,43 @@ class StreamingSpec extends AnyFunSuite {
     // append windows → parquet sink, with checkpointLocation on durable
     // storage; a NEW query incarnation must continue from the commit log
     // and never re-emit a finalized window
-    val base = java.nio.file.Files.createTempDirectory("graft_append_ckpt").toString
-    val (srcDir, ckpt, sinkDir) = (s"$base/src", s"$base/ckpt", s"$base/sink")
-    new java.io.File(srcDir).mkdirs()
-    val schema = StructType(Seq(StructField("ts", TimestampType),
-      StructField("event_type", StringType), StructField("value", DoubleType)))
-    def ts(min: Int): java.sql.Timestamp = new java.sql.Timestamp(min * 60L * 1000L)
-    def writeBatch(rows: Seq[(java.sql.Timestamp, String, Double)]): Unit =
-      rows.toDF("ts", "event_type", "value").coalesce(1)
-        .write.mode("append").parquet(srcDir)
-    def startQuery() =
-      StreamingIngest.windowedAgg(spark.readStream.schema(schema).parquet(srcDir))
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", sinkDir).option("checkpointLocation", ckpt).start()
+    withTempRoot("graft_append_ckpt") { base =>
+      val (srcDir, ckpt, sinkDir) = (s"$base/src", s"$base/ckpt", s"$base/sink")
+      new java.io.File(srcDir).mkdirs()
+      val schema = StructType(Seq(StructField("ts", TimestampType),
+        StructField("event_type", StringType), StructField("value", DoubleType)))
+      def ts(min: Int): java.sql.Timestamp = new java.sql.Timestamp(min * 60L * 1000L)
+      def writeBatch(rows: Seq[(java.sql.Timestamp, String, Double)]): Unit =
+        rows.toDF("ts", "event_type", "value").coalesce(1)
+          .write.mode("append").parquet(srcDir)
+      def startQuery() =
+        StreamingIngest.windowedAgg(spark.readStream.schema(schema).parquet(srcDir))
+          .writeStream.outputMode("append").format("parquet")
+          .option("path", sinkDir).option("checkpointLocation", ckpt).start()
 
-    // incarnation 1: windows [0,5) and [5,10) plus an event at 16 min —
-    // watermark 6 min finalizes [0,5) only
-    writeBatch(Seq((ts(1), "a", 1.0), (ts(2), "a", 2.0), (ts(6), "a", 4.0),
-      (ts(16), "a", 8.0)))
-    val q1 = startQuery()
-    try q1.processAllAvailable() finally q1.stop()
-    val afterQ1 = spark.read.parquet(sinkDir).select($"win_start".cast("long"))
-      .as[Long].collect().toSeq
-    assert(afterQ1.sorted == Seq(0L), s"incarnation 1 should emit exactly [0,5): $afterQ1")
+      // incarnation 1: windows [0,5) and [5,10) plus an event at 16 min —
+      // watermark 6 min finalizes [0,5) only
+      writeBatch(Seq((ts(1), "a", 1.0), (ts(2), "a", 2.0), (ts(6), "a", 4.0),
+        (ts(16), "a", 8.0)))
+      val q1 = startQuery()
+      try q1.processAllAvailable() finally q1.stop()
+      val afterQ1 = spark.read.parquet(sinkDir).select($"win_start".cast("long"))
+        .as[Long].collect().toSeq
+      assert(afterQ1.sorted == Seq(0L), s"incarnation 1 should emit exactly [0,5): $afterQ1")
 
-    // incarnation 2: NEW query, same checkpoint; an event at 31 min moves
-    // the watermark to 21 min → [5,10) and [15,20) finalize; [0,5) must
-    // NOT be re-emitted even though its source file is re-listable
-    writeBatch(Seq((ts(31), "a", 16.0)))
-    val q2 = startQuery()
-    try q2.processAllAvailable() finally q2.stop()
-    val sink = spark.read.parquet(sinkDir)
-      .select($"win_start".cast("long"), $"event_type", $"n", $"sum_value")
-      .as[(Long, String, Long, Double)].collect().toSeq
-    assert(sink.toSet == Set(
-      (0L, "a", 2L, 3.0), (300L, "a", 1L, 4.0), (900L, "a", 1L, 8.0)))
-    assert(sink.size == sink.toSet.size, s"duplicate window emission across restart: $sink")
+      // incarnation 2: NEW query, same checkpoint; an event at 31 min moves
+      // the watermark to 21 min → [5,10) and [15,20) finalize; [0,5) must
+      // NOT be re-emitted even though its source file is re-listable
+      writeBatch(Seq((ts(31), "a", 16.0)))
+      val q2 = startQuery()
+      try q2.processAllAvailable() finally q2.stop()
+      val sink = spark.read.parquet(sinkDir)
+        .select($"win_start".cast("long"), $"event_type", $"n", $"sum_value")
+        .as[(Long, String, Long, Double)].collect().toSeq
+      assert(sink.toSet == Set(
+        (0L, "a", 2L, 3.0), (300L, "a", 1L, 4.0), (900L, "a", 1L, 8.0)))
+      assert(sink.size == sink.toSet.size, s"duplicate window emission across restart: $sink")
+    }
   }
 
   test("sessionization: flatMapGroupsWithState closes sessions on in-stream gaps and event-time timeout") {

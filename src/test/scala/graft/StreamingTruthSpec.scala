@@ -1,5 +1,6 @@
 package graft
 
+import graft.SparkTestSession.withTempRoot
 import graft.operators.TruthDiscovery
 import graft.streaming.StreamingTruth
 import org.apache.spark.sql.DataFrame
@@ -69,49 +70,50 @@ class StreamingTruthSpec extends AnyFunSuite {
   }
 
   test("durable fold: kill-and-resume, half-written generations skipped, GC keeps retain, fold == batch") {
-    val root = java.nio.file.Files.createTempDirectory("graft_struth").toString
-    val io = new graft.sources.ParquetTableIO(root)
-    val b1 = Seq(("s1", "e1", "a"), ("s2", "e1", "b"), ("s2", "e2", "c"))
-    val b2 = Seq(("s3", "e1", "a"), ("s1", "e2", "c"))
-    val b3 = Seq(("s3", "e2", "d"), ("s1", "e3", "x"))
-    StreamingTruth.updateDurable(spark, toDf(b1), io)
-    StreamingTruth.updateDurable(spark, toDf(b2), io)
-    // "crash": a fresh resume must see exactly 2 complete generations
-    val (resumed, k) = StreamingTruth.resumeState(spark, io, "struth")
-    assert(k === 2 && resumed.get.batches === 2)
-    assert(resolvedSet(resumed.get.resolved) ===
-      resolvedSet(TruthDiscovery.resolve(toDf(b1 ++ b2))))
-    // a crash between the generation's writes leaves a HALF generation:
-    // the resume scan must refuse it and the retried batch overwrite it
-    io.write(toDf(b3), "struth_claims_b2")
-    val (afterCrash, k2) = StreamingTruth.resumeState(spark, io, "struth")
-    assert(k2 === 2 && afterCrash.get.batches === 2, "half generation must not resume")
-    val st3 = StreamingTruth.updateDurable(spark, toDf(b3), io, retain = 1)
-    assert(st3.batches === 3)
-    assert(resolvedSet(st3.resolved) ===
-      resolvedSet(TruthDiscovery.resolve(toDf(b1 ++ b2 ++ b3))))
-    // retain = 1 at generation 2 pruned generations <= 1 — and the
-    // directory-listing resume still lands on the latest complete
-    // generation instead of restarting from empty past the hole
-    assert(!io.exists(spark, "struth_claims_b0") &&
-      !io.exists(spark, "struth_claims_b1"), "old generations must be GC'd")
-    val (fin, k3) = StreamingTruth.resumeState(spark, io, "struth")
-    assert(k3 === 3 && fin.get.batches === 3,
-      "resume must survive pruned early generations")
-    assert(resolvedSet(fin.get.resolved) === resolvedSet(st3.resolved))
+    withTempRoot("graft_struth") { root =>
+      val io = new graft.sources.ParquetTableIO(root)
+      val b1 = Seq(("s1", "e1", "a"), ("s2", "e1", "b"), ("s2", "e2", "c"))
+      val b2 = Seq(("s3", "e1", "a"), ("s1", "e2", "c"))
+      val b3 = Seq(("s3", "e2", "d"), ("s1", "e3", "x"))
+      StreamingTruth.updateDurable(spark, toDf(b1), io)
+      StreamingTruth.updateDurable(spark, toDf(b2), io)
+      // "crash": a fresh resume must see exactly 2 complete generations
+      val (resumed, k) = StreamingTruth.resumeState(spark, io, "struth")
+      assert(k === 2 && resumed.get.batches === 2)
+      assert(resolvedSet(resumed.get.resolved) ===
+        resolvedSet(TruthDiscovery.resolve(toDf(b1 ++ b2))))
+      // a crash between the generation's writes leaves a HALF generation:
+      // the resume scan must refuse it and the retried batch overwrite it
+      io.write(toDf(b3), "struth_claims_b2")
+      val (afterCrash, k2) = StreamingTruth.resumeState(spark, io, "struth")
+      assert(k2 === 2 && afterCrash.get.batches === 2, "half generation must not resume")
+      val st3 = StreamingTruth.updateDurable(spark, toDf(b3), io, retain = 1)
+      assert(st3.batches === 3)
+      assert(resolvedSet(st3.resolved) ===
+        resolvedSet(TruthDiscovery.resolve(toDf(b1 ++ b2 ++ b3))))
+      // retain = 1 at generation 2 pruned generations <= 1 — and the
+      // directory-listing resume still lands on the latest complete
+      // generation instead of restarting from empty past the hole
+      assert(!io.exists(spark, "struth_claims_b0") &&
+        !io.exists(spark, "struth_claims_b1"), "old generations must be GC'd")
+      val (fin, k3) = StreamingTruth.resumeState(spark, io, "struth")
+      assert(k3 === 3 && fin.get.batches === 3,
+        "resume must survive pruned early generations")
+      assert(resolvedSet(fin.get.resolved) === resolvedSet(st3.resolved))
+    }
   }
 
   test("corpus model: the 3-batch fold (with redelivery) lands on the batch resolution") {
     val s = spark
-    val st = ErQueries.StreamTruthResults.cached(s, "/root/testdata/sf0.001")
+    val st = ErQueries.streamTruthResults(s, "/root/testdata/sf0.001")
     assert(st.batches === ErQueries.StreamTruthBatches)
     // the fold's cumulative claims must be exactly the model's claims
-    val batchClaims = ErQueries.TruthResults.cached(s, "/root/testdata/sf0.001")
+    val batchClaims = ErQueries.truthResults(s, "/root/testdata/sf0.001")
       .claims.select(col("source"), col("entity"), col("value"))
     assert(st.claims.count() === batchClaims.count())
     assert(st.claims.except(batchClaims).count() === 0L)
     // and the resolution matches the batch fixpoint's 50/50 pin
-    val truth = ErQueries.TruthResults.cached(s, "/root/testdata/sf0.001")
+    val truth = ErQueries.truthResults(s, "/root/testdata/sf0.001")
       .claims.select(col("entity"), col("truth")).distinct()
     val correct = st.resolved.join(truth, "entity")
       .agg(sum(when(col("value") === col("truth"), 1L).otherwise(0L)),

@@ -178,7 +178,7 @@ class TruthDiscoverySpec extends AnyFunSuite {
 
   test("corpus model pins: 50/50 resolved vs 33/50 vote; trust halves separated") {
     val s = spark
-    val claims = ErQueries.TruthResults.cached(s, "/root/testdata/sf0.001").claims
+    val claims = ErQueries.truthResults(s, "/root/testdata/sf0.001").claims
     val res = TruthDiscovery.resolve(claims)
     val truth = claims.select(col("entity"), col("truth")).distinct()
     val inv = res.join(truth, "entity")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.SparkTestSession.withTempRoot
 import graft.operators.Upsert
 import graft.sources.ParquetTableIO
 import org.apache.spark.sql.functions._
@@ -36,29 +37,30 @@ class UpsertSpec extends AnyFunSuite {
 
   test("partitioned write prunes to the filtered partition at planning time") {
     import org.apache.spark.sql.execution.FormattedMode
-    val root = java.nio.file.Files.createTempDirectory("graft_part").toString
-    val io = new ParquetTableIO(root)
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    io.writePartitioned(docs, "docs_by_lang", Seq("lang"))
+    withTempRoot("graft_part") { root =>
+      val io = new ParquetTableIO(root)
+      val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      io.writePartitioned(docs, "docs_by_lang", Seq("lang"))
 
-    val q = io.read(spark, "docs_by_lang").where(col("lang") === "es")
-    val plan = q.queryExecution.explainString(FormattedMode)
-    // the lang predicate must be a PartitionFilter (directory prune),
-    // not a row-level PushedFilter over every file
-    assert(plan.contains("PartitionFilters") &&
-      plan.linesIterator.exists(l => l.contains("PartitionFilters") && l.contains("lang")),
-      s"lang filter not applied at partition level\n$plan")
-    // and the pruned scan must actually read only the one partition
-    def partitionsRead(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.executedPlan.collectLeaves()
-        .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.selectedPartitions.partitionCount.toLong }.sum
-    val scannedFiles = partitionsRead(q)
-    val allFiles = partitionsRead(io.read(spark, "docs_by_lang"))
-    assert(scannedFiles < allFiles, s"pruning read $scannedFiles of $allFiles files")
-    // value-correct roundtrip (partition column restored from the path)
-    val expected = docs.where(col("lang") === "es").count()
-    assert(q.count() == expected)
+      val q = io.read(spark, "docs_by_lang").where(col("lang") === "es")
+      val plan = q.queryExecution.explainString(FormattedMode)
+      // the lang predicate must be a PartitionFilter (directory prune),
+      // not a row-level PushedFilter over every file
+      assert(plan.contains("PartitionFilters") &&
+        plan.linesIterator.exists(l => l.contains("PartitionFilters") && l.contains("lang")),
+        s"lang filter not applied at partition level\n$plan")
+      // and the pruned scan must actually read only the one partition
+      def partitionsRead(df: org.apache.spark.sql.DataFrame): Long =
+        df.queryExecution.executedPlan.collectLeaves()
+          .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+            f.selectedPartitions.partitionCount.toLong }.sum
+      val scannedFiles = partitionsRead(q)
+      val allFiles = partitionsRead(io.read(spark, "docs_by_lang"))
+      assert(scannedFiles < allFiles, s"pruning read $scannedFiles of $allFiles files")
+      // value-correct roundtrip (partition column restored from the path)
+      val expected = docs.where(col("lang") === "es").count()
+      assert(q.count() == expected)
+    }
   }
 
   // ---- SCD type-2 -------------------------------------------------------

@@ -1,5 +1,6 @@
 package graft
 
+import graft.SparkTestSession.withTempRoot
 import graft.operators.ZOrder
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
@@ -57,30 +58,31 @@ class ZOrderSpec extends AnyFunSuite {
 
   test("pruned read ≡ full-scan filter, with planning-time partition pruning in the plan") {
     val (xmn, xmx, ymn, ymx) = st
-    val root = java.nio.file.Files.createTempDirectory("graft_zorder").toString
-    ZOrder.writeZOrdered(pts, root, col("x"), col("y"), xmn, xmx, ymn, ymx)
-    val index = ZOrder.minMaxIndex(
-      ZOrder.withZFile(pts, col("x"), col("y"), xmn, xmx, ymn, ymx),
-      "zfile", col("x"), col("y"))
-    val xr = Some((xmn + (xmx - xmn) * 45 / 100, xmn + (xmx - xmn) * 55 / 100))
-    val yr = Some((ymn + (ymx - ymn) * 45 / 100, ymn + (ymx - ymn) * 55 / 100))
-    val boxPred = col("x").between(xr.get._1, xr.get._2) &&
-      col("y").between(yr.get._1, yr.get._2)
+    withTempRoot("graft_zorder") { root =>
+      ZOrder.writeZOrdered(pts, root, col("x"), col("y"), xmn, xmx, ymn, ymx)
+      val index = ZOrder.minMaxIndex(
+        ZOrder.withZFile(pts, col("x"), col("y"), xmn, xmx, ymn, ymx),
+        "zfile", col("x"), col("y"))
+      val xr = Some((xmn + (xmx - xmn) * 45 / 100, xmn + (xmx - xmn) * 55 / 100))
+      val yr = Some((ymn + (ymx - ymn) * 45 / 100, ymn + (ymx - ymn) * 55 / 100))
+      val boxPred = col("x").between(xr.get._1, xr.get._2) &&
+        col("y").between(yr.get._1, yr.get._2)
 
-    val pruned = ZOrder.prunedRead(spark, root, index, xr, yr).where(boxPred)
-    val full = spark.read.parquet(root).where(boxPred)
-    // exactness: pruning by the min/max envelope loses nothing
-    assert(pruned.count() == full.count())
-    assert(pruned.select(col("x"), col("y"), col("l_linenumber"))
-      .except(full.select(col("x"), col("y"), col("l_linenumber"))).isEmpty)
+      val pruned = ZOrder.prunedRead(spark, root, index, xr, yr).where(boxPred)
+      val full = spark.read.parquet(root).where(boxPred)
+      // exactness: pruning by the min/max envelope loses nothing
+      assert(pruned.count() == full.count())
+      assert(pruned.select(col("x"), col("y"), col("l_linenumber"))
+        .except(full.select(col("x"), col("y"), col("l_linenumber"))).isEmpty)
 
-    val s = pruned.queryExecution.explainString(FormattedMode)
-    assert(s.contains("PartitionFilters") && s.contains("zfile"),
-      s"zfile partition filter missing from scan\n$s")
-    // and the prune is real: fewer partition dirs read than exist
-    val nAll = index.count()
-    val nRead = ZOrder.overlappingFiles(index, "zfile", xr, yr).count()
-    assert(nRead < nAll / 4, s"box read $nRead of $nAll partitions — not selective")
+      val s = pruned.queryExecution.explainString(FormattedMode)
+      assert(s.contains("PartitionFilters") && s.contains("zfile"),
+        s"zfile partition filter missing from scan\n$s")
+      // and the prune is real: fewer partition dirs read than exist
+      val nAll = index.count()
+      val nRead = ZOrder.overlappingFiles(index, "zfile", xr, yr).count()
+      assert(nRead < nAll / 4, s"box read $nRead of $nAll partitions — not selective")
+    }
   }
 
   test("KLL tile sidecar: guaranteed min/max prune + in-bounds cardinality per tile") {
@@ -147,21 +149,22 @@ class ZOrderSpec extends AnyFunSuite {
     // the same bucket-partitioned shape q_range_layout writes: lock the
     // physical evidence that a bucket-range predicate becomes a
     // PartitionFilter (directory prune), not a row filter on every file
-    val root = java.nio.file.Files.createTempDirectory("graft_range_plan").toString
-    spark.read.parquet(s"$dir/documents.parquet")
-      .withColumn("bucket", pmod(col("doc_id"), lit(4)))
-      .write.mode("overwrite").partitionBy("bucket").parquet(root)
-    val q = spark.read.parquet(root)
-      .where(col("bucket") >= 1 && col("bucket") <= 2)
-    val plan = q.queryExecution.explainString(FormattedMode)
-    assert(plan.contains("PartitionFilters") &&
-      plan.linesIterator.exists(l => l.contains("PartitionFilters") && l.contains("bucket")),
-      s"bucket range not applied at partition level\n$plan")
-    def partitionsRead(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.executedPlan.collectLeaves()
-        .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.selectedPartitions.partitionCount.toLong }.sum
-    assert(partitionsRead(q) < partitionsRead(spark.read.parquet(root)))
+    withTempRoot("graft_range_plan") { root =>
+      spark.read.parquet(s"$dir/documents.parquet")
+        .withColumn("bucket", pmod(col("doc_id"), lit(4)))
+        .write.mode("overwrite").partitionBy("bucket").parquet(root)
+      val q = spark.read.parquet(root)
+        .where(col("bucket") >= 1 && col("bucket") <= 2)
+      val plan = q.queryExecution.explainString(FormattedMode)
+      assert(plan.contains("PartitionFilters") &&
+        plan.linesIterator.exists(l => l.contains("PartitionFilters") && l.contains("bucket")),
+        s"bucket range not applied at partition level\n$plan")
+      def partitionsRead(df: org.apache.spark.sql.DataFrame): Long =
+        df.queryExecution.executedPlan.collectLeaves()
+          .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+            f.selectedPartitions.partitionCount.toLong }.sum
+      assert(partitionsRead(q) < partitionsRead(spark.read.parquet(root)))
+    }
   }
 
   test("bloom sidecar prunes files for a point lookup; read ≡ plain filter") {
@@ -191,23 +194,24 @@ class ZOrderSpec extends AnyFunSuite {
   test("appendZOrdered clamps out-of-range rows into boundary tiles; pruned read stays exact") {
     import spark.implicits._
     val (xmn, xmx, ymn, ymx) = st
-    val root = java.nio.file.Files.createTempDirectory("graft_zappend").toString
-    ZOrder.writeZOrdered(pts, root, col("x"), col("y"), xmn, xmx, ymn, ymx)
-    // a late batch with keys beyond the original envelope
-    val late = Seq((xmx + 100L, ymx + 500L, 99, 1.0), (xmn - 5L, ymn, 98, 2.0))
-      .toDF("x", "y", "l_linenumber", "l_quantity")
-    ZOrder.appendZOrdered(late, root, col("x"), col("y"), xmn, xmx, ymn, ymx)
+    withTempRoot("graft_zappend") { root =>
+      ZOrder.writeZOrdered(pts, root, col("x"), col("y"), xmn, xmx, ymn, ymx)
+      // a late batch with keys beyond the original envelope
+      val late = Seq((xmx + 100L, ymx + 500L, 99, 1.0), (xmn - 5L, ymn, 98, 2.0))
+        .toDF("x", "y", "l_linenumber", "l_quantity")
+      ZOrder.appendZOrdered(late, root, col("x"), col("y"), xmn, xmx, ymn, ymx)
 
-    val all = spark.read.parquet(root)
-    assert(all.count() == pts.count() + 2)
-    // the index is recomputed from ACTUAL row min/max, so it still
-    // covers the clamped rows' true values and pruning loses nothing
-    val index = ZOrder.minMaxIndex(all, "zfile", col("x"), col("y"))
-    val xr = Some((xmx - 10L, xmx + 200L)) // touches the appended range
-    val pruned = ZOrder.prunedRead(spark, root, index, xr, None)
-      .where(col("x") >= xr.get._1 && col("x") <= xr.get._2)
-    val full = all.where(col("x") >= xr.get._1 && col("x") <= xr.get._2)
-    assert(pruned.count() == full.count() && full.count() >= 1)
-    assert(pruned.select(col("x"), col("y")).except(full.select(col("x"), col("y"))).isEmpty)
+      val all = spark.read.parquet(root)
+      assert(all.count() == pts.count() + 2)
+      // the index is recomputed from ACTUAL row min/max, so it still
+      // covers the clamped rows' true values and pruning loses nothing
+      val index = ZOrder.minMaxIndex(all, "zfile", col("x"), col("y"))
+      val xr = Some((xmx - 10L, xmx + 200L)) // touches the appended range
+      val pruned = ZOrder.prunedRead(spark, root, index, xr, None)
+        .where(col("x") >= xr.get._1 && col("x") <= xr.get._2)
+      val full = all.where(col("x") >= xr.get._1 && col("x") <= xr.get._2)
+      assert(pruned.count() == full.count() && full.count() >= 1)
+      assert(pruned.select(col("x"), col("y")).except(full.select(col("x"), col("y"))).isEmpty)
+    }
   }
 }
