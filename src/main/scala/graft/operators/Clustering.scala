@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import graft.util.SessionMemo
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** Stage 4: transitive closure of the match graph — connected components
   * via alternating large-star / small-star DataFrame self-joins
@@ -12,13 +16,22 @@ import org.apache.spark.sql.functions._
   * clusters" in the north_rule are the components of the thresholded
   * ZSS match graph, computed here.
   *
-  * Scale notes: converges in O(log n) rounds (vs O(diameter) for naive
-  * label propagation); each round is two shuffles (groupBy min + join).
+  * Scale notes: the oriented, deduped edges are first contracted by a
+  * union-find over each post-exchange partition (BTS, "Load-Balanced
+  * Distributed Union-Find", ICDE 2024): every node becomes an edge to
+  * its partition-local component minimum, with no exchange of its own
+  * and no more rows out than in. Where one partition holds whole
+  * components (small graphs, which AQE coalesces into one partition)
+  * that already is the answer; otherwise the star loop finishes it in
+  * O(log n) rounds (vs O(diameter) for naive label propagation).
   * `localCheckpoint(eager)` after every round truncates the lineage so
   * the plan does not grow with iterations — at cluster scale swap for
-  * reliable `checkpoint()` on durable storage (TableIO). Convergence is
-  * detected by an order-independent (count, sum-of-edge-hashes)
-  * signature — one tiny aggregate per round, no `except()` anti-join.
+  * reliable `checkpoint()` on durable storage (TableIO) — and the
+  * superseded round is unpersisted. The loop stops at the first edge
+  * set that is a star forest ([[isStarForest]], one grouped aggregate,
+  * checked before the first round and after each): with every edge
+  * oriented src > dst, each star's centre is then its component's
+  * minimum, so no round is run only to see the edge set repeat.
   */
 object Clustering {
 
@@ -29,11 +42,11 @@ object Clustering {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    // orient every edge large → small and dedupe
-    var e = edges
+    // orient every edge large → small, dedupe, contract per partition
+    var e = contract(edges
       .select(greatest($"idA", $"idB").as("src"), least($"idA", $"idB").as("dst"))
       .where($"src" =!= $"dst")
-      .distinct()
+      .distinct())
       .localCheckpoint(true)
 
     // one large-star + small-star round as a lazy plan transform
@@ -64,8 +77,7 @@ object Clustering {
         .distinct()
     }
 
-    var sigPrev = signature(e)
-    var converged = sigPrev._1 == 0L
+    var converged = isStarForest(e)
     var iter = 0
     while (!converged && iter < maxIter) {
       // ONE star round per materialization. (Unrolling TWO rounds per
@@ -74,22 +86,72 @@ object Clustering {
       // doubled lazy tree defeats exchange reuse and AQE re-materializes
       // the duplicated subtrees as extra stage jobs.)
       val ss = starRound(e).localCheckpoint(true)
-      val sig = signature(ss)
-      converged = sig == sigPrev
-      sigPrev = sig
+      SessionMemo.unpersist(e)
+      converged = isStarForest(ss)
       e = ss
       iter += 1
     }
+    // short of a star forest, a node's dst need not be its component's
+    // minimum — fail loudly rather than return wrong assignments
+    require(converged,
+      s"connected components did not converge within $maxIter rounds; raise maxIter")
 
+    // a star forest gives every node exactly one root: its dst, or itself
     val memberToRoot = e.select($"src".as("id"), $"dst".as("clusterId"))
     val roots = e.select($"dst".as("id")).distinct().withColumn("clusterId", $"id")
     val connected = memberToRoot.union(roots)
-      .groupBy($"id").agg(min($"clusterId").as("clusterId"))
     val singletons = nodes.select($"id")
       .join(connected.select($"id"), Seq("id"), "left_anti")
       .withColumn("clusterId", $"id")
     connected.union(singletons)
   }
+
+  /** Union-find over each partition of oriented edges (src, dst): one
+    * (node, partition-local minimum) edge per node that is not its
+    * local minimum. Ids compare in Spark's own order for their type
+    * (binary UTF-8 for strings, not Java's UTF-16 `compareTo`), so
+    * every emitted edge keeps src > dst and a complete contraction is
+    * already the min-labelled star forest. */
+  private def contract(e: DataFrame): DataFrame = {
+    val idType = e.schema("src").dataType
+    e.mapPartitions { (rows: Iterator[Row]) =>
+      val order = PhysicalDataType.ordering(idType)
+      val toSpark = CatalystTypeConverters.createToCatalystConverter(idType)
+      val index = mutable.HashMap.empty[Any, Int]
+      val ids, keys = mutable.ArrayBuffer.empty[Any]
+      val parent = mutable.ArrayBuffer.empty[Int]
+      def node(id: Any): Int = index.getOrElseUpdate(id, {
+        ids += id; keys += toSpark(id); parent += parent.length
+        parent.length - 1
+      })
+      def find(x: Int): Int = {
+        var r = x
+        while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+        r
+      }
+      rows.foreach { r =>
+        val (a, b) = (find(node(r.get(0))), find(node(r.get(1))))
+        if (a != b) {
+          if (order.lt(keys(a), keys(b))) parent(b) = a else parent(a) = b
+        }
+      }
+      ids.indices.iterator.flatMap { i =>
+        val root = find(i)
+        if (root == i) None else Some(Row(ids(i), ids(root)))
+      }
+    }(Encoders.row(e.schema))
+  }
+
+  /** True when no src appears twice and no dst is also a src: with
+    * every edge src > dst, each component is then one star around its
+    * minimum. One grouped aggregate over the edges. */
+  private def isStarForest(e: DataFrame): Boolean =
+    e.select(col("src").as("id"), lit(1).as("asSrc"), lit(false).as("asDst"))
+      .union(e.select(col("dst").as("id"), lit(0), lit(true)))
+      .groupBy(col("id"))
+      .agg(sum(col("asSrc")).as("asSrc"), max(col("asDst")).as("asDst"))
+      .where(col("asSrc") > 1 || (col("asSrc") === 1 && col("asDst")))
+      .isEmpty
 
   /** Retraction (right-to-erasure / file deletion at corpus scale):
     * recompute clusters after removing `deleted` ids — surviving nodes
@@ -110,21 +172,4 @@ object Clustering {
       .join(del.withColumnRenamed("id", "idB"), Seq("idB"), "left_anti")
     connectedComponents(keepEdges, keepNodes)
   }
-
-  /** Order-independent pair-set signature: (count, bit_xor of xxhash64).
-    * xor (not sum) — ANSI mode makes a Long sum of hashes overflow; the
-    * pair set is distinct so xor-cancellation of duplicates is moot.
-    * One aggregate job total (count doubles as the emptiness probe; the
-    * xor is null on empty input, coalesced). Shared convergence probe
-    * for every fixpoint loop in this package ([[connectedComponents]],
-    * [[HashToMin.connectedComponents]]). */
-  private[operators] def pairSignature(df: DataFrame, a: String, b: String)
-      : (Long, Long) = {
-    val r = df.agg(count(lit(1)),
-      expr(s"coalesce(bit_xor(xxhash64($a, $b)), 0L)")).head()
-    (r.getLong(0), r.getLong(1))
-  }
-
-  private def signature(e: DataFrame): (Long, Long) =
-    pairSignature(e, "src", "dst")
 }

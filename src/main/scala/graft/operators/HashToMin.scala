@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.util.Checkpoints.localTruncated
+import graft.util.SessionMemo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -32,9 +33,12 @@ import org.apache.spark.sql.functions._
   * bounded (dedup/ER graphs, where clusters are entity-sized).
   * Lineage AND inherited stats are truncated per round
   * ([[graft.util.Checkpoints.localTruncated]]; swap for durable
-  * checkpoint via TableIO on a cluster), convergence detected by the
-  * same O(1)-row order-independent signature as the star path; a
-  * maxIter exit without convergence fails loudly.
+  * checkpoint via TableIO on a cluster) and the superseded round is
+  * unpersisted. Convergence is detected when an O(1)-row
+  * order-independent signature of the state repeats (the star path's
+  * star-forest test does not apply: the minimum's converged state
+  * holds a row per member); a maxIter exit without convergence fails
+  * loudly.
   */
 object HashToMin {
 
@@ -84,6 +88,7 @@ object HashToMin {
         withMn.select($"member".as("node"), $"mn".as("member"))
           .union(withMn.select($"mn".as("node"), $"member"))
           .distinct())
+      SessionMemo.unpersist(state)
       val sig = signature(next)
       converged = sig == sigPrev
       sigPrev = sig
@@ -102,8 +107,14 @@ object HashToMin {
     (assign, iter)
   }
 
-  /** Order-independent state signature — [[Clustering.pairSignature]],
-    * one O(1)-row aggregate per round. */
-  private def signature(s: DataFrame): (Long, Long) =
-    Clustering.pairSignature(s, "node", "member")
+  /** Order-independent state signature: (count, bit_xor of xxhash64),
+    * one O(1)-row aggregate per round. xor (not sum) — ANSI mode makes
+    * a Long sum of hashes overflow; the state is distinct so
+    * xor-cancellation of duplicates is moot. The count doubles as the
+    * emptiness probe; the xor is null on empty input, coalesced. */
+  private def signature(s: DataFrame): (Long, Long) = {
+    val r = s.agg(count(lit(1)),
+      expr("coalesce(bit_xor(xxhash64(node, member)), 0L)")).head()
+    (r.getLong(0), r.getLong(1))
+  }
 }

@@ -29,12 +29,10 @@ final class SessionMemo[K, V] private (build: (SparkSession, K) => V) {
   * [[tempDir]]; [[release]] undoes both for one session and evicts its
   * entries from every memo.
   *
-  * Only what a persisted frame reads is tracked. RDDs an operator
-  * `localCheckpoint`s for a round its result no longer reads (the
-  * earlier rounds of a fixpoint loop), and the checkpointed frames a
-  * layer keeps without persisting them (`TruthDiscovery`'s fixpoints),
-  * stay listed as persistent until Spark drops its last reference to
-  * them. */
+  * Only what a persisted frame reads is tracked: the CC loops
+  * unpersist each round they supersede through [[unpersist]], and the
+  * checkpointed frames a layer keeps without persisting them
+  * (`TruthDiscovery`'s fixpoints) are not released here. */
 object SessionMemo {
   private val memos = new ConcurrentLinkedDeque[SessionMemo[_, _]]()
   /** Per session, what [[release]] runs, newest first. */

@@ -172,6 +172,18 @@ class PipelineSpec extends AnyFunSuite {
       10L -> 10L, 11L -> 10L, 12L -> 10L, 99L -> 99L))
   }
 
+  test("connected components label by Spark's string order, not Java's") {
+    import spark.implicits._
+    // U+FFFF sorts before U+1F600 in UTF-8 bytes (Spark), after its
+    // surrogate pair in UTF-16 units (Java `String.compareTo`)
+    val (bmp, emoji) = ("\uFFFF", "\uD83D\uDE00")
+    assert(emoji.compareTo(bmp) < 0)
+    val cc = Clustering.connectedComponents(Seq((emoji, bmp)).toDF("idA", "idB"),
+      Seq(bmp, emoji).toDF("id"))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(cc == Map(bmp -> bmp, emoji -> bmp))
+  }
+
   test("entry returns non-empty clusters") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
