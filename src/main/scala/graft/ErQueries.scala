@@ -1684,9 +1684,8 @@ object ErQueries {
     val snm = snmResults(spark, sfDir)
     val extra = snm.join(r.pairs.select(col("idA"), col("idB")),
       Seq("idA", "idB"), "left_anti")
-    val cfg = Pipeline.Config()
     val extraScores = Scoring.score(
-      Scoring.attachTrees(extra, r.trees, cfg.salts), cfg.tau).toDF()
+      Scoring.attachTrees(extra, r.trees), Pipeline.Config().tau).toDF()
     val scores = r.scores.toDF().unionByName(extraScores)
     val features = SessionMemo.persist(
       FellegiSunter.pairFeatures(scores, r.trees.toDF()))

@@ -14,10 +14,12 @@ import org.apache.spark.storage.StorageLevel
   * Stage DAG + shuffle budget (explicit, per north_rule):
   *  1. parse      — narrow map, 0 shuffles
   *  2. pairs      — 1 shuffle (groupBy block key) + 1 (pair distinct)
-  *  3. score      — 2 salted equi-joins (tree fetch) + the mapPartitions
-  *                  DP; AQE skew split enabled on these shuffles
-  *  4. cluster    — O(log n) rounds × 2 shuffles, lineage truncated per
-  *                  round
+  *  3. score      — 2 plain equi-joins (tree fetch; the blocking cap
+  *                  bounds per-id degree) + the mapPartitions DP; AQE
+  *                  skew split enabled on these shuffles
+  *  4. cluster    — per-partition union-find contraction, then star
+  *                  rounds until the first star forest, lineage
+  *                  truncated per round
   * With `io` set, every stage persists to a table and is skipped on
   * re-run if its `_SUCCESS`-gated output exists — resume-from-checkpoint
   * at stage granularity.
@@ -36,7 +38,6 @@ object Pipeline {
     * the default cutoff on the golden corpus. */
   final case class Config(
       tau: Double = 0.08,
-      salts: Int = 8,
       parse: CodeParser.ParseConfig = CodeParser.defaultConfig,
       blocking: Blocking.BlockingConfig = Blocking.BlockingConfig(),
       io: Option[TableIO] = None,
@@ -79,9 +80,9 @@ object Pipeline {
     private def parseStage(): DataFrame =
       ParseStage.parse(files, cfg.parse, cfg.blocking.mh, Some(metricsAcc)).toDF()
 
-    // persist: the scoring stage reads pairs more than once (hot-degree
-    // counts + the probe side of each tree-fetch join) — without it the
-    // blocking shuffle re-executes per read
+    // persist: the scoring stage, the FS assessment set and the pair
+    // queries all read pairs — without it the blocking shuffle
+    // re-executes per read
     lazy val pairs: DataFrame = persist(staged(spark, cfg, "pairs") {
       Blocking.candidatePairs(trees, cfg.blocking)
     })
@@ -95,7 +96,7 @@ object Pipeline {
     private def scoreStage(): DataFrame = {
       // optional pq-gram prefilter: drop candidates whose O(n)-per-tree
       // approximate structure distance exceeds the cutoff before the
-      // (salted, expensive) tree-fetch joins and the exact DP
+      // tree-fetch joins and the (expensive) exact DP
       val cand = cfg.pqPrefilter match {
         case Some(tauPq) =>
           val prof = PqGrams.profiles(trees)
@@ -104,7 +105,7 @@ object Pipeline {
             .select($"idA", $"idB")
         case None => pairs
       }
-      val pt = Scoring.attachTrees(cand, trees, cfg.salts)
+      val pt = Scoring.attachTrees(cand, trees)
       Scoring.score(pt, cfg.tau, Some(metricsAcc)).toDF()
     }
 

@@ -28,48 +28,24 @@ object Scoring {
       laA: Array[Long], lmA: Array[Int], krA: Array[Int],
       laB: Array[Long], lmB: Array[Int], krB: Array[Int])
 
-  /** Attach both trees to each candidate pair. Two equi-joins on id; the
-    * trees side is one row per key, and salting is ADAPTIVE: per-id pair
-    * degree is bounded by the blocking caps (~keysPerTree · blockCap, on
-    * the order of 10³), so in the normal configuration no key is hot and
-    * the wide tree rows ship exactly once — flat salting would multiply
-    * the build side's shuffle volume by `salts` for no benefit. If a
-    * config change (bigger caps, more bands) pushes some id's degree
-    * past the threshold, just those ids are salted; AQE skew-split
-    * remains on for residual shuffle skew.
+  /** Attach both trees to each candidate pair: two plain equi-joins on
+    * id, the trees side one row per key. No salting: the blocking cap
+    * (`CandidateGen.capByKey`) bounds every id's pair degree BEFORE pairs
+    * exist — a tree has at most 2·bands + 1 block keys (two size buckets
+    * per band, plus the sha256 key) and each block keeps at most
+    * maxBlockSize members, so degree ≤ (2·bands + 1)·(maxBlockSize − 1)
+    * = 1,071 at the defaults. No id is hot enough to need spreading;
+    * AQE skew-join split (Pipeline.tune) covers residual shuffle skew.
     */
-  def attachTrees(pairs: DataFrame, trees: Dataset[TreeRow], salts: Int = 8): Dataset[PairTrees] = {
+  def attachTrees(pairs: DataFrame, trees: Dataset[TreeRow]): Dataset[PairTrees] = {
     val spark = trees.sparkSession
     import spark.implicits._
     // ship hashed labels, not strings: primitive-array rows keep the
     // scoring stage free of string deserialization and shrink shuffle
     // and cache bytes (labels stay on TreeRow for the SQL surface)
-    val slim = trees.toDF().select($"id", $"labelsH".as("labels"), $"lmds", $"keyroots")
-
-    // hot sets for BOTH joins come from the narrow pairs table up front:
-    // a pair row matches exactly one (id, salt) build row, so idB
-    // multiplicity is unchanged by the first join — counting on the wide
-    // join output would re-execute it just to rediscover these degrees
-    val hotThreshold = 2048L
-    val hotA = SaltedJoin.hotKeysOf(
-      pairs.select(col("idA").as("id")), "id", hotThreshold)
-    val hotB = SaltedJoin.hotKeysOf(
-      pairs.select(col("idB").as("id")), "id", hotThreshold)
-
-    val withA = SaltedJoin.adaptiveSaltedEquiJoin(
-      pairs.withColumnRenamed("idA", "id"), slim, "id", salts,
-      leftSaltBy = col("idB"), hotKeys = hotA)
-      .withColumnRenamed("id", "idA")
-      .withColumnRenamed("labels", "laA")
-      .withColumnRenamed("lmds", "lmA")
-      .withColumnRenamed("keyroots", "krA")
-    val withB = SaltedJoin.adaptiveSaltedEquiJoin(
-      withA.withColumnRenamed("idB", "id"), slim, "id", salts,
-      leftSaltBy = col("idA"), hotKeys = hotB)
-      .withColumnRenamed("id", "idB")
-      .withColumnRenamed("labels", "laB")
-      .withColumnRenamed("lmds", "lmB")
-      .withColumnRenamed("keyroots", "krB")
+    def side(s: String) = trees.toDF().select($"id".as(s"id$s"),
+      $"labelsH".as(s"la$s"), $"lmds".as(s"lm$s"), $"keyroots".as(s"kr$s"))
+    val withB = pairs.join(side("A"), "idA").join(side("B"), "idB")
     // Explicit repartition before the DP stage: AQE sizes the join
     // output by BYTES (~64MB targets), but scoring cost is CPU per pair
     // — a byte-coalesced layout would cap DP parallelism at a handful
@@ -98,7 +74,7 @@ object Scoring {
         if (tc != null) tc.addTaskCompletionListener[Unit] { _ =>
           acc.add(PartMetrics(
             stage = "score",
-            partitionId = if (tc == null) -1 else tc.partitionId(),
+            partitionId = tc.partitionId(),
             rowsIn = rowsIn,
             rowsOut = rowsIn,
             pairsScored = scorer.pairsScored,

@@ -230,8 +230,7 @@ object StreamingEr {
       .mergeCappedMembers(prevIdx, newKeyed, cfg.blocking.maxBlockSize)
       .persist(StorageLevel.MEMORY_AND_DISK) // read 2×: pairs + state write
     val cand = CandidateGen.pairsWithNewMember(merged)
-      .persist(StorageLevel.MEMORY_AND_DISK) // read 3×: hot-degrees + 2 joins
-    val scores = Scoring.score(Scoring.attachTrees(cand, allTrees, cfg.salts), cfg.tau)
+    val scores = Scoring.score(Scoring.attachTrees(cand, allTrees), cfg.tau)
     val newEdges = Scoring.matches(scores).persist(StorageLevel.MEMORY_AND_DISK)
 
     val prevStar = prevClusters.map(_
@@ -250,7 +249,7 @@ object StreamingEr {
     io.write(clusters, tbl("clusters", k))
     io.write(allMatches, tbl("matches", k))
 
-    newEdges.unpersist(); cand.unpersist(); merged.unpersist()
+    newEdges.unpersist(); merged.unpersist()
     newTrees.unpersist(); allTrees.unpersist(); clusters.unpersist()
 
     // GC: generation k is complete — storage stays O(Retain) generations

@@ -22,9 +22,9 @@ object PlanAudit {
     val pairs = graft.operators.Blocking.candidatePairs(trees)
     println(pairs.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode))
-    println("===== ER: scoring input (adaptive salted joins + explicit repartition) =====")
-    // mirror the pipeline: pairs are persisted (read 3x by the scoring
-    // stage: hot-degree counts + probe side), shown as InMemoryRelation
+    println("===== ER: scoring input (two tree-fetch equi-joins + explicit repartition) =====")
+    // mirror the pipeline: pairs are persisted (the pipeline reads them
+    // more than once), so the probe side shows as InMemoryRelation
     val cachedPairs = pairs.persist()
     val pt = graft.operators.Scoring.attachTrees(cachedPairs, trees)
     println(pt.queryExecution.explainString(

@@ -1,8 +1,11 @@
 package graft
 
 import graft.model.FileRow
-import graft.operators.{Blocking, ParseStage}
+import graft.operators.{Blocking, CandidateGen, ParseStage}
 import graft.parse.CodeParser
+import graft.sources.CorpusGen
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class ParserAndSkewSpec extends AnyFunSuite {
@@ -74,12 +77,15 @@ class ParserAndSkewSpec extends AnyFunSuite {
     }
   }
 
-  test("hot key skew: N identical files stay capped and pipeline completes") {
+  // 300 byte-identical files = one giant exact-dup block
+  private def hotFiles: Dataset[FileRow] = {
     import spark.implicits._
-    // 300 byte-identical files = one giant exact-dup block
-    val hot = (0 until 300).map(i =>
-      FileRow("r", s"p$i", f"c$i%04d", "scala", "def f() { val x = 1; }", groupId = 7L))
-    val files = hot.toDS()
+    (0 until 300).map(i =>
+      FileRow("r", s"p$i", f"c$i%04d", "scala", "def f() { val x = 1; }", groupId = 7L)).toDS()
+  }
+
+  test("hot key skew: N identical files stay capped and pipeline completes") {
+    val files = hotFiles
     val trees = ParseStage.parse(files)
     val pairs = Blocking.candidatePairs(trees)
     val nPairs = pairs.count()
@@ -93,5 +99,40 @@ class ParserAndSkewSpec extends AnyFunSuite {
     val clustered = r.clusters.groupBy("clusterId").count()
       .orderBy(org.apache.spark.sql.functions.desc("count")).head()
     assert(clustered.getLong(1) >= cap)
+  }
+
+  /** Largest pair degree of any id over idA ∪ idB (0 without pairs). */
+  private def maxDegree(pairs: DataFrame): Long =
+    pairs.select(col("idA").as("id")).unionByName(pairs.select(col("idB").as("id")))
+      .groupBy("id").count()
+      .agg(coalesce(max("count"), lit(0L))).head().getLong(0)
+
+  test("degree bound: the blocking cap keeps every id's pair degree small") {
+    // the invariant that lets Scoring.attachTrees use plain joins: an id
+    // has at most 2·bands + 1 block keys (two size buckets per band plus
+    // the sha256 key), each capped at maxBlockSize members
+    val sf = ParseStage.parse(CorpusGen.corpus(spark, "/root/testdata/sf0.001")).cache()
+    val default = Blocking.BlockingConfig()
+    val hot = ParseStage.parse(hotFiles)
+    try for ((name, trees, cfg) <- Seq(
+        ("300 identical files", hot, default),
+        ("300 identical files, maxBlockSize 4", hot, default.copy(maxBlockSize = 4)),
+        ("sf0.001", sf, default),
+        ("sf0.001, maxBlockSize 4", sf, default.copy(maxBlockSize = 4)))) {
+      val bound = (2L * cfg.mh.bands + 1) * (cfg.maxBlockSize - 1)
+      val batch = maxDegree(Blocking.candidatePairs(trees, cfg))
+      assert(batch > 0 && batch <= bound, s"$name: batch degree $batch > $bound")
+      // streaming: a first micro-batch, then a second merged into its
+      // capped index — the pairs each batch scores obey the same bound
+      val half = pmod(xxhash64(col("id")), lit(2))
+      val idx0 = CandidateGen.mergeCappedMembers(None,
+        Blocking.keyedIds(trees.where(half === 0), cfg), cfg.maxBlockSize)
+      val idx1 = CandidateGen.mergeCappedMembers(Some(idx0.select("key", "members")),
+        Blocking.keyedIds(trees.where(half === 1), cfg), cfg.maxBlockSize)
+      for ((b, idx) <- Seq(0 -> idx0, 1 -> idx1)) {
+        val d = maxDegree(CandidateGen.pairsWithNewMember(idx))
+        assert(d > 0 && d <= bound, s"$name: stream batch $b degree $d > $bound")
+      }
+    } finally sf.unpersist()
   }
 }

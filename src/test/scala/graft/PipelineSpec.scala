@@ -128,38 +128,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(parsed == result.trees.count())
   }
 
-  test("salted join is equivalent to a plain equi-join") {
-    import spark.implicits._
-    val left = (1 to 1000).map(i => (i.toLong % 7, i.toLong)).toDF("k", "v")
-    val right = (0 to 6).map(i => (i.toLong, s"r$i")).toDF("k", "name")
-    val plain = left.join(right, "k").select($"k", $"v", $"name")
-    val salted = SaltedJoin.saltedEquiJoin(left, right, "k", salts = 5, leftSaltBy = $"v")
-      .select($"k", $"v", $"name")
-    assert(plain.except(salted).isEmpty && salted.except(plain).isEmpty)
-    assert(salted.count() == plain.count())
-  }
-
-  test("adaptive salted join == plain equi-join, hot and cold keys alike") {
-    import spark.implicits._
-    // key 0 is hot (600 rows), keys 1..6 are cold (~65 each)
-    val left = ((1 to 600).map(i => (0L, i.toLong)) ++
-      (1 to 400).map(i => (1L + i % 6, i.toLong))).toDF("k", "v")
-    val right = (0 to 6).map(i => (i.toLong, s"r$i")).toDF("k", "name")
-    val plain = left.join(right, "k").select($"k", $"v", $"name")
-    val adaptive = SaltedJoin.adaptiveSaltedEquiJoin(
-      left, right, "k", salts = 5, leftSaltBy = $"v", hotThreshold = 100L)
-      .select($"k", $"v", $"name")
-    assert(plain.except(adaptive).isEmpty && adaptive.except(plain).isEmpty)
-    assert(adaptive.count() == plain.count())
-    // degenerate thresholds: everything hot / nothing hot
-    for (t <- Seq(0L, 1000000L)) {
-      val a = SaltedJoin.adaptiveSaltedEquiJoin(
-        left, right, "k", salts = 3, leftSaltBy = $"v", hotThreshold = t)
-        .select($"k", $"v", $"name")
-      assert(a.count() == plain.count(), s"threshold $t")
-    }
-  }
-
   test("connected components on a known graph (chain, triangle, singleton)") {
     import spark.implicits._
     // chain 1-2-3-4, triangle 10-11-12 (+edge 11-12), singleton 99

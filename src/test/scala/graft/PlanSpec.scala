@@ -153,11 +153,17 @@ class PlanSpec extends AnyFunSuite {
     val trees = ParseStage.parse(CorpusGen.corpus(spark, dir))
     val pairs = Blocking.candidatePairs(trees).persist()
     try {
-      val s = fmt(Scoring.attachTrees(pairs, trees).toDF())
-      // pairs feed the hot-degree counts and the probe side from cache:
-      // every read is an InMemoryTableScan of ONE InMemoryRelation
-      val scans = s.linesIterator.count(_.contains("InMemoryTableScan"))
-      assert(scans >= 3, s"expected >=3 cached pair reads, got $scans")
+      val pt = Scoring.attachTrees(pairs, trees).toDF()
+      val s = fmt(pt)
+      // the probe side reads pairs from cache, and nothing re-derives
+      // them: no Window (the blocking cap re-run), no HashAggregate (a
+      // degree count) and no Generate (a salt explode or key explode).
+      // Walk the physical plan's children only — the formatted string
+      // also prints the cached blocking plan inside InMemoryRelation
+      val ops = pt.queryExecution.sparkPlan.collect { case p => p.nodeName }
+      assert(ops.contains("InMemoryTableScan"), s"pairs not read from cache\n$s")
+      for (op <- Seq("Window", "HashAggregate", "Generate"))
+        assert(!ops.contains(op), s"attach plan re-derives pairs or degrees ($op)\n$s")
       assert(s.contains("Exchange"), "final CPU-balancing repartition lost")
     } finally pairs.unpersist()
   }
