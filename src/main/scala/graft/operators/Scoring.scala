@@ -87,8 +87,10 @@ object Scoring {
         rowsIn += 1
         val nA = p.laA.length
         val nB = p.laB.length
-        // Threshold-banded DP: exact distance for matches (d ≤ τ·(nA+nB)),
-        // capped at maxDist+1 beyond — cuts DP cells ~(n/2τ·n)× per pair.
+        // Banded DP: exact distance for matches (d ≤ τ·(nA+nB)), capped
+        // at maxDist+1 beyond. Its band grows by doubling to the pair's
+        // distance, so a near-duplicate walks a band of width ~2d in
+        // the keyroot pairs near the diagonal, not 2τ·(nA+nB) in all.
         val maxDist = (tau * (nA + nB)).toInt
         val d = scorer.distHashedBounded(
           p.laA, p.lmA, p.krA, p.laB, p.lmB, p.krB, emptyHash, maxDist)

@@ -41,8 +41,9 @@ import org.apache.spark.storage.StorageLevel
   *    match set, recomputed independently) rather than corpus-dependent
   *    batch equality.
   *  - Star-edge contraction keeps each batch's CC input proportional to
-  *    the delta, not history: components converge in O(log n) rounds on
-  *    an edge set that is (previous assignment) ∪ (new matches).
+  *    the delta, not history: CC runs on (previous assignment as star
+  *    edges) ∪ (new matches), as a per-partition union-find contraction
+  *    followed by star rounds up to the first star forest.
   */
 object StreamingEr {
 

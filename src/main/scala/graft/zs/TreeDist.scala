@@ -141,8 +141,9 @@ object TreeDist {
   *    costs (0 for the empty label); [[dist]] interns string labels to
   *    exact Long codes and runs it, so the inner loop never touches a
   *    String;
-  *  - [[distHashedBounded]] — the threshold-banded unit-cost DP the
-  *    pipeline scores every candidate pair with.
+  *  - [[distHashedBounded]] — the banded unit-cost DP the pipeline
+  *    scores every candidate pair with: a relative and an absolute
+  *    (postorder) band, grown by doubling up to the threshold.
   */
 final class Scorer {
   // 16-bit DP cells: unit-cost distance is bounded by |A|+|B| ≤ 2·maxNodes
@@ -247,19 +248,38 @@ final class Scorer {
     td((na - 1) * nb + (nb - 1))
   }
 
-  /** Threshold-banded variant of [[distHashed]] (Ukkonen-style band, a
-    * public technique for edit distances): when only distances ≤ maxDist
-    * matter (the pipeline thresholds at τ·(nA+nB)), any forest-prefix
-    * cell with |x−y| > maxDist is a dead end — under unit insert/remove
-    * costs fd(x,y) ≥ |x−y| — so the DP walks only a 2·maxDist+1 band
-    * per keyroot pair. Stored values are capped at maxDist+1, which is
-    * sound: caps only lower computed sums, and any path through a capped
-    * cell already exceeds maxDist, so results ≤ maxDist are exact and
-    * results above are reported as maxDist+1.
+  /** Threshold-banded variant of [[distHashed]]: returns the exact
+    * distance if it is ≤ maxDist, else maxDist+1. The pipeline scores
+    * every candidate pair with it at maxDist = τ·(nA+nB).
     *
-    * Returns exact distance if ≤ maxDist, else maxDist+1.
+    * The banded core at bound D computes cell (x, y) of keyroot pair
+    * (i, j) only inside two bands, both from unit insert/remove costs:
+    *  - relative, |x−y| ≤ D (Ukkonen): forests whose sizes differ by
+    *    more than D are more than D apart;
+    *  - absolute, |(x+ioff)−(y+joff)| ≤ D (Touzet, k-bounded TED): a
+    *    mapping of cost ≤ D pairs only nodes whose postorder indices
+    *    differ by at most D, and the same holds for every forest-prefix
+    *    cell on its DP path, since the nodes left of a prefix map only
+    *    among themselves.
+    * A keyroot pair with |ioff−joff| > D is skipped: its td values are
+    * read only in splices whose fd cell starts at that same offset, so
+    * outside the absolute band. Every read outside the bands yields the
+    * cap D+1 (capped boundary, row sentinels, guarded splice and td
+    * reads; a stale td is only ever added to a capped splice), and
+    * computed values are capped at D+1.
+    *
+    * Proof sketch: every cell is ≥ min(true, D+1), because a cap only
+    * ever stands in for a value; and when the distance is ≤ D, every
+    * cell and td on the optimal mapping's derivation lies in both bands
+    * of an unskipped keyroot pair with a value ≤ D, so it is exact.
+    *
+    * The ladder runs the core at D = 4, 8, 16, … (from the first step
+    * at or above the size gap, never above maxDist) and stops at the
+    * first D whose result is ≤ D, so the band follows the true
+    * distance, not the threshold.
+    *
     * Falls back to the exact full DP when labels can be empty
-    * (insert/remove cost 0 breaks the band bound, and with it the
+    * (insert/remove cost 0 breaks both bands, and with them the
     * size-gap bound) or the band would not save work.
     */
   def distHashedBounded(laA: Array[Long], al: Array[Int], kra: Array[Int],
@@ -272,23 +292,32 @@ final class Scorer {
     while (i < na && !hasEmpty) { hasEmpty = laA(i) == emptyHash; i += 1 }
     i = 0
     while (i < nb && !hasEmpty) { hasEmpty = lbB(i) == emptyHash; i += 1 }
+    val gap = math.abs(na - nb)
     if (hasEmpty || maxDist >= na + nb)
       math.min(distHashed(laA, al, kra, lbB, bl, krb, emptyHash), maxDist + 1)
-    else if (math.abs(na - nb) > maxDist)
+    else if (gap > maxDist)
       maxDist + 1 // size gap alone exceeds the threshold
-    else
-      boundedCoreChar(laA, al, kra, lbB, bl, krb, maxDist)
+    else {
+      reserve(na, nb)
+      pairsScored += 1
+      var band = 4
+      while (band < gap) band *= 2
+      var d = boundedCoreChar(laA, al, kra, lbB, bl, krb, math.min(band, maxDist))
+      while (d > band && band < maxDist) {
+        band *= 2
+        d = boundedCoreChar(laA, al, kra, lbB, bl, krb, math.min(band, maxDist))
+      }
+      d
+    }
   }
 
-  /** The banded unit-cost DP of [[distHashedBounded]]; labels are known
-    * non-empty and the size gap is ≤ maxDist. */
+  /** The banded unit-cost DP of [[distHashedBounded]] at bound D: labels
+    * are known non-empty, the size gap is ≤ D and the buffers reserved. */
   private def boundedCoreChar(laA: Array[Long], al: Array[Int], kra: Array[Int],
                               lbB: Array[Long], bl: Array[Int], krb: Array[Int],
-                              maxDist: Int): Int = {
+                              D: Int): Int = {
     val na = laA.length
     val nb = lbB.length
-    reserve(na, nb)
-    val D = maxDist
     val cap = (D + 1).toChar
 
     var ki = 0
@@ -301,20 +330,26 @@ final class Scorer {
       while (kj < krb.length) {
         val j = krb(kj)
         val blj = bl(j)
-        val n = j - blj + 2
         val joff = blj - 1
-        // boundary rows/cols inside the band (+ sentinel just outside)
-        val x0max = math.min(m - 1, D + 1)
-        var x = 0
-        while (x <= x0max) { fd(x * n) = (if (x > D) D + 1 else x).toChar; x += 1 }
-        val y0max = math.min(n - 1, D + 1)
-        var y = 0
-        while (y <= y0max) { fd(y) = (if (y > D) D + 1 else y).toChar; y += 1 }
-        x = 1
-        while (x < m) {
-          val ylo = math.max(1, x - D)
-          val yhi = math.min(n - 1, x + D)
-          if (ylo <= yhi) {
+        val delta = ioff - joff // postorder shift of the two forests
+        if (math.abs(delta) <= D) {
+          val n = j - blj + 2
+          // boundary rows/cols inside the band (+ sentinel just outside)
+          val x0max = math.min(m - 1, D + 1)
+          var x = 0
+          while (x <= x0max) { fd(x * n) = (if (x > D) D + 1 else x).toChar; x += 1 }
+          val y0max = math.min(n - 1, D + 1)
+          var y = 0
+          while (y <= y0max) { fd(y) = (if (y > D) D + 1 else y).toChar; y += 1 }
+          // row x spans [x−D, x+D] ∩ [x+delta−D, x+delta+D] (relative ∩
+          // absolute band); with |delta| ≤ D no row before xmax is empty
+          val loShift = math.max(0, delta) - D
+          val hiShift = math.min(0, delta) + D
+          val xmax = math.min(m - 1, n - 1 - loShift)
+          x = 1
+          while (x <= xmax) {
+            val ylo = math.max(1, x + loShift)
+            val yhi = math.min(n - 1, x + hiShift)
             cellsTouched += (yhi - ylo + 1).toLong
             val xa = x + ioff
             val alxa = al(xa)
@@ -345,10 +380,14 @@ final class Scorer {
                 td(tdrow + yb) = mn.toChar
               } else {
                 val q = blyb - 1 - joff
-                // guarded reads: out-of-band positions are ≥ cap by the
-                // band bound, and td entries for subtree pairs whose
-                // size gap exceeds D were never computed this pair
-                val fpq = if (math.abs(p - q) > D) cap.toInt else fd(pn + q).toInt
+                // guarded reads: the splice cell (p, q) outside either
+                // band was not written this keyroot pair (its absolute
+                // offset is alxa − blyb); td(xa, yb) was computed when
+                // the subtree sizes differ by ≤ D and that splice is in
+                // band, and is only added to the cap otherwise
+                val fpq =
+                  if (math.abs(p - q) > D || math.abs(alxa - blyb) > D) cap.toInt
+                  else fd(pn + q).toInt
                 val szB = yb - blyb + 1
                 val tdv = if (math.abs(szA - szB) > D) cap.toInt else td(tdrow + yb).toInt
                 val d3 = fpq + tdv
@@ -359,15 +398,14 @@ final class Scorer {
               y += 1
             }
             if (yhi + 1 <= n - 1) fd(row + yhi + 1) = cap // right sentinel
+            x += 1
           }
-          x += 1
         }
         kj += 1
       }
       ki += 1
     }
-    pairsScored += 1
-    td((na - 1) * nb + (nb - 1)) // in band: the caller checked |na − nb| ≤ D
+    td((na - 1) * nb + (nb - 1)) // in band: |na − nb| ≤ D
   }
 
   /** Unit-cost distance over string labels: interns them to exact Long

@@ -128,6 +128,20 @@ class PipelineSpec extends AnyFunSuite {
     assert(parsed == result.trees.count())
   }
 
+  test("score stage: the banded kernel walks at most a fifth of the relative-band DP cells") {
+    import spark.implicits._
+    // summed as er_metrics does: max per partition (attempts), then sum
+    val row = result.metrics.where($"stage" === "score")
+      .groupBy($"partitionId").agg(max($"pairsScored").as("p"), max($"dpCells").as("c"))
+      .agg(sum($"p"), sum($"c")).head()
+    val (pairs, cells) = (row.getLong(0), row.getLong(1))
+    // a kernel with only the relative band |x−y| ≤ τ·(nA+nB) and no
+    // ladder scored this corpus in RelativeBandCells cells
+    assert(pairs == PipelineSpec.ScoredPairs, s"pairs=$pairs cells=$cells")
+    assert(cells * 5 <= PipelineSpec.RelativeBandCells,
+      s"$cells DP cells, relative band alone ${PipelineSpec.RelativeBandCells}")
+  }
+
   test("connected components on a known graph (chain, triangle, singleton)") {
     import spark.implicits._
     // chain 1-2-3-4, triangle 10-11-12 (+edge 11-12), singleton 99
@@ -155,4 +169,10 @@ class PipelineSpec extends AnyFunSuite {
   test("entry returns non-empty clusters") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
+}
+
+object PipelineSpec {
+  /** Score-stage totals on the sf0.001 corpus at the default config. */
+  val ScoredPairs = 326L
+  val RelativeBandCells = 77584131L
 }
