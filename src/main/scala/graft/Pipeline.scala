@@ -26,26 +26,11 @@ import org.apache.spark.storage.StorageLevel
   */
 object Pipeline {
 
-  /** `pqPrefilter`: opt-in pq-gram approximate-distance prefilter on
-    * the candidate pairs — candidates with pq-gram distance above the
-    * cutoff are dropped BEFORE the tree-fetch joins and the O(n²) DP.
-    * The pq-gram pass is O(n) per tree plus one gram-keyed join, so it
-    * pays for itself whenever the candidate set carries real negatives
-    * (er_pqgram_tradeoff: τ_pq = 0.20 keeps truth recall 1.0 while
-    * pruning 79 % of would-be DP cells on the structure channel).
-    * It is a RECALL trade in general — a pair can exceed τ_pq yet score
-    * under tau — so it ships off by default; the spec gates F1 = 1.0 at
-    * the default cutoff on the golden corpus. */
   final case class Config(
       tau: Double = 0.08,
       parse: CodeParser.ParseConfig = CodeParser.defaultConfig,
       blocking: Blocking.BlockingConfig = Blocking.BlockingConfig(),
-      io: Option[TableIO] = None,
-      pqPrefilter: Option[Double] = None)
-
-  /** The measured recall-safe pq-gram cutoff (er_pqgram_tradeoff's knee:
-    * recall 1.0, 79 % of DP cells pruned on the structure channel). */
-  val PqPrefilterTau = 0.20
+      io: Option[TableIO] = None)
 
   /** Lazy stage handles: constructing a Result builds only the plan —
     * zero Spark jobs run until a stage is forced, so asking for `trees`
@@ -93,21 +78,8 @@ object Pipeline {
       scoreStage()
     }.as[ScoreRow])
 
-    private def scoreStage(): DataFrame = {
-      // optional pq-gram prefilter: drop candidates whose O(n)-per-tree
-      // approximate structure distance exceeds the cutoff before the
-      // tree-fetch joins and the (expensive) exact DP
-      val cand = cfg.pqPrefilter match {
-        case Some(tauPq) =>
-          val prof = PqGrams.profiles(trees)
-          PqGrams.pairDistances(pairs.select($"idA", $"idB"), prof)
-            .where($"pq_dist" <= tauPq)
-            .select($"idA", $"idB")
-        case None => pairs
-      }
-      val pt = Scoring.attachTrees(cand, trees)
-      Scoring.score(pt, cfg.tau, Some(metricsAcc)).toDF()
-    }
+    private def scoreStage(): DataFrame =
+      Scoring.score(Scoring.attachTrees(pairs, trees), cfg.tau, Some(metricsAcc)).toDF()
 
     // persist: the clustering families, feedback layer, retract and the
     // edit-script sample all read matches — same multi-consumer rule as

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.util.Checkpoints.localTruncated
+import graft.util.SessionMemo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -60,7 +61,9 @@ import org.apache.spark.sql.functions._
   * truncated per round via [[graft.util.Checkpoints.localTruncated]] —
   * NOT plain localCheckpoint, whose inherited stats estimate squares
   * per round and freezes the driver on long chains (see that helper's
-  * doc for the measurement).
+  * doc for the measurement). Each round's live edges and superseded
+  * state and pending tables are unpersisted; the result reads only the
+  * final state.
   */
 object CenterClustering {
 
@@ -76,9 +79,14 @@ object CenterClustering {
     * center's id; round is the 1-based parallel round that decided the
     * node (0 for singletons; the oracle checks id/clusterId/is_center,
     * which are order-determined — round is parallel-schedule metadata).
+    * `onRound` sees each round's pending-edge count, which the loop
+    * counts anyway. The last round may only retire edges that the
+    * round before made no-ops, so the largest `round` in the result is
+    * the number of rounds or one less.
     */
   def cluster(edges: DataFrame, nodes: DataFrame,
-              maxRounds: Int = MaxRounds): DataFrame = {
+              maxRounds: Int = MaxRounds,
+              onRound: Option[RoundReport => Unit] = None): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -101,6 +109,7 @@ object CenterClustering {
     var round = 0
     while (nPending > 0L && round < maxRounds) {
       round += 1
+      val t0 = System.nanoTime()
       val withSt = pending
         .join(st.select($"id".as("src"), $"st".as("stA")), "src")
         .join(st.select($"id".as("dst"), $"st".as("stB")), "dst")
@@ -134,17 +143,22 @@ object CenterClustering {
         .union(uuFire.select($"dst".as("id"), lit("A").as("nst"), $"src".as("ncid")))
         .union(cuFire.select($"dst".as("id"), lit("A").as("nst"), $"src".as("ncid")))
         .union(ucFire.select($"src".as("id"), lit("A").as("nst"), $"dst".as("ncid")))
-      st = localTruncated(st.join(trans, Seq("id"), "left")
+      val nextSt = localTruncated(st.join(trans, Seq("id"), "left")
         .select($"id", coalesce($"nst", $"st").as("st"),
           coalesce($"ncid", $"cid").as("cid"),
           when($"nst".isNotNull, lit(round)).otherwise($"round").as("round")))
       val fired = uuFire.select($"src", $"dst")
         .union(cuFire.select($"src", $"dst"))
         .union(ucFire.select($"src", $"dst"))
-      pending = localTruncated(live.select($"src", $"dst", $"w", $"ord")
+      val nextPending = localTruncated(live.select($"src", $"dst", $"w", $"ord")
         .join(fired, Seq("src", "dst"), "left_anti"))
+      Seq(st, pending, live).foreach(SessionMemo.unpersist)
+      st = nextSt
+      pending = nextPending
       nPending = pending.count()
+      onRound.foreach(_(RoundReport(round, nPending, System.nanoTime() - t0)))
     }
+    SessionMemo.unpersist(pending)
     require(nPending == 0L,
       s"CENTER scan did not converge in $maxRounds rounds ($nPending pending)")
 

@@ -51,8 +51,10 @@ object HashToMin {
     run(edges, nodes, maxIter)._1
 
   /** Same, also reporting the number of rounds to fixpoint (diagnostic
-    * + spec surface for the O(log d) convergence claim). */
-  def run(edges: DataFrame, nodes: DataFrame, maxIter: Int = 30): (DataFrame, Int) = {
+    * + spec surface for the O(log d) convergence claim). `onRound` sees
+    * each round's state rows, which the loop's signature counts anyway. */
+  def run(edges: DataFrame, nodes: DataFrame, maxIter: Int = 30,
+      onRound: Option[RoundReport => Unit] = None): (DataFrame, Int) = {
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -82,6 +84,7 @@ object HashToMin {
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
+      val t0 = System.nanoTime()
       val mins = state.groupBy($"node").agg(min($"member").as("mn"))
       val withMn = state.join(mins, "node")
       val next = localTruncated(
@@ -94,6 +97,7 @@ object HashToMin {
       sigPrev = sig
       state = next
       iter += 1
+      onRound.foreach(_(RoundReport(iter, sig._1, System.nanoTime() - t0)))
     }
     // a maxIter exit without signature convergence means min(member) is
     // NOT the component minimum for under-propagated nodes — fail loudly

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.SessionMemo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -43,10 +44,11 @@ object MatchMerge {
     * source record mapped to its resolved entity, with the entity's
     * member and feature counts. Throws if the fixpoint is not reached
     * within `maxRounds` (a 100 TB run would checkpoint and resume
-    * rather than loop blind). */
+    * rather than loop blind). Each round's pairs, CC and superseded
+    * entity table are unpersisted once the next entity table is
+    * checkpointed; the result reads only the last one. */
   def resolve(profiles: DataFrame, tNum: Int, tDen: Int,
-      maxRounds: Int = MaxRounds,
-      onRound: Option[(Int, Long) => Unit] = None): DataFrame = {
+      maxRounds: Int = MaxRounds): DataFrame = {
     var cur = profiles
       .select(col("id").as("eid"), array(col("id")).as("members"),
         array_sort(array_distinct(col("toks"))).as("toks"))
@@ -58,8 +60,10 @@ object MatchMerge {
           cur.select(col("eid").as("id"), col("toks")), tNum, tDen)
         .select(col("idA"), col("idB"))
         .localCheckpoint(true)
-      if (pairs.head(1).isEmpty) converged = true
-      else {
+      if (pairs.head(1).isEmpty) {
+        converged = true
+        SessionMemo.unpersist(pairs)
+      } else {
         rounds += 1
         // the bound counts MERGE rounds, so a fixpoint needing exactly
         // maxRounds merges still gets its matchless probe afterwards —
@@ -75,7 +79,7 @@ object MatchMerge {
         val incident = pairs.select(col("idA").as("id"))
           .union(pairs.select(col("idB").as("id"))).distinct()
         val cc = Clustering.connectedComponents(pairs, incident)
-        cur = cur.join(cc, cur("eid") === cc("id"), "left")
+        val next = cur.join(cc, cur("eid") === cc("id"), "left")
           .groupBy(coalesce(col("clusterId"), col("eid")).as("clusterId"))
           .agg(
             array_sort(array_distinct(flatten(collect_list(col("members")))))
@@ -84,9 +88,10 @@ object MatchMerge {
               .as("toks"))
           .select(col("clusterId").as("eid"), col("members"), col("toks"))
           .localCheckpoint(true)
-        // the entity count is one extra job per round — pay it only
-        // when a caller actually instruments the rounds
-        onRound.foreach(f => f(rounds, cur.count()))
+        // cc's plan reads this round's pairs and CC's last star round
+        SessionMemo.unpersist(cc)
+        SessionMemo.unpersist(cur)
+        cur = next
       }
     }
     cur.select(explode(col("members")).as("id"), col("eid").as("entity_id"),

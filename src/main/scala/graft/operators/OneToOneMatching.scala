@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.SessionMemo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,8 +37,10 @@ import org.apache.spark.sql.functions._
   * length of the longest strictly-decreasing weight path). Lineage is
   * truncated per round with `localCheckpoint` — at cluster scale swap
   * for reliable `checkpoint()` on durable storage, same note as
-  * [[Clustering]]. No driver-side data at all: convergence is detected
-  * by the accepted/live counts the round already computes.
+  * [[Clustering]] — and each superseded live set is unpersisted; only
+  * the accepted rounds, which the result reads, stay persisted. No
+  * driver-side data at all: convergence is detected by the live count
+  * the round already computes.
   */
 object OneToOneMatching {
 
@@ -52,15 +55,8 @@ object OneToOneMatching {
     * DataFrame(lft, rgt, w, round) — the greedy matching under
     * (w DESC, lft ASC, rgt ASC), with the 1-based round in which each
     * edge became dominant. Fails (require) if the matching has not
-    * converged within `maxRounds` rounds. `onRound(round, accepted,
-    * liveAfter)` observes each round's progress (counts are of already-
-    * checkpointed data, so observing costs one cheap job per round) —
-    * [[graft.tools.DriveLinkScale]] uses it to measure the geometric
-    * live-set decay at scale. */
-  def greedyMatch(
-      edges: DataFrame,
-      maxRounds: Int = MaxRounds,
-      onRound: (Int, Long, Long) => Unit = (_, _, _) => ()): DataFrame = {
+    * converged within `maxRounds` rounds. */
+  def greedyMatch(edges: DataFrame, maxRounds: Int = MaxRounds): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -83,13 +79,15 @@ object OneToOneMatching {
       // a nonempty live graph always has a dominant edge (the globally
       // best live edge), so progress per round is guaranteed and the
       // anti-joins strictly shrink `live`
-      live = live
+      val next = live
         .join(acc.select($"lft"), Seq("lft"), "left_anti")
         .join(acc.select($"rgt"), Seq("rgt"), "left_anti")
         .localCheckpoint(true)
+      SessionMemo.unpersist(live)
+      live = next
       nLive = live.count()
-      onRound(round, acc.count(), nLive)
     }
+    SessionMemo.unpersist(live)
     require(nLive == 0L,
       s"greedy matching did not converge in $maxRounds rounds ($nLive live edges)")
     if (accepted.isEmpty) {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.SessionMemo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -37,8 +38,9 @@ import org.apache.spark.sql.functions._
   * adjacency (shrinking geometrically — inside a near-clique duplicate
   * group one round decides everyone) + one aggregate; lineage truncated
   * per round with localCheckpoint (swap for durable checkpoint() on a
-  * cluster, same note as [[Clustering]]). Assignment is one join + one
-  * aggregate. No driver-side data beyond the O(1) per-round counts.
+  * cluster, same note as [[Clustering]]), and each superseded undecided
+  * set is unpersisted. Assignment is one join + one aggregate. No
+  * driver-side data beyond the O(1) per-round counts.
   */
 object PivotClustering {
 
@@ -56,10 +58,11 @@ object PivotClustering {
     * full record universe (isolated records become singleton pivots).
     * Returns (id, clusterId, is_pivot, round) where clusterId is the
     * pivot's id and round is the 1-based MIS round that decided the
-    * node's pivot (0 for isolated singletons). */
+    * node's pivot (0 for isolated singletons). `onRound` sees each
+    * round's undecided-node count, which the loop counts anyway. */
   def cluster(edges: DataFrame, nodes: DataFrame,
               maxRounds: Int = MaxRounds,
-              onRound: Option[(Int, Long, Long) => Unit] = None): DataFrame = {
+              onRound: Option[RoundReport => Unit] = None): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -79,6 +82,7 @@ object PivotClustering {
     var round = 0
     while (nUnknown > 0L && round < maxRounds) {
       round += 1
+      val t0 = System.nanoTime()
       // π-minimum over UNDECIDED neighbors; local minima become pivots
       val unkNb = adj
         .join(unknown.select($"id"), "id")
@@ -91,15 +95,17 @@ object PivotClustering {
       pivotRounds += piv
       // retire the new pivots and their undecided neighbors
       val dead = adj.join(piv.select($"id".as("nb")), "nb").select($"id").distinct()
-      unknown = unknown
+      val next = unknown
         .join(piv.select($"id"), Seq("id"), "left_anti")
         .join(dead, Seq("id"), "left_anti")
         .localCheckpoint(true)
+      SessionMemo.unpersist(unknown)
+      unknown = next
       nUnknown = unknown.count()
-      // the pivot count is one extra Spark job per round — pay it only
-      // when a caller actually instruments the rounds
-      onRound.foreach(f => f(round, piv.count(), nUnknown))
+      onRound.foreach(_(RoundReport(round, nUnknown, System.nanoTime() - t0)))
     }
+    // the result reads adj and the pivot rounds, not the undecided set
+    SessionMemo.unpersist(unknown)
     require(nUnknown == 0L,
       s"pivot MIS did not converge in $maxRounds rounds ($nUnknown undecided)")
     val pivots = pivotRounds.reduceOption(_ unionByName _)

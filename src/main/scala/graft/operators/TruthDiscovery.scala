@@ -141,8 +141,7 @@ object TruthDiscovery {
     * Final `beliefs` = round-R claim share `base²·Scale div Σ_{v'}
     * base²` per entity — a (0, Scale] integer mass whose per-entity
     * argmax is the resolved value. */
-  def investment(claims: DataFrame, rounds: Int = Rounds,
-                 onRound: (Int, Double) => Unit = (_, _) => ()): Result = {
+  def investment(claims: DataFrame, rounds: Int = Rounds): Result = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val c = claims.select(col("source"), col("entity"), col("value"))
     val nClaims = c.groupBy(col("source")).agg(count(lit(1)).as("nclaims"))
@@ -151,7 +150,6 @@ object TruthDiscovery {
     var baseR: DataFrame = null
     var i = 0
     while (i < rounds) {
-      val t0 = System.nanoTime()
       val inv = c.join(broadcast(trust.join(nClaims, "source")), "source")
         .select(col("source"), col("entity"), col("value"),
           expr("tq div nclaims").as("invq")) // long floor-division
@@ -169,7 +167,6 @@ object TruthDiscovery {
       trust = tCp.withColumn("__tmax", lit(tMax))
         .selectExpr("source", s"(traw * ${Scale}L) div __tmax AS tq")
       i += 1
-      onRound(i, (System.nanoTime() - t0) / 1e9)
     }
     val wE = org.apache.spark.sql.expressions.Window.partitionBy(col("entity"))
     // den = 0 iff every claimant of the entity has zero (floored) trust

@@ -16,13 +16,13 @@ import org.apache.spark.sql.functions._
   * honest design therefore retains the cumulative DISTINCT claims set
   * (small by construction: one row per source-entity-value assertion,
   * not per delivery) and re-runs the fixed-round fixpoint per batch;
-  * the measured flat per-round cost (BENCH.md, DriveTruthScale) makes
-  * the re-fit cheap and PREDICTABLE — each batch pays rounds × (one
-  * broadcast join + two aggregates) over the claims table, nothing
-  * history-proportional beyond the claims themselves. At deployment
-  * scale the claims set is a `TableIO`-backed table exactly like
-  * [[StreamingEr]]'s match state; the in-memory state keeps the
-  * semantics testable without a metastore.
+  * the measured flat per-round cost (BENCH.md, "Truth-discovery fixpoint
+  * at 10M claims") makes the re-fit cheap and PREDICTABLE — each batch
+  * pays rounds × (one broadcast join + two aggregates) over the claims
+  * table, nothing history-proportional beyond the claims themselves.
+  * At deployment scale the claims set is a `TableIO`-backed table
+  * exactly like [[StreamingEr]]'s match state; the in-memory state
+  * keeps the semantics testable without a metastore.
   *
   * Replay guard: claims are SET-semantic — the state is
   * `distinct(source, entity, value)` — so at-least-once redelivery of

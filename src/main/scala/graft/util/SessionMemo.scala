@@ -29,10 +29,11 @@ final class SessionMemo[K, V] private (build: (SparkSession, K) => V) {
   * [[tempDir]]; [[release]] undoes both for one session and evicts its
   * entries from every memo.
   *
-  * Only what a persisted frame reads is tracked: the CC loops
-  * unpersist each round they supersede through [[unpersist]], and the
-  * checkpointed frames a layer keeps without persisting them
-  * (`TruthDiscovery`'s fixpoints) are not released here. */
+  * Only what a persisted frame reads is tracked: every iterative
+  * operator but the `TruthDiscovery` fixpoints unpersists the rounds
+  * it supersedes through [[unpersist]], and the checkpointed frames a
+  * layer keeps without persisting them (those fixpoints) are not
+  * released here. */
 object SessionMemo {
   private val memos = new ConcurrentLinkedDeque[SessionMemo[_, _]]()
   /** Per session, what [[release]] runs, newest first. */

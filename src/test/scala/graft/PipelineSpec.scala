@@ -52,25 +52,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(f1 >= 0.99, s"pairwise F1 $f1 below gate; row=$f1row")
   }
 
-  test("pq-gram prefilter on: F1 gate holds, matches unchanged, scored pairs never grow") {
-    import spark.implicits._
-    val files = CorpusGen.corpus(spark, "/root/testdata/sf0.001")
-    val pre = Pipeline.run(spark, files,
-      Pipeline.Config(pqPrefilter = Some(Pipeline.PqPrefilterTau)))
-    // the prefilter may only DROP candidates before the DP
-    val scoredPre = pre.scores.count()
-    val scoredAll = result.scores.count()
-    assert(scoredPre <= scoredAll,
-      s"prefilter scored $scoredPre > unfiltered $scoredAll")
-    // and at the measured recall-safe cutoff it drops no TRUE match:
-    // the thresholded match set is identical to the unfiltered run's
-    val onlyUnfiltered = result.matches.select($"idA", $"idB")
-      .join(pre.matches.select($"idA", $"idB"), Seq("idA", "idB"), "left_anti").count()
-    assert(onlyUnfiltered == 0, s"prefilter lost $onlyUnfiltered true matches")
-    val f1 = Pipeline.pairwiseF1(pre.scores, pre.trees).head().getAs[Double]("f1")
-    assert(f1 >= 0.99, s"pairwise F1 $f1 below gate with pq prefilter on")
-  }
-
   test("blocking recall: every intra-group pair is a candidate pair") {
     import spark.implicits._
     val labeled = result.trees.toDF().select($"id", $"groupId").where($"groupId" >= 0)

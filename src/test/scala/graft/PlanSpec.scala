@@ -254,35 +254,4 @@ class PlanSpec extends AnyFunSuite {
     // the intersection aggregate must be a hash aggregate (map-side combinable)
     assert(plan.contains("HashAggregate"), s"bag intersection lost hash agg\n$plan")
   }
-
-  test("pq-prefiltered scoring input: candidate gate stays equi-joined, no product") {
-    // the prefilter path (Pipeline.Config.pqPrefilter) inserts
-    // pairDistances + a filter BEFORE the tree-fetch joins — lock that
-    // the combined plan keeps every join an equi-join (a product here
-    // would be quadratic in candidates at 100 TB) and that the
-    // pq_dist gate survives as a Filter above the distance aggregate
-    import org.apache.spark.sql.functions.col
-    val s0 = spark; import s0.implicits._
-    val files = CorpusGen.corpus(spark, dir)
-    val r = graft.Pipeline.run(spark, files,
-      graft.Pipeline.Config(pqPrefilter = Some(graft.Pipeline.PqPrefilterTau)))
-    val prof = graft.operators.PqGrams.profiles(r.trees)
-    val gated = graft.operators.PqGrams
-      .pairDistances(r.pairs.select(col("idA"), col("idB")), prof)
-      .where(col("pq_dist") <= graft.Pipeline.PqPrefilterTau)
-      .select(col("idA"), col("idB"))
-    val plan = fmt(gated)
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
-      s"prefilter gate degraded to a product\n$plan")
-    // the τ gate itself: the comparison against the cutoff literal must
-    // survive in a Filter condition (the alias pq_dist is pruned away
-    // by the projection; a bare contains("Filter") would be vacuous —
-    // isnotnull pushdowns put Filter nodes in any equi-join plan)
-    // regex, not a literal contains: the double may render 0.2 / 0.20 /
-    // 2.0E-1 depending on Spark's explain formatting (round-5 advisor
-    // item) — match any numeric rendering of the cutoff
-    val tauPat = """<=\s*(0\.20*\b|\.2\b|2\.?0*E-1)""".r
-    assert(tauPat.findFirstIn(plan).isDefined,
-      s"pq distance <= tau gate missing from the plan\n$plan")
-  }
 }

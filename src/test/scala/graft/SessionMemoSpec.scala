@@ -2,10 +2,14 @@ package graft
 
 import graft.util.SessionMemo
 import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 
 /** The one memo every shared layer goes through: one build per
@@ -59,9 +63,11 @@ class SessionMemoSpec extends AnyFunSuite {
     ids.toSet
   }
 
-  /** Builds and forces five layers in `s`. Returns the session's temp
-    * dir and the persisted RDDs the layers' frames read; no reference
-    * to a layer outlives the call. */
+  /** Builds and forces the layers below in `s`, among them every
+    * iterative operator that checkpoints its rounds: CC, Hash-to-Min,
+    * CENTER, CC-Pivot, greedy 1:1 and match-merge. Returns the session's
+    * temp dir and the persisted RDDs the frames read; no reference to a
+    * layer outlives the call. */
   private def buildLayers(s: SparkSession): (java.io.File, Set[Int]) = {
     ErQueries.warm(s, dir)
     ErQueries.warmPq(s, dir)
@@ -69,36 +75,58 @@ class SessionMemoSpec extends AnyFunSuite {
     val pq = ErQueries.pqResults(s, dir)
     val snm = ErQueries.snmResults(s, dir)
     val m = ErQueries.metaResults(s, dir)
-    snm.count(); m.weights.count(); m.pruned.count()
-    val hashmin = ErQueries.clusterResults(s, dir).hashmin
-    hashmin.count()
+    val cl = ErQueries.clusterResults(s, dir)
+    val link = ErQueries.linkResults(s, dir)
+    // q_match_merge is built per call, not memoized: its caller releases it
+    val mm = SparkEntry.queries("q_match_merge")(s, dir)
+    SessionMemo.onRelease(s)(SessionMemo.unpersist(mm))
     val frames = Seq(r.trees.toDF(), r.pairs, r.scores.toDF(), r.matches,
       r.clusters, pq.profiles, pq.blockKeys, pq.pairs, snm, m.weights,
-      m.pruned, hashmin)
+      m.pruned, cl.hashmin, cl.center, cl.pivot, link.matched, mm)
+    frames.foreach(_.count())
     val tmp = new java.io.File(SessionMemo.tempDir(s, "graft_memo_spec"))
     assert(tmp.isDirectory)
     (tmp, frames.flatMap(readIds).toSet)
   }
 
+  /** Holds every RDD that stores a block while it listens. The context
+    * cleaner unpersists an RDD once a GC finds it unreachable, which
+    * would hide a round an operator persisted and then dropped; an RDD
+    * held here stays persisted until something unpersists it. */
+  private final class Pinned(sc: SparkContext) extends SparkListener {
+    val rdds = TrieMap.empty[Int, RDD[_]]
+    override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
+      val b = e.blockUpdatedInfo
+      for (id <- b.blockId.asRDDId if b.storageLevel.isValid && !rdds.contains(id.rddId);
+           r <- sc.getPersistentRDDs.get(id.rddId)) rdds.putIfAbsent(id.rddId, r)
+    }
+  }
+
   test("release unpersists, deletes and evicts what both sessions' layers hold") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet.toSet
-    val sessions = Seq(spark.newSession(), spark.newSession())
-    val (dirs, read) = sessions.map(buildLayers).unzip
-    val c = new Counted
-    sessions.foreach(c.memo(_, dir))
-    val persisted = sc.getPersistentRDDs.keySet.toSet -- before
-    val checkpointsRead = read.flatten.toSet
-    assert(checkpointsRead.nonEmpty && checkpointsRead.subsetOf(persisted))
+    val pinned = new Pinned(sc)
+    sc.addSparkListener(pinned)
+    try {
+      val sessions = Seq(spark.newSession(), spark.newSession())
+      val (dirs, read) = sessions.map(buildLayers).unzip
+      val c = new Counted
+      sessions.foreach(c.memo(_, dir))
+      val persisted = sc.getPersistentRDDs.keySet.toSet -- before
+      val checkpointsRead = read.flatten.toSet
+      assert(checkpointsRead.nonEmpty && checkpointsRead.subsetOf(persisted))
 
-    sessions.foreach(SessionMemo.release)
-    dirs.foreach(d => assert(!d.exists(), s"$d survived release"))
-    val left = sc.getPersistentRDDs.filter { case (id, _) => persisted(id) }
-    assert(left.isEmpty, "still persisted after release: " +
-      left.values.map(_.toDebugString).mkString("\n"))
-    // evicted: the next call in either session is a new build
-    sessions.foreach(c.memo(_, dir))
-    assert(c.builds.get === 4)
-    sessions.foreach(SessionMemo.release)
+      sessions.foreach(SessionMemo.release)
+      dirs.foreach(d => assert(!d.exists(), s"$d survived release"))
+      val left = (sc.getPersistentRDDs ++ pinned.rdds).filter { case (id, r) =>
+        !before(id) && r.getStorageLevel != StorageLevel.NONE
+      }
+      assert(left.isEmpty, "still persisted after release: " +
+        left.values.map(_.toDebugString).mkString("\n"))
+      // evicted: the next call in either session is a new build
+      sessions.foreach(c.memo(_, dir))
+      assert(c.builds.get === 4)
+      sessions.foreach(SessionMemo.release)
+    } finally sc.removeSparkListener(pinned)
   }
 }

@@ -4,13 +4,15 @@
 Implements the published ZSS algorithm (Zhang & Shasha 1989; same spec
 as SURVEY.md §2.2 — written fresh here, no reference code available in
 this sandbox) over the SAME flattened postorder arrays the engine
-scores, read from a parquet dump produced by `graft.tools.TreesDump`.
+scores, read from a parquet dump produced by `graft.tools.Profile trees`.
 This stands in for the reference library's single-node throughput,
 which it publishes nowhere (BASELINE.md): the reference is pure Python
 with this exact DP, so pairs/sec here ≈ its ceiling (it would be lower
 still, since zss re-annotates both trees on every distance() call).
 
-Usage: python3 tools/py_zss_baseline.py /tmp/trees_sample [n_pairs]
+Usage:
+  sbt "runMain graft.tools.Profile trees <sfDir> <dumpDir>"
+  python3 tools/py_zss_baseline.py <dumpDir> [n_pairs]
 """
 import sys, time
 import pandas as pd
