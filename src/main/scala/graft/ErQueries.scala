@@ -132,9 +132,15 @@ object ErQueries {
     r
   }
 
-  private final case class StreamTwin(
-      er: graft.streaming.StreamingEr.ErState,
-      golden: graft.streaming.StreamingSurvivorship.GoldenState)
+  private final class StreamTwin(
+      val er: graft.streaming.StreamingEr.ErState,
+      val golden: graft.streaming.StreamingSurvivorship.GoldenState,
+      deleted: => graft.streaming.StreamingEr.ErState) {
+    /** er_stream_retract's state: the '0'-prefix ids deleted from `er`
+      * and committed as the stream's next generation. Built once: a
+      * second commit would prune the generation `er` reads. */
+    lazy val retracted: graft.streaming.StreamingEr.ErState = deleted
+  }
 
   /** Incremental-ER twin of [[results]]: the final state after feeding
     * the corpus through [[graft.streaming.StreamingEr.processBatchBucketed]]
@@ -166,7 +172,8 @@ object ErQueries {
       gs = Some(graft.streaming.StreamingSurvivorship.update(
         st.clusters, battrs, gs))
     }
-    StreamTwin(st, gs.get)
+    new StreamTwin(st, gs.get, graft.streaming.StreamingEr.processDeletes(spark,
+      st.trees.toDF().select($"id").where($"id".startsWith("0")), io, root, numBuckets))
   }
 
   /** Force the shared pipeline's persisted stages once, so per-query
@@ -464,15 +471,12 @@ object ErQueries {
       streamResults(s, dir).er.clusters.orderBy(col("id"))
     }),
     // streaming right-to-erasure: the same deterministic '0'-prefix
-    // delete set applied to the storage-backed INCREMENTAL state via
+    // delete set committed to the storage-backed INCREMENTAL state via
     // processDeletes — trees/index/matches purged, components
     // re-derived. The oracle recomputes CC over the stream's own dumped
     // cumulative matches pruned of deleted endpoints.
     "er_stream_retract" -> ((s, dir) => {
-      val st = streamResults(s, dir).er
-      val del = st.trees.toDF().select(col("id")).where(col("id").startsWith("0"))
-      graft.streaming.StreamingEr.processDeletes(s, del, st)
-        .clusters.orderBy(col("id"))
+      streamResults(s, dir).retracted.clusters.orderBy(col("id"))
     }),
     // the incrementally-maintained golden-record table after the 2-batch
     // stream: only clusters whose membership changed are recomputed per

@@ -11,42 +11,40 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Unlike the sketch table (whose union is idempotent by itself), an
   * exact-sum fold applied twice DOUBLE-COUNTS — so replay safety comes
-  * from the same generation discipline as StreamingEr: batch n writes
-  * `state_b{n}` computed from `state_b{n-1}` ⊕ agg(delta_n), both
-  * `_SUCCESS`-gated. Re-delivering batch n recomputes `state_b{n}`
-  * from the UNCHANGED `state_b{n-1}` — same result, not a double
-  * application. Reads resume from the latest complete generation.
-  * Each generation is #groups rows — metadata-sized, O(delta) work per
-  * batch, never an O(history) rescan.
+  * from [[StateGenerations]]: batch n commits generation `agg_state_b{n}`
+  * computed from the latest complete generation below n ⊕ agg(delta_n).
+  * Re-delivering batch n recomputes `agg_state_b{n}` from the UNCHANGED
+  * generation below it — same result, not a double application — and
+  * the store keeps only the newest generations, so state does not grow
+  * with the stream's age. Reads resume from the latest complete
+  * generation. Each generation is #groups rows — metadata-sized,
+  * O(delta) work per batch, never an O(history) rescan.
   */
 object StreamingAgg {
 
-  val TablePrefix = "agg_state_b"
+  private def store(spark: SparkSession, io: TableIO) =
+    new StateGenerations(spark, io, "agg", Seq(StateGenerations.Table("state")))
 
   /** Latest complete generation number, if any. */
   def latestGen(spark: SparkSession, io: TableIO): Option[Long] =
-    io.listTables(spark, TablePrefix)
-      .map(_.stripPrefix(TablePrefix).toLong).sorted.lastOption
+    store(spark, io).latest.map(_.number)
 
   /** Current state (latest complete generation). */
   def state(spark: SparkSession, io: TableIO): Option[DataFrame] =
-    latestGen(spark, io).map(g => io.read(spark, s"$TablePrefix$g"))
+    store(spark, io).latest.map(_("state"))
 
-  /** Fold one micro-batch: state_b{batchId} = prev ⊕ agg(batch). */
+  /** Fold one micro-batch: generation batchId = prev ⊕ agg(batch). */
   def processBatch(batch: DataFrame, batchId: Long, groupCols: Seq[String],
                    sumCols: Seq[String], io: TableIO): Unit = {
-    val spark = batch.sparkSession
+    val st = store(batch.sparkSession, io)
     val deltaAgg = IncrementalAgg.aggregate(batch, groupCols, sumCols)
     // resume from the latest generation BELOW this batch id — a replay
     // of batch n must not fold into n's own (possibly complete) output
-    val prev = io.listTables(spark, TablePrefix)
-      .map(_.stripPrefix(TablePrefix).toLong).filter(_ < batchId).sorted.lastOption
-      .map(g => io.read(spark, s"$TablePrefix$g"))
-    val next = prev match {
-      case Some(st) => IncrementalAgg.merge(st, deltaAgg, groupCols, sumCols)
+    val next = st.latestBelow(batchId).map(_("state")) match {
+      case Some(prev) => IncrementalAgg.merge(prev, deltaAgg, groupCols, sumCols)
       case None => deltaAgg
     }
-    io.write(next, s"$TablePrefix$batchId")
+    st.commitAt(batchId, "state" -> next)
   }
 
   /** foreachBatch wiring for a streaming source. */

@@ -39,10 +39,10 @@ object StreamingDedup {
 
   /** One micro-batch against durable state under `bucketRoot`/`io` —
     * self-resuming like [[StreamingEr.processBatchBucketed]]: every call
-    * finds the LATEST complete state generation and writes the next, so
-    * a crash or restart between batches loses nothing. Generations older
-    * than `retain` are garbage-collected after each successful write —
-    * storage stays O(retain), not O(batches). `batchesSeen` counts
+    * finds the LATEST complete [[StateGenerations]] generation (the
+    * index bucketed by key, then the pairs table) and commits the next,
+    * so a crash or restart between batches loses nothing and storage
+    * stays at two generations, not O(batches). `batchesSeen` counts
     * generations ever written (GC does not reset it). */
   def processBatchBucketed(
       spark: SparkSession,
@@ -52,53 +52,25 @@ object StreamingDedup {
       io: graft.sources.TableIO,
       bucketRoot: String,
       numBuckets: Int,
-      p: Dedup.MinHashParams = Dedup.MinHashParams(),
-      prefix: String = "dstream",
-      retain: Int = 2): DedupState = {
-    import graft.sources.BucketedState
-    require(retain >= 1, "must retain at least the latest generation")
+      p: Dedup.MinHashParams = Dedup.MinHashParams()): DedupState = {
     graft.Pipeline.tune(spark)
-
-    val tag = java.lang.Long.toHexString(
-      graft.util.Hashing.hashString(bucketRoot) & 0xffffffffL)
-    def tbl(kind: String, b: Int) = s"${prefix}_${tag}_${kind}_b$b"
-    def path(kind: String, b: Int) = s"$bucketRoot/${prefix}_${kind}_b$b"
-    def idxExists(b: Int): Boolean =
-      BucketedState.isComplete(spark, path("index", b))
-
-    val gens = StateGenerations.list(spark, bucketRoot, s"${prefix}_index_b")
-    val prev = StateGenerations.latestComplete(gens,
-      b => idxExists(b) && io.exists(spark, tbl("pairs", b)))
-    val k = prev.map(_ + 1).getOrElse(0)
-    val prevIdx = prev.map(b => BucketedState.readOrRegister(
-      spark, tbl("index", b), path("index", b), numBuckets, "key"))
-    val prevPairs = prev.map(b => io.read(spark, tbl("pairs", b)))
+    val store = new StateGenerations(spark, io, "dstream", Seq(
+      StateGenerations.Table("index", Some("key")), StateGenerations.Table("pairs")),
+      Some(StateGenerations.Buckets(bucketRoot, numBuckets)))
+    val prev = store.latest
+    val prevPairs = prev.map(_("pairs"))
 
     val merged = CandidateGen
-      .mergeCappedMembers(prevIdx, Dedup.minHashKeyed(newDocs, idCol, textCol, p), p.cap)
+      .mergeCappedMembers(prev.map(_("index")),
+        Dedup.minHashKeyed(newDocs, idCol, textCol, p), p.cap)
       .persist()
     val newPairs = CandidateGen.pairsWithNewMember(merged)
     val allPairs = prevPairs.map(_.unionByName(newPairs)).getOrElse(newPairs).distinct()
 
-    BucketedState.write(merged.select(col("key"), col("members")),
-      tbl("index", k), path("index", k), numBuckets, "key")
-    io.write(allPairs, tbl("pairs", k))
+    val g = store.commit("index" -> merged.select(col("key"), col("members")),
+      "pairs" -> allPairs)
     merged.unpersist()
-
-    // GC: generation k is complete, so anything ≤ k − retain can go
-    // (k − 1 stays as the crash-safety fallback at the default retain)
-    StateGenerations.prune(gens, k - retain) { g =>
-      // keyed artifact (the index dir the generation listing is built
-      // from) goes LAST — deleting it first and crashing would orphan
-      // the pairs table beyond any later prune's reach
-      io.delete(spark, tbl("pairs", g))
-      BucketedState.drop(spark, tbl("index", g), path("index", g))
-    }
-
-    DedupState(
-      index = BucketedState.read(spark, tbl("index", k)),
-      pairs = io.read(spark, tbl("pairs", k)),
-      batchesSeen = k + 1)
+    DedupState(index = g("index"), pairs = g("pairs"), batchesSeen = g.batchesSeen)
   }
 
   /** foreachBatch wiring: stop/restart/crash-safe — every micro-batch

@@ -36,9 +36,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 object StreamingEnrich {
 
   private def versionsOf(io: TableIO, spark: SparkSession, dimPrefix: String): Seq[Int] =
-    io.listTables(spark, s"${dimPrefix}_v")
-      .flatMap(n => scala.util.Try(n.stripPrefix(s"${dimPrefix}_v").toInt).toOption)
-      .sorted
+    StateGenerations.numbered(spark, io, s"${dimPrefix}_v").map(_.toInt)
 
   /** Publish `df` as the next dim version; returns the version number.
     * The snapshot is complete before it becomes discoverable. */
@@ -56,8 +54,7 @@ object StreamingEnrich {
   /** Drop all but the newest `retain` versions. */
   def pruneDimVersions(io: TableIO, spark: SparkSession, dimPrefix: String,
                        retain: Int = 2): Unit =
-    versionsOf(io, spark, dimPrefix).dropRight(retain)
-      .foreach(v => io.delete(spark, s"${dimPrefix}_v$v"))
+    StateGenerations.dropOldest(spark, io, s"${dimPrefix}_v", retain)
 
   /** `stream`: any streaming DataFrame with `keyCol`; each micro-batch
     * is left-joined against the latest complete `<dimPrefix>_v<N>`

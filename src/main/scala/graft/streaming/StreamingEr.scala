@@ -21,8 +21,8 @@ import org.apache.spark.storage.StorageLevel
   * round-trips through storage every batch, with the block index kept as
   * a key-bucketed table of capped member arrays, so a batch shuffles
   * only its delta. [[startCheckpointedBucketed]] wires it into a
-  * Structured Streaming query and [[processDeletes]] applies a deletion
-  * batch to a returned state.
+  * Structured Streaming query and [[processDeletes]] commits a deletion
+  * batch as the next state generation.
   *
   * Scale notes (10^12-file deployment shape):
   *  - State (trees, block index, assignments) lives in tables bucketed
@@ -47,14 +47,12 @@ import org.apache.spark.storage.StorageLevel
   */
 object StreamingEr {
 
-  /** Table-name prefix of every state table the stream writes. */
-  private val Prefix = "bstream"
-  /** State generations kept on disk; older ones are pruned per batch. */
-  private val Retain = 2
+  /** Name of the stream's state generations ([[StateGenerations]]). */
+  private val Name = "bstream"
 
   /** Running state after processing a batch: storage read-backs of the
-    * tables the batch just wrote (checkpointed frames after
-    * [[processDeletes]]), so no state holds lineage into an earlier one.
+    * tables the batch (or [[processDeletes]]) just wrote, so no state
+    * holds lineage into an earlier one.
     * `matches` is the cumulative match edge set — the clusters are
     * provably CC(matches) (star contraction preserves connectivity),
     * which is what the DuckDB oracle recomputes independently. */
@@ -91,41 +89,71 @@ object StreamingEr {
     }
   }
 
+  /** The stream's generations: trees bucketed by id (the replay guard
+    * probes them without an exchange), the capped block index bucketed
+    * by key, then clusters and cumulative matches as `TableIO` tables. */
+  private def generations(spark: SparkSession, io: graft.sources.TableIO,
+      bucketRoot: String, numBuckets: Int): StateGenerations =
+    new StateGenerations(spark, io, Name, Seq(
+      StateGenerations.Table("trees", Some("id")),
+      StateGenerations.Table("index", Some("key")),
+      StateGenerations.Table("clusters"),
+      StateGenerations.Table("matches")),
+      Some(StateGenerations.Buckets(bucketRoot, numBuckets)))
+
+  /** The state a generation holds; `keyed` is the capped index exploded
+    * to (key, id) — feeding it onward is equivalent by cap
+    * subset-monotonicity. */
+  private def stateOf(spark: SparkSession, g: StateGenerations#Generation): ErState = {
+    import spark.implicits._
+    ErState(
+      trees = g("trees").as[TreeRow],
+      keyed = g("index").select($"key", explode($"members").as("id")),
+      clusters = g("clusters"),
+      matches = g("matches"),
+      batchesSeen = g.batchesSeen)
+  }
+
   /** Deletion micro-batch — right-to-erasure in the incremental path:
-    * remove `deleteIds` from every state surface (trees, block index,
-    * cumulative matches) and re-derive components over the retained
-    * edges (the [[graft.operators.Clustering.retract]] shape — CC is
-    * not incrementally maintainable under deletion, so the component
-    * pass recomputes; nothing is re-parsed or re-scored).
+    * remove `deleteIds` from every state surface of the latest generation
+    * under `bucketRoot`/`io` (trees, block index, cumulative matches),
+    * re-derive components over the retained edges (the
+    * [[graft.operators.Clustering.retract]] shape — CC is not
+    * incrementally maintainable under deletion, so the component pass
+    * recomputes; nothing is re-parsed or re-scored) and commit the result
+    * as the next generation, so the next micro-batch resumes from the
+    * purged state.
     *
     * Cap caveat, stated honestly: the capped block index cannot
     * resurrect an id the cap evicted EARLIER, so a delete frees a cap
     * slot only for future arrivals. When no block ever overflowed its
-    * cap, the result is identical to the batch pipeline re-run on the
-    * surviving corpus (asserted in StreamingErSpec); when one did, the
-    * stream may miss future pairs a fresh batch run would find — the
-    * same displacement bound the cap already imposes on additions.
+    * cap, the result — and every batch after it — is identical to the
+    * batch pipeline re-run on the surviving corpus (asserted in
+    * StreamingErSpec); when one did, the stream may miss future pairs a
+    * fresh batch run would find — the same displacement bound the cap
+    * already imposes on additions.
     *
-    * Every output surface is eagerly checkpointed, so the returned
-    * state holds no references into `prev` — the caller decides when
-    * (or whether) to release the pre-deletion state. */
-  def processDeletes(spark: SparkSession, deleteIds: DataFrame, prev: ErState): ErState = {
+    * Returns the storage read-backs of the committed generation. */
+  def processDeletes(
+      spark: SparkSession,
+      deleteIds: DataFrame,
+      io: graft.sources.TableIO,
+      bucketRoot: String,
+      numBuckets: Int): ErState = {
     import spark.implicits._
-    val del = deleteIds.select($"id").distinct().localCheckpoint(true)
-    val trees = prev.trees.join(del, Seq("id"), "left_anti").as[TreeRow]
-      .localCheckpoint(true)
-    val keyed = prev.keyed.join(del, Seq("id"), "left_anti")
-      .localCheckpoint(true)
-    val matches = prev.matches
-      .join(del.withColumnRenamed("id", "idA"), Seq("idA"), "left_anti")
-      .join(del.withColumnRenamed("id", "idB"), Seq("idB"), "left_anti")
-      .localCheckpoint(true)
-    val clusters = Clustering
-      .connectedComponents(matches, trees.toDF().select($"id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    clusters.count()
-    ErState(trees, keyed = keyed, clusters = clusters, matches = matches,
-      batchesSeen = prev.batchesSeen + 1)
+    val store = generations(spark, io, bucketRoot, numBuckets)
+    val prev = store.latest.getOrElse(throw new IllegalStateException(
+      s"no complete stream state under $bucketRoot to delete from"))
+    val del = deleteIds.select($"id").distinct()
+    def purge(df: DataFrame, c: String) =
+      df.join(del.withColumnRenamed("id", c), Seq(c), "left_anti")
+    val trees = purge(prev("trees"), "id")
+    val index = purge(prev("index").select($"key", explode($"members").as("id")), "id")
+      .groupBy($"key").agg(sort_array(collect_list($"id")).as("members"))
+    val matches = purge(purge(prev("matches"), "idA"), "idB")
+    val clusters = Clustering.connectedComponents(matches, trees.select($"id"))
+    stateOf(spark, store.commit("trees" -> trees, "index" -> index,
+      "clusters" -> clusters, "matches" -> matches))
   }
 
   /** Process one micro-batch with the block index persisted as a BUCKETED
@@ -151,14 +179,15 @@ object StreamingEr {
     * by the batch.
     *
     * The call is self-resuming: state round-trips through storage every
-    * batch (which also truncates lineage), gated on `_SUCCESS` under
-    * `bucketRoot`/`io` — a crash between batches resumes at the last
-    * complete batch, and after a process restart the bucketed tables
-    * (trees by id, index by key) are RE-REGISTERED from their files via
-    * bucketed-DDL ([[graft.sources.BucketedState.register]]), so the
-    * zero-exchange state read survives restarts without a metastore.
-    * Trees are bucketed by id so the at-least-once replay
-    * guard's anti-join probes state without re-shuffling it.
+    * batch (which also truncates lineage) as one [[StateGenerations]]
+    * generation under `bucketRoot`/`io` — a crash between batches
+    * resumes at the last complete generation, and after a process
+    * restart the bucketed tables (trees by id, index by key) are
+    * RE-REGISTERED from their files via bucketed-DDL
+    * ([[graft.sources.BucketedState.register]]), so the zero-exchange
+    * state read survives restarts without a metastore. Trees are
+    * bucketed by id so the at-least-once replay guard's anti-join probes
+    * state without re-shuffling it.
     *
     * `numBuckets` fixes the state side's partitioning for all future
     * merges — size it like a shuffle-partition count for the full-scale
@@ -172,53 +201,24 @@ object StreamingEr {
       numBuckets: Int,
       cfg: Pipeline.Config = Pipeline.Config()): ErState = {
     import spark.implicits._
-    import graft.sources.BucketedState
     Pipeline.tune(spark)
 
-    // table names are tagged with the root so a reused session catalog
-    // never resolves a same-named table from an older root
-    val tag = java.lang.Long.toHexString(
-      graft.util.Hashing.hashString(bucketRoot) & 0xffffffffL)
-    // one naming rule for catalog (trees/index) AND TableIO
-    // (clusters/matches) state: two bucketed streams sharing a session
-    // catalog or one TableIO root must never resolve each other's tables
-    // during the resume scan
-    def tbl(kind: String, b: Int) = s"${Prefix}_${tag}_${kind}_b$b"
-    def path(kind: String, b: Int) = s"$bucketRoot/${Prefix}_${kind}_b$b"
-    def bucketedExists(kind: String, b: Int): Boolean =
-      BucketedState.isComplete(spark, path(kind, b))
-    // catalog read when the session still has the table (pre-distributed,
-    // zero-exchange state side); after a process restart the table is
-    // RE-REGISTERED over its bucketed files (CREATE TABLE … CLUSTERED BY
-    // … LOCATION — the bucket ids live in the file names), so the
-    // zero-exchange merge survives restarts even without a metastore
-    def bucketedRead(kind: String, b: Int): org.apache.spark.sql.DataFrame = {
-      val col = if (kind == "trees") "id" else "key"
-      BucketedState.readOrRegister(spark, tbl(kind, b), path(kind, b), numBuckets, col)
-    }
-    def idxTable(b: Int) = tbl("index", b)
-    def idxPath(b: Int) = path("index", b)
-
-    val gens = StateGenerations.list(spark, bucketRoot, s"${Prefix}_index_b")
-    val prev = StateGenerations.latestComplete(gens, g =>
-      bucketedExists("trees", g) && bucketedExists("index", g) &&
-        io.exists(spark, tbl("clusters", g)) &&
-        io.exists(spark, tbl("matches", g)))
-    val k = prev.map(_ + 1).getOrElse(0)
+    val store = generations(spark, io, bucketRoot, numBuckets)
+    val prev = store.latest
     // state persisted by a pre-tag version used untagged TableIO names;
     // resuming past it as "fresh" would silently drop the accumulated
     // clusters, so refuse loudly and tell the operator what to rename
-    if (k == 0 && io.exists(spark, s"${Prefix}_clusters_b0"))
+    if (prev.isEmpty && io.exists(spark, s"${Name}_clusters_b0"))
       throw new IllegalStateException(
-        s"found legacy untagged state '${Prefix}_clusters_b0' under this " +
-          s"TableIO root; rename the ${Prefix}_* tables to ${Prefix}_${tag}_* " +
+        s"found legacy untagged state '${Name}_clusters_b0' under this " +
+          s"TableIO root; rename the ${Name}_* tables to ${store.stem}_* " +
           "(or point the stream at a fresh root) before resuming")
     // trees state is bucketed by id: the replay guard's anti-join and any
     // id-probe read it pre-distributed — only the delta shuffles
-    val prevTrees = prev.map(b => bucketedRead("trees", b).as[TreeRow])
-    val prevIdx = prev.map(b => bucketedRead("index", b))
-    val prevClusters = prev.map(b => io.read(spark, tbl("clusters", b)))
-    val prevMatches = prev.map(b => io.read(spark, tbl("matches", b)))
+    val prevTrees = prev.map(_("trees").as[TreeRow])
+    val prevIdx = prev.map(_("index"))
+    val prevClusters = prev.map(_("clusters"))
+    val prevMatches = prev.map(_("matches"))
 
     val newTrees = freshTrees(spark,
       ParseStage.parse(newFiles, cfg.parse, cfg.blocking.mh), prevTrees)
@@ -243,38 +243,15 @@ object StreamingEr {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val allMatches = prevMatches.map(newEdges.unionByName(_)).getOrElse(newEdges)
 
-    BucketedState.write(allTrees.toDF(), tbl("trees", k), path("trees", k),
-      numBuckets, "id")
-    BucketedState.write(merged.select($"key", $"members"),
-      idxTable(k), idxPath(k), numBuckets, "key")
-    io.write(clusters, tbl("clusters", k))
-    io.write(allMatches, tbl("matches", k))
+    val g = store.commit("trees" -> allTrees.toDF(),
+      "index" -> merged.select($"key", $"members"),
+      "clusters" -> clusters, "matches" -> allMatches)
 
     newEdges.unpersist(); merged.unpersist()
     newTrees.unpersist(); allTrees.unpersist(); clusters.unpersist()
 
-    // GC: generation k is complete — storage stays O(Retain) generations
-    // instead of growing per batch for the stream's lifetime
-    StateGenerations.prune(gens, k - Retain) { g =>
-      // keyed artifact (the index dir the generation listing is built
-      // from) goes LAST — deleting it first and crashing would orphan
-      // the sibling tables beyond any later prune's reach
-      io.delete(spark, tbl("clusters", g))
-      io.delete(spark, tbl("matches", g))
-      BucketedState.drop(spark, tbl("trees", g), path("trees", g))
-      BucketedState.drop(spark, tbl("index", g), path("index", g))
-    }
-
-    // hand back storage read-backs (checkpoint truth, truncated lineage);
-    // keyed is the capped index exploded to (key, id) — feeding it onward
-    // is equivalent by cap subset-monotonicity
-    ErState(
-      trees = bucketedRead("trees", k).as[TreeRow],
-      keyed = bucketedRead("index", k)
-        .select($"key", explode($"members").as("id")),
-      clusters = io.read(spark, tbl("clusters", k)),
-      matches = io.read(spark, tbl("matches", k)),
-      batchesSeen = k + 1)
+    // hand back storage read-backs (checkpoint truth, truncated lineage)
+    stateOf(spark, g)
   }
 
   /** foreachBatch wiring: every micro-batch resumes from the latest

@@ -46,68 +46,22 @@ object StreamingLink {
     LinkState(all, matched, prev.map(_.batches).getOrElse(0) + 1)
   }
 
-  /** Durable twin of [[update]]: state round-trips through `io`
-    * (`_SUCCESS`-gated tables, one generation per batch), so a crashed
-    * stream RESUMES at the last complete batch — the same
-    * kill-and-resume contract as StreamingEr's checkpointed path. The
-    * cumulative edge table is the authoritative state; the matched
-    * table is written alongside so readers never pay a re-match.
-    * Generation bookkeeping is [[StateGenerations]] over
-    * `io.listTables` (the io the state is written with is the ONE
-    * source of truth for what exists — no separate rootDir that could
-    * drift and silently resume from empty, and catalog-backed TableIOs
-    * work unchanged): a crash between the two writes leaves a half
-    * generation, which `latestComplete` skips and the retried batch
-    * overwrites, and generations older than `retain` are
-    * garbage-collected — storage stays O(retain), not O(batches), and a
-    * listing (not a scan-from-zero) finds the resume point, so pruned
-    * early generations can never make a restart silently begin from
-    * empty (the failure mode of the pre-round-5 exists-counting loop
-    * this replaced). GC deletes the edges table LAST: generations are
-    * keyed by the edges prefix, so deleting the keyed table first and
-    * crashing would orphan a matched table no later prune can find. */
+  /** Durable twin of [[update]]: state round-trips through `io` as one
+    * [[StateGenerations]] generation per batch (the cumulative edge
+    * table, the authoritative state, then the matched table, written
+    * alongside so readers never pay a re-match), so a crashed stream
+    * RESUMES at the last complete batch — the same kill-and-resume
+    * contract as StreamingEr's checkpointed path. */
   def updateDurable(
       spark: SparkSession,
       newEdges: DataFrame,
-      io: graft.sources.TableIO,
-      prefix: String = "slink",
-      retain: Int = 2): LinkState = {
-    require(retain >= 1, s"retain must be >= 1 (got $retain): retain 0 " +
-      "would GC the generation just written and destroy all durable state")
-    val (prev, k) = resumeState(spark, io, prefix)
+      io: graft.sources.TableIO): LinkState = {
+    val store = new StateGenerations(spark, io, "slink",
+      Seq(StateGenerations.Table("edges"), StateGenerations.Table("matched")))
+    val prev = store.latest.map(g =>
+      LinkState(g("edges"), g("matched"), g.batchesSeen))
     val next = update(spark, newEdges, prev)
-    io.write(next.edges, s"${prefix}_edges_b$k")
-    io.write(next.matched, s"${prefix}_matched_b$k")
-    // GC listing is listTablesAll: a remnant that lost its _SUCCESS in
-    // a crashed delete must still be visible to later prunes
-    StateGenerations.prune(
-      StateGenerations.fromNames(
-        io.listTablesAll(spark, s"${prefix}_edges_b"), s"${prefix}_edges_b"),
-      k - retain) { g =>
-      io.delete(spark, s"${prefix}_matched_b$g")
-      io.delete(spark, s"${prefix}_edges_b$g") // keyed table last
-    }
+    store.commit("edges" -> next.edges, "matched" -> next.matched)
     next
-  }
-
-  /** Latest COMPLETE generation under `prefix` (both tables present)
-    * rebuilt as a LinkState, plus the generation index the NEXT batch
-    * writes. */
-  def resumeState(
-      spark: SparkSession,
-      io: graft.sources.TableIO,
-      prefix: String): (Option[LinkState], Int) = {
-    val gens = StateGenerations.fromNames(
-      io.listTables(spark, s"${prefix}_edges_b"), s"${prefix}_edges_b")
-    val complete = (g: Int) =>
-      io.exists(spark, s"${prefix}_edges_b$g") &&
-        io.exists(spark, s"${prefix}_matched_b$g")
-    StateGenerations.latestComplete(gens, complete) match {
-      case None => (None, 0)
-      case Some(g) => (Some(LinkState(
-        edges = io.read(spark, s"${prefix}_edges_b$g"),
-        matched = io.read(spark, s"${prefix}_matched_b$g"),
-        batches = g + 1)), g + 1)
-    }
   }
 }

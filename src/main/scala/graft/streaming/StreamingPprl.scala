@@ -87,51 +87,20 @@ object StreamingPprl {
       .distinct()
 
   /** Durable fold: each batch resumes from the latest COMPLETE block
-    * generation in storage (TableIO `_SUCCESS`-gated) and writes the
-    * next — a crash between batches loses nothing, a half-written
-    * generation is refused on resume and overwritten by the retry,
-    * and at-least-once redelivery is idempotent because the fold is
-    * (set-union state). The returned state's blocks read back FROM
+    * generation in storage ([[StateGenerations]], `_SUCCESS`-gated) and
+    * commits the next — a crash between batches loses nothing, a
+    * half-written generation is refused on resume and overwritten by the
+    * retry, and at-least-once redelivery is idempotent because the fold
+    * is (set-union state). The returned state's blocks read back FROM
     * storage, so lineage is cut at the table and the next fold's
-    * full-outer join starts from persisted data — the same
-    * [[StateGenerations]] discipline as [[StreamingLink.updateDurable]]:
-    * resume is a LISTING (not a scan-from-zero exists loop, whose cost
-    * grew linearly with stream age and which a pruned early generation
-    * silently truncated at the gap), and generations older than
-    * `retain` are garbage-collected so storage stays O(retain), not
-    * O(batches). GC lists via `listTablesAll` so a remnant that lost
-    * its `_SUCCESS` in a crashed delete stays visible to later prunes. */
+    * full-outer join starts from persisted data. */
   def updateDurable(spark: SparkSession, newKeyed: DataFrame,
-                    io: graft.sources.TableIO, prefix: String = "spprl",
-                    cfg: Pprl.HlshConfig = Pprl.HlshConfig(),
-                    retain: Int = 2): State = {
-    require(retain >= 1, s"retain must be >= 1 (got $retain): retain 0 " +
-      "would GC the generation just written and destroy all durable state")
-    val (prev, k) = resumeState(spark, io, prefix)
-    val next = foldBatch(prev, newKeyed, cfg)
-    io.write(next.blocks, s"${prefix}_blocks_b$k")
-    StateGenerations.prune(
-      StateGenerations.fromNames(
-        io.listTablesAll(spark, s"${prefix}_blocks_b"), s"${prefix}_blocks_b"),
-      k - retain) { g =>
-      io.delete(spark, s"${prefix}_blocks_b$g")
-    }
-    State(io.read(spark, s"${prefix}_blocks_b$k"), k + 1)
-  }
-
-  /** Latest COMPLETE generation under `prefix` rebuilt as a State, plus
-    * the generation index the NEXT batch writes — gap-tolerant: found
-    * by listing, so GC'd early generations cannot truncate the search. */
-  def resumeState(spark: SparkSession, io: graft.sources.TableIO,
-                  prefix: String): (Option[State], Int) = {
-    val gens = StateGenerations.fromNames(
-      io.listTables(spark, s"${prefix}_blocks_b"), s"${prefix}_blocks_b")
-    StateGenerations.latestComplete(gens,
-      g => io.exists(spark, s"${prefix}_blocks_b$g")) match {
-      case None => (None, 0)
-      case Some(g) =>
-        (Some(State(io.read(spark, s"${prefix}_blocks_b$g"), g + 1)), g + 1)
-    }
+                    io: graft.sources.TableIO,
+                    cfg: Pprl.HlshConfig = Pprl.HlshConfig()): State = {
+    val store = new StateGenerations(spark, io, "spprl", Seq(StateGenerations.Table("blocks")))
+    val prev = store.latest.map(g => State(g("blocks"), g.batchesSeen))
+    val g = store.commit("blocks" -> foldBatch(prev, newKeyed, cfg).blocks)
+    State(g("blocks"), g.batchesSeen)
   }
 
   /** foreachBatch wiring over a stream of documents already encoded to

@@ -21,8 +21,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Durability/replay: each batch writes its partial under a
   * batch-numbered, `_SUCCESS`-gated table (overwrite semantics), so an
   * at-least-once re-delivery of a batch overwrites the same table with
-  * the same sketch — idempotent, like the other foreachBatch state
-  * machines here (StreamingDedup, StreamingEr).
+  * the same sketch — idempotent with no fold at all. These tables are
+  * not [[StateGenerations]]: a read unions every batch's partial, so
+  * none is superseded and none is pruned.
   *
   * The same batch-numbered shape carries the three Datasketches
   * families ([[graft.operators.DsSketches]]): theta (live distinct sets

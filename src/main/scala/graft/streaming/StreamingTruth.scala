@@ -52,70 +52,23 @@ object StreamingTruth {
       prev.map(_.batches).getOrElse(0) + 1)
   }
 
-  /** Durable twin of [[update]]: state round-trips through `io`
-    * (`_SUCCESS`-gated tables, one generation per batch), so a crashed
-    * stream RESUMES at the last complete batch. The cumulative claims
-    * table is the authoritative state; trust and resolution are written
-    * alongside so readers never re-run the fixpoint. Generation
-    * bookkeeping is [[StateGenerations]] over `io.listTables` (the io
-    * the state is written with is the ONE source of truth for what
-    * exists — no separate rootDir that could drift and silently resume
-    * from empty, and catalog-backed TableIOs work unchanged): a crash
-    * between the three writes leaves a half generation, which
-    * `latestComplete` skips and the retried batch overwrites, and
-    * generations older than `retain` are garbage-collected — storage
-    * stays O(retain), not O(batches), and a listing (not a
-    * scan-from-zero) finds the resume point, so pruned early
-    * generations can never make a restart silently begin from empty.
-    * GC deletes the claims table LAST: generations are keyed by the
-    * claims prefix, so deleting the keyed table first and crashing
-    * would orphan trust/resolved tables no later prune can find. */
+  /** Durable twin of [[update]]: state round-trips through `io` as one
+    * [[StateGenerations]] generation per batch (the cumulative claims
+    * table, the authoritative state, then trust and resolution, written
+    * alongside so readers never re-run the fixpoint), so a crashed
+    * stream RESUMES at the last complete batch. */
   def updateDurable(
       spark: SparkSession,
       newClaims: DataFrame,
-      io: graft.sources.TableIO,
-      prefix: String = "struth",
-      retain: Int = 2): TruthState = {
-    require(retain >= 1, s"retain must be >= 1 (got $retain): retain 0 " +
-      "would GC the generation just written and destroy all durable state")
-    val (prev, k) = resumeState(spark, io, prefix)
+      io: graft.sources.TableIO): TruthState = {
+    val store = new StateGenerations(spark, io, "struth", Seq(
+      StateGenerations.Table("claims"), StateGenerations.Table("trust"),
+      StateGenerations.Table("resolved")))
+    val prev = store.latest.map(g =>
+      TruthState(g("claims"), g("trust"), g("resolved"), g.batchesSeen))
     val next = update(spark, newClaims, prev)
-    io.write(next.claims, s"${prefix}_claims_b$k")
-    io.write(next.trust, s"${prefix}_trust_b$k")
-    io.write(next.resolved, s"${prefix}_resolved_b$k")
-    // GC listing is listTablesAll: a remnant that lost its _SUCCESS in
-    // a crashed delete must still be visible to later prunes
-    StateGenerations.prune(
-      StateGenerations.fromNames(
-        io.listTablesAll(spark, s"${prefix}_claims_b"), s"${prefix}_claims_b"),
-      k - retain) { g =>
-      io.delete(spark, s"${prefix}_trust_b$g")
-      io.delete(spark, s"${prefix}_resolved_b$g")
-      io.delete(spark, s"${prefix}_claims_b$g") // keyed table last
-    }
+    store.commit("claims" -> next.claims, "trust" -> next.trust,
+      "resolved" -> next.resolved)
     next
-  }
-
-  /** Latest COMPLETE generation under `prefix` (all three tables
-    * present) rebuilt as a TruthState, plus the generation index the
-    * NEXT batch writes. */
-  def resumeState(
-      spark: SparkSession,
-      io: graft.sources.TableIO,
-      prefix: String): (Option[TruthState], Int) = {
-    val gens = StateGenerations.fromNames(
-      io.listTables(spark, s"${prefix}_claims_b"), s"${prefix}_claims_b")
-    val complete = (g: Int) =>
-      io.exists(spark, s"${prefix}_claims_b$g") &&
-        io.exists(spark, s"${prefix}_trust_b$g") &&
-        io.exists(spark, s"${prefix}_resolved_b$g")
-    StateGenerations.latestComplete(gens, complete) match {
-      case None => (None, 0)
-      case Some(g) => (Some(TruthState(
-        claims = io.read(spark, s"${prefix}_claims_b$g"),
-        trust = io.read(spark, s"${prefix}_trust_b$g"),
-        resolved = io.read(spark, s"${prefix}_resolved_b$g"),
-        batches = g + 1)), g + 1)
-    }
   }
 }

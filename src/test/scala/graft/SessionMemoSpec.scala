@@ -77,9 +77,7 @@ class SessionMemoSpec extends AnyFunSuite {
     val m = ErQueries.metaResults(s, dir)
     val cl = ErQueries.clusterResults(s, dir)
     val link = ErQueries.linkResults(s, dir)
-    // q_match_merge is built per call, not memoized: its caller releases it
     val mm = SparkEntry.queries("q_match_merge")(s, dir)
-    SessionMemo.onRelease(s)(SessionMemo.unpersist(mm))
     val frames = Seq(r.trees.toDF(), r.pairs, r.scores.toDF(), r.matches,
       r.clusters, pq.profiles, pq.blockKeys, pq.pairs, snm, m.weights,
       m.pruned, cl.hashmin, cl.center, cl.pivot, link.matched, mm)

@@ -58,4 +58,21 @@ class StreamingAggSpec extends AnyFunSuite {
       assert(before == full)
     }
   }
+
+  test("a _compact_old table beside the generations: no crash, GC keeps Retain generations") {
+    withTempRoot("graft_sagggc") { root =>
+      val io = new ParquetTableIO(root)
+      val part = (b: Int) => events.where(col("event_id") % 4 === b)
+      StreamingAgg.processBatch(part(0), 0L, Seq("event_type"), Seq("value"), io)
+      // a complete table ParquetTableIO.compact leaves mid-swap: it
+      // shares the generations' prefix but is not a generation
+      io.write(StreamingAgg.state(spark, io).get, "agg_state_b0_compact_old")
+      for (b <- 1 until 4)
+        StreamingAgg.processBatch(part(b), b.toLong, Seq("event_type"), Seq("value"), io)
+      assert(StreamingAgg.latestGen(spark, io).contains(3L))
+      assert(asMap(StreamingAgg.state(spark, io).get) == full)
+      val gens = new java.io.File(root).list().filter(_.matches("agg_state_b\\d+")).sorted.toSeq
+      assert(gens == Seq("agg_state_b2", "agg_state_b3"), s"generations on disk: $gens")
+    }
+  }
 }

@@ -35,15 +35,18 @@ class StreamingErSpec extends AnyFunSuite {
   test("deletes: add-add-delete == batch pipeline over the surviving corpus") {
     import org.apache.spark.sql.functions.col
     val files = CorpusGen.corpus(spark, "/root/testdata/sf0.001").persist()
+    def idOf(f: FileRow) = graft.util.Hashing.rowId128Hex(f.repo, f.path, f.commit)
     try withTempRoot("graft_stream_del") { root =>
-      val state = stream(files, 2, root)
+      val io = new ParquetTableIO(root)
+      val state = (0 until 2).map(b =>
+        StreamingEr.processBatchBucketed(spark, part(files, 3, b), io, root, 4)).last
 
       // delete a deterministic slice (ids whose first hex digit is '0')
       val del = state.trees.toDF().select(col("id"))
         .where(col("id").startsWith("0")).persist()
       val delIds = del.collect().map(_.getString(0)).toSet
       assert(delIds.nonEmpty, "slice must be non-trivial")
-      val afterDel = StreamingEr.processDeletes(spark, del, state)
+      val afterDel = StreamingEr.processDeletes(spark, del, io, root, 4)
 
       // every surface purged
       assert(afterDel.trees.toDF().where(col("id").startsWith("0")).count() == 0)
@@ -53,10 +56,21 @@ class StreamingErSpec extends AnyFunSuite {
 
       // equals the batch pipeline run on the surviving corpus (no block
       // overflows its cap on this corpus, so no displacement caveat)
-      val surviving = files.filter((f: FileRow) => !delIds.contains(
-        graft.util.Hashing.rowId128Hex(f.repo, f.path, f.commit)))
-      val batchClusters = pairsOf(Pipeline.run(spark, surviving).clusters)
-      assert(pairsOf(afterDel.clusters) == batchClusters)
+      val surviving = files.filter((f: FileRow) =>
+        math.floorMod(graft.util.Hashing.hashString(f.path), 3) < 2 && !delIds.contains(idOf(f)))
+      assert(pairsOf(afterDel.clusters) == pairsOf(Pipeline.run(spark, surviving).clusters))
+
+      // the delete is durable: the next micro-batch resumes from the
+      // purged generation, so no deleted id comes back
+      val next = StreamingEr.processBatchBucketed(spark, part(files, 3, 2), io, root, 4)
+      def ids(df: org.apache.spark.sql.DataFrame, c: String) =
+        df.select(col(c)).collect().map(_.getString(0)).toSet
+      val back = ids(next.trees.toDF(), "id") ++ ids(next.keyed, "id") ++
+        ids(next.clusters, "id") ++ ids(next.matches, "idA") ++ ids(next.matches, "idB")
+      assert((back & delIds).isEmpty, s"deleted ids came back: ${(back & delIds).take(5)}")
+      val batchClusters = pairsOf(Pipeline.run(spark,
+        surviving.unionByName(part(files, 3, 2))).clusters)
+      assert(pairsOf(next.clusters) == batchClusters)
       del.unpersist()
     } finally files.unpersist()
   }

@@ -49,37 +49,19 @@ class StreamingLinkSpec extends AnyFunSuite {
     assert(s3.edges.count() == s2.edges.count())
   }
 
-  test("durable fold: kill-and-resume, half-written generations skipped, GC keeps retain, fold == batch") {
+  test("kill-and-resume: resumed fold == batch") {
     withTempRoot("graft_slink") { root =>
-      val io = new graft.sources.ParquetTableIO(root)
-      val b1 = Seq(("l1", "r1", 3.0), ("l2", "r2", 2.0))
-      val b2 = Seq(("l3", "r1", 5.0), ("l2", "r3", 4.0))
-      val b3 = Seq(("l1", "r4", 9.0), ("l4", "r2", 1.0))
-      // two batches, then "crash" — each call resumes purely from storage
-      StreamingLink.updateDurable(spark, toDf(b1), io)
-      StreamingLink.updateDurable(spark, toDf(b2), io)
-      val (resumed, k) = StreamingLink.resumeState(spark, io, "slink")
-      assert(k == 2 && resumed.get.batches == 2)
-      assert(collectMatched(resumed.get.matched) ==
-        OneToOneMatching.sequentialGreedy(b1 ++ b2).toSet)
-      // a crash between the two writes leaves a HALF generation: the
-      // resume scan must refuse it and the retried batch overwrite it
-      io.write(toDf(b3), "slink_edges_b2")
-      val (afterCrash, k2) = StreamingLink.resumeState(spark, io, "slink")
-      assert(k2 == 2 && afterCrash.get.batches == 2, "half generation must not resume")
-      val st3 = StreamingLink.updateDurable(spark, toDf(b3), io, retain = 1)
-      assert(st3.batches == 3)
-      assert(collectMatched(st3.matched) ==
-        OneToOneMatching.sequentialGreedy(b1 ++ b2 ++ b3).toSet)
-      // retain = 1 at generation 2 pruned generations <= 1 — and the
-      // directory-listing resume still lands on the latest complete
-      // generation instead of restarting from empty past the hole
-      assert(!io.exists(spark, "slink_edges_b0") &&
-        !io.exists(spark, "slink_edges_b1"), "old generations must be GC'd")
-      val (fin, k3) = StreamingLink.resumeState(spark, io, "slink")
-      assert(k3 == 3 && fin.get.batches == 3,
-        "resume must survive pruned early generations")
-      assert(collectMatched(fin.get.matched) == collectMatched(st3.matched))
+      val batches = Seq(
+        Seq(("l1", "r1", 3.0), ("l2", "r2", 2.0)),
+        Seq(("l3", "r1", 5.0), ("l2", "r3", 4.0)),
+        Seq(("l1", "r4", 9.0), ("l4", "r2", 1.0)))
+      // each batch runs as a fresh process would: nothing is carried
+      // between calls but the storage under `root`
+      val last = batches.map(b =>
+        StreamingLink.updateDurable(spark, toDf(b), new graft.sources.ParquetTableIO(root))).last
+      assert(last.batches == 3)
+      assert(collectMatched(last.matched) ==
+        OneToOneMatching.sequentialGreedy(batches.flatten).toSet)
     }
   }
 
@@ -95,15 +77,12 @@ class StreamingLinkSpec extends AnyFunSuite {
       val g0 = new java.io.File(root, "slink_edges_b0")
       assert(new java.io.File(g0, "_SUCCESS").delete())
       assert(g0.exists())
-      StreamingLink.updateDurable(spark, toDf(b(3)), io, retain = 1)
+      val st = StreamingLink.updateDurable(spark, toDf(b(3)), io)
       assert(!g0.exists(), "un-gated generation remnant must still be GC'd")
-      // and the ungated remnant never participated in the resume
-      val (fin, k) = StreamingLink.resumeState(spark, io, "slink")
-      assert(k == 3 && fin.get.batches == 3)
-      // retain = 0 is refused loudly, not honored destructively
-      val e = intercept[IllegalArgumentException] {
-        StreamingLink.updateDurable(spark, toDf(b(4)), io, retain = 0) }
-      assert(e.getMessage.contains("retain"))
+      // the remnant never took part in the resume: generation 1 did
+      assert(st.batches == 3)
+      assert(collectMatched(st.matched) ==
+        OneToOneMatching.sequentialGreedy((1 to 3).flatMap(b)).toSet)
     }
   }
 

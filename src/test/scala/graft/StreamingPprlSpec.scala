@@ -81,56 +81,19 @@ class StreamingPprlSpec extends AnyFunSuite {
       "tombstone carries no members — state stays bounded")
   }
 
-  test("durable fold: kill-and-resume, half-written generation refused, purge crossing survives restart") {
+  test("kill-and-resume: resumed fold == batch") {
     val purge = 3
     withTempRoot("graft_spprl") { root =>
-      val io = new graft.sources.ParquetTableIO(root)
       val b1 = Seq("k" -> "a", "k" -> "b", "q" -> "x", "q" -> "y")
       val b2 = Seq("k" -> "c", "k" -> "d", "q" -> "z")   // kills k across the restart
-      updateDurable(spark, keyed(b1), io, cfg = Pprl.HlshConfig(purge = purge))
-      // "crash": everything below resumes purely from storage
-      val (resumed, k1) = resumeState(spark, io, "spprl")
-      assert(k1 == 1 && resumed.get.batchesSeen == 1)
-      assert(pairSet(pairs(resumed.get)) == batchPairs(b1, purge))
-      // a half-written generation (no _SUCCESS) must be refused on
-      // resume and overwritten by the retried batch
-      io.write(keyed(b2), "spprl_blocks_b1")
-      val succ = new org.apache.hadoop.fs.Path(s"$root/spprl_blocks_b1/_SUCCESS")
-      succ.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(succ, false)
-      val (afterCrash, k2) = resumeState(spark, io, "spprl")
-      assert(k2 == 1 && afterCrash.get.batchesSeen == 1, "half generation must not resume")
-      val st2 = updateDurable(spark, keyed(b2), io, cfg = Pprl.HlshConfig(purge = purge))
-      assert(st2.batchesSeen == 2)
-      assert(pairSet(pairs(st2)) == batchPairs(b1 ++ b2, purge))
-      assert(!pairSet(pairs(st2)).contains(("a", "b")),
+      // each batch runs as a fresh process would: nothing is carried
+      // between calls but the storage under `root`
+      val st = Seq(b1, b2).map(b => updateDurable(spark, keyed(b),
+        new graft.sources.ParquetTableIO(root), Pprl.HlshConfig(purge = purge))).last
+      assert(st.batchesSeen == 2)
+      assert(pairSet(pairs(st)) == batchPairs(b1 ++ b2, purge))
+      assert(!pairSet(pairs(st)).contains(("a", "b")),
         "purge crossing retracts across the restart boundary")
-      // the on-disk generation reads back complete and identical
-      val (fin, k3) = resumeState(spark, io, "spprl")
-      assert(k3 == 2 && pairSet(pairs(fin.get)) == pairSet(pairs(st2)))
-    }
-  }
-
-  test("durable GC keeps retain generations; resume survives pruned early generations") {
-    val purge = 4
-    withTempRoot("graft_spprl_gc") { root =>
-      val io = new graft.sources.ParquetTableIO(root)
-      val b1 = Seq("k" -> "a", "k" -> "b")
-      val b2 = Seq("q" -> "x", "q" -> "y")
-      val b3 = Seq("q" -> "z", "k" -> "c")
-      updateDurable(spark, keyed(b1), io, cfg = Pprl.HlshConfig(purge = purge))
-      updateDurable(spark, keyed(b2), io, cfg = Pprl.HlshConfig(purge = purge))
-      val st3 = updateDurable(spark, keyed(b3), io,
-        cfg = Pprl.HlshConfig(purge = purge), retain = 1)
-      assert(st3.batchesSeen == 3)
-      // retain = 1 at generation 2 pruned generations <= 1 — storage is
-      // O(retain), and the listing-based resume still lands on the latest
-      // complete generation instead of restarting from empty past the hole
-      assert(!io.exists(spark, "spprl_blocks_b0") &&
-        !io.exists(spark, "spprl_blocks_b1"), "old generations must be GC'd")
-      val (fin, k) = resumeState(spark, io, "spprl")
-      assert(k == 3 && fin.get.batchesSeen == 3,
-        "resume must survive pruned early generations")
-      assert(pairSet(pairs(fin.get)) == batchPairs(b1 ++ b2 ++ b3, purge))
     }
   }
 
@@ -138,26 +101,20 @@ class StreamingPprlSpec extends AnyFunSuite {
     val purge = 4
     withTempRoot("graft_spprl_orph") { root =>
       val io = new graft.sources.ParquetTableIO(root)
-      updateDurable(spark, keyed(Seq("k" -> "a", "k" -> "b")), io,
-        cfg = Pprl.HlshConfig(purge = purge))
+      val batches = Seq(Seq("k" -> "a", "k" -> "b"), Seq("q" -> "x", "q" -> "y"), Seq("q" -> "z"))
+      batches.take(2).foreach(b => updateDurable(spark, keyed(b), io, Pprl.HlshConfig(purge = purge)))
       // simulate a crashed delete: generation 0 loses its _SUCCESS but
-      // keeps data files — invisible to listTables, visible to the GC's
+      // keeps data files — invisible to resume, visible to the GC's
       // listTablesAll sweep
       val succ = new org.apache.hadoop.fs.Path(s"$root/spprl_blocks_b0/_SUCCESS")
       val fs = succ.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(succ, false)
-      updateDurable(spark, keyed(Seq("q" -> "x", "q" -> "y")), io,
-        cfg = Pprl.HlshConfig(purge = purge))
-      // resume refused the orphan, so batch 2 wrote generation 0 again? No:
-      // resumeState found nothing complete, wrote b0 fresh — the remnant
-      // was overwritten; fold a third batch with retain = 1 and assert the
-      // orphan-or-rewritten b0 is gone while the stream stays correct
-      val st = updateDurable(spark, keyed(Seq("q" -> "z")), io,
-        cfg = Pprl.HlshConfig(purge = purge), retain = 1)
+      assert(fs.delete(succ, false))
+      val st = updateDurable(spark, keyed(batches(2)), io, Pprl.HlshConfig(purge = purge))
       assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/spprl_blocks_b0")),
         "remnant generation must be reclaimed by the listTablesAll sweep")
-      assert(pairSet(pairs(st)) ==
-        batchPairs(Seq("q" -> "x", "q" -> "y", "q" -> "z"), purge))
+      // the remnant never took part in the resume: generation 1 did
+      assert(st.batchesSeen == 3)
+      assert(pairSet(pairs(st)) == batchPairs(batches.flatten, purge))
     }
   }
 

@@ -69,37 +69,19 @@ class StreamingTruthSpec extends AnyFunSuite {
     assert(trustMap(s3.trust) === trustMap(s2.trust))
   }
 
-  test("durable fold: kill-and-resume, half-written generations skipped, GC keeps retain, fold == batch") {
+  test("kill-and-resume: resumed fold == batch") {
     withTempRoot("graft_struth") { root =>
-      val io = new graft.sources.ParquetTableIO(root)
-      val b1 = Seq(("s1", "e1", "a"), ("s2", "e1", "b"), ("s2", "e2", "c"))
-      val b2 = Seq(("s3", "e1", "a"), ("s1", "e2", "c"))
-      val b3 = Seq(("s3", "e2", "d"), ("s1", "e3", "x"))
-      StreamingTruth.updateDurable(spark, toDf(b1), io)
-      StreamingTruth.updateDurable(spark, toDf(b2), io)
-      // "crash": a fresh resume must see exactly 2 complete generations
-      val (resumed, k) = StreamingTruth.resumeState(spark, io, "struth")
-      assert(k === 2 && resumed.get.batches === 2)
-      assert(resolvedSet(resumed.get.resolved) ===
-        resolvedSet(TruthDiscovery.resolve(toDf(b1 ++ b2))))
-      // a crash between the generation's writes leaves a HALF generation:
-      // the resume scan must refuse it and the retried batch overwrite it
-      io.write(toDf(b3), "struth_claims_b2")
-      val (afterCrash, k2) = StreamingTruth.resumeState(spark, io, "struth")
-      assert(k2 === 2 && afterCrash.get.batches === 2, "half generation must not resume")
-      val st3 = StreamingTruth.updateDurable(spark, toDf(b3), io, retain = 1)
-      assert(st3.batches === 3)
-      assert(resolvedSet(st3.resolved) ===
-        resolvedSet(TruthDiscovery.resolve(toDf(b1 ++ b2 ++ b3))))
-      // retain = 1 at generation 2 pruned generations <= 1 — and the
-      // directory-listing resume still lands on the latest complete
-      // generation instead of restarting from empty past the hole
-      assert(!io.exists(spark, "struth_claims_b0") &&
-        !io.exists(spark, "struth_claims_b1"), "old generations must be GC'd")
-      val (fin, k3) = StreamingTruth.resumeState(spark, io, "struth")
-      assert(k3 === 3 && fin.get.batches === 3,
-        "resume must survive pruned early generations")
-      assert(resolvedSet(fin.get.resolved) === resolvedSet(st3.resolved))
+      val batches = Seq(
+        Seq(("s1", "e1", "a"), ("s2", "e1", "b"), ("s2", "e2", "c")),
+        Seq(("s3", "e1", "a"), ("s1", "e2", "c")),
+        Seq(("s3", "e2", "d"), ("s1", "e3", "x")))
+      // each batch runs as a fresh process would: nothing is carried
+      // between calls but the storage under `root`
+      val last = batches.map(b =>
+        StreamingTruth.updateDurable(spark, toDf(b), new graft.sources.ParquetTableIO(root))).last
+      assert(last.batches === 3)
+      assert(resolvedSet(last.resolved) ===
+        resolvedSet(TruthDiscovery.resolve(toDf(batches.flatten))))
     }
   }
 
